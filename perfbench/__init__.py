@@ -1,0 +1,1 @@
+"""Seeded end-to-end benchmark of the engine; run ``python3 perfbench/run.py``."""
