@@ -11,9 +11,13 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -50,6 +54,36 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     same names the DuckDB oracle uses."""
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+
+
+def local_df(spark: SparkSession, rows: Sequence[Sequence],
+             schema: str) -> DataFrame:
+    """A small driver-side table (rule sets, literal fixtures, collected
+    results) as a JVM ``LocalRelation``. Every constant table in the
+    engine is built here; none goes through ``createDataFrame(list)``.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes pickled rows
+    and decodes them in Python workers (``Scan ExistingRDD`` over
+    ``applySchemaToPythonRDD``) on EVERY execution that reads the table:
+    a 45-row rules table costs one Python-worker task per
+    default-parallelism slot per write. An Arrow table typed by the Spark
+    schema ships to the JVM once and plans as a ``LocalTableScan``: no
+    Python runs at execution time, Catalyst sees the table's real size
+    (a join against it may now auto-broadcast; a ``LogicalRDD`` never
+    did), and the path does not depend on
+    ``spark.sql.execution.arrow.pyspark.enabled``.
+
+    ``schema`` is a DDL string; rows carry the values
+    ``createDataFrame(list)`` accepts for it. A naive ``datetime`` in a
+    ``timestamp`` column is read as wall-clock time in the session time
+    zone."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct, timestamp_utc=False)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)],
+        schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 # One pushdown-configured session clone per base session; weak keys so a

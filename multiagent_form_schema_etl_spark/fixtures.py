@@ -2,9 +2,9 @@
 
 The driver's oracle only pre-registers the 10 analytics tables, so
 document-pipeline queries (FIXTURES.md group A) build their input twice from
-the same Python literals: ``spark.createDataFrame(ROWS, SCHEMA)`` on the Spark
-side and an inline ``VALUES`` CTE (rendered by :func:`values_sql`) on the
-DuckDB side. Both renderings come from the single source of truth below, so
+the same Python literals: ``catalog.local_df(spark, ROWS, SCHEMA)`` (a JVM
+``LocalRelation``) on the Spark side and an inline ``VALUES`` CTE (rendered
+by :func:`values_sql`) on the DuckDB side. Both renderings come from the single source of truth below, so
 they cannot drift.
 """
 

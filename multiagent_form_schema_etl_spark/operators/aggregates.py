@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_df
 from ..functions.scalars import dec_avg, dec_sum
 from ..plans.registry import register
 
@@ -378,7 +378,7 @@ def a_weighted_percentile_exact(spark: SparkSession,
     cum = (vals.join(F.broadcast(boff), ["g", "bucket"])
            .withColumn("cw", F.col("offset") + F.sum("w").over(ww)))
     totals = li.groupBy("g").agg(F.sum("w").alias("total"))
-    qs = spark.createDataFrame([(p,) for p in _WP_QUANTILES], "pct long")
+    qs = local_df(spark, [(p,) for p in _WP_QUANTILES], "pct long")
     return (cum.join(totals, "g")
             .crossJoin(F.broadcast(qs))
             .filter(100 * F.col("cw") >= F.col("pct") * F.col("total"))

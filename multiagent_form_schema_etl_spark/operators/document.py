@@ -29,6 +29,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import local_df
 from ..fixtures import (
     BLOCK_COLS,
     BLOCK_ROWS,
@@ -57,27 +58,34 @@ _SCHEMA_META_SCHEMA = ("form_name string, field_name string, ftype string, "
                        "section string, required boolean, c_min double, "
                        "c_max double, c_pattern string, c_enum array<string>, "
                        "default_value string")
-_SCHEMA_META_ROWS = [
-    (r[0], r[1], r[2], r[3], r[4], r[8], r[9], r[10], r[11], r[12])
-    for r in SCHEMA_ROWS
-]
+
+
+def _meta_rows(schema_rows: list[tuple]) -> list[tuple]:
+    return [(r[0], r[1], r[2], r[3], r[4], r[8], r[9], r[10], r[11], r[12])
+            for r in schema_rows]
+
+
+_SCHEMA_META_ROWS = _meta_rows(SCHEMA_ROWS)
 _GT_SCHEMA = "doc_id long, field_name string, true_value string"
 
 
 def blocks_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BLOCK_ROWS, _BLOCK_SCHEMA)
+    return local_df(spark, BLOCK_ROWS, _BLOCK_SCHEMA)
 
 
 def doc_forms_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DOC_FORM_ROWS, "doc_id long, form_name string")
+    return local_df(spark, DOC_FORM_ROWS, "doc_id long, form_name string")
 
 
-def schema_meta_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_SCHEMA_META_ROWS, _SCHEMA_META_SCHEMA)
+def schema_meta_df(spark: SparkSession,
+                   schema_rows: list[tuple] | None = None) -> DataFrame:
+    rows = (_SCHEMA_META_ROWS if schema_rows is None
+            else _meta_rows(schema_rows))
+    return local_df(spark, rows, _SCHEMA_META_SCHEMA)
 
 
 def ground_truth_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GROUND_TRUTH_ROWS, _GT_SCHEMA)
+    return local_df(spark, GROUND_TRUTH_ROWS, _GT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -267,13 +275,17 @@ def _sql_over_view(df: DataFrame, tag: str, sql_template: str) -> DataFrame:
     MUST run on ``df.sparkSession`` -- inside foreachBatch the microbatch
     DataFrame lives in a cloned session with its own temp-view registry,
     and a view registered there is invisible to the outer session."""
+    spark = df.sparkSession
     name = f"__gen_{tag}_{next(_VIEW_SEQ)}"
     df.createOrReplaceTempView(name)
-    out = df.sparkSession.sql(sql_template.replace("__VIEW__", name))
+    out = spark.sql(sql_template.replace("__VIEW__", name))
     # spark.sql analyzed eagerly (classic mode), so the catalog entry is
     # no longer needed -- drop it or per-microbatch/direct callers leak
-    # one pinned analyzed plan per call for the session's lifetime
-    df.sparkSession.catalog.dropTempView(name)
+    # one pinned analyzed plan per call for the session's lifetime. Drop
+    # through the session catalog: the public catalog.dropTempView also
+    # UNCACHES the view's plan, i.e. it evicts ``df``'s own cache entry
+    # when ``df`` is persisted, and every read of ``out`` then recomputes.
+    spark._jsparkSession.sessionState().catalog().dropTempView(name)
     return out
 
 
@@ -294,8 +306,8 @@ def extraction_df(spark: SparkSession, blocks: DataFrame | None = None,
     generated-projection strategy (extraction_df_hoisted) in pytest and by
     the shared oracles of every downstream doc_* query."""
     ft = fulltext_df(spark, blocks, doc_forms)
-    cand = spark.createDataFrame(
-        _cascade_rule_rows(schema_rows, first_wins=False), _RULES_SCHEMA)
+    cand = local_df(spark, _cascade_rule_rows(schema_rows, first_wins=False),
+                    _RULES_SCHEMA)
     j = ft.join(F.broadcast(cand), "form_name")
     return _cascade_winner(j, "full_text")
 
@@ -316,15 +328,10 @@ def extraction_df_hoisted(spark: SparkSession, blocks: DataFrame | None = None,
     if len(forms) > 1:
         # The per-form filter below pushes into the broadcast doc_forms side
         # but cannot prune the per-doc full-text concat agg, so without
-        # sharing, that agg re-runs once PER FORM. r15 fix: the r14 persist
-        # here was DEAD -- temp-view re-analysis inside _sql_over_view
-        # breaks CacheManager sameResult matching, so every union branch
-        # silently recomputed the agg (measured: 3 ObjectHashAggregate
-        # fulltext subtrees in the executed plan, zero InMemoryTableScan).
-        # localCheckpoint materializes the per-doc relation to a LogicalRDD
-        # leaf whose identity survives the view re-analysis; all branches
-        # read that one materialization.
-        ft = ft.localCheckpoint()
+        # sharing, that agg re-runs once PER FORM; every union branch reads
+        # the one persisted relation instead (an InMemoryTableScan per
+        # branch -- _sql_over_view keeps the cache entry alive).
+        ft = track_persist(ft)
     parts = []
     for form in forms:
         # Three small projections instead of one giant stack expression:
@@ -406,12 +413,7 @@ def validated_df(spark: SparkSession, blocks: DataFrame | None = None,
     pass a persisted (stage-materialized) EAV relation."""
     e = (extraction if extraction is not None
          else extraction_df(spark, blocks, doc_forms, schema_rows))
-    if schema_rows is None:
-        s = schema_meta_df(spark)
-    else:
-        s = spark.createDataFrame(
-            [(r[0], r[1], r[2], r[3], r[4], r[8], r[9], r[10], r[11], r[12])
-             for r in schema_rows], _SCHEMA_META_SCHEMA)
+    s = schema_meta_df(spark, schema_rows)
     j = e.join(F.broadcast(s), ["form_name", "field_name"])
     # one selectExpr instead of a 7-deep withColumn chain: every chained
     # transformation re-analyzes the whole growing plan (r15, the
@@ -1012,12 +1014,7 @@ def scoped_cascade_values(scoped: DataFrame,
     semantics (every doc carries exactly one form, so form-branching
     partitions rows disjointly)."""
     if share_input:
-        # r15: localCheckpoint, not persist -- the _sql_over_view temp-view
-        # re-analysis breaks cache sameResult matching, so the r14 persist
-        # never hit and each union branch recomputed the sessionization
-        # (see extraction_df_hoisted). The LogicalRDD leaf survives view
-        # re-analysis; every branch reads the one materialization.
-        scoped = scoped.localCheckpoint()
+        scoped = track_persist(scoped)
     first_def: dict[str, tuple] = {}
     for r in SCHEMA_ROWS:
         first_def.setdefault(r[1], r)
@@ -1121,9 +1118,8 @@ def scoped_cascade_values_rules(scoped: DataFrame,
     shape 2, 'n/a'/empty fall through) and keyword rows decide across rows
     on first non-NULL PARSED value; patterns always beat keywords."""
     spark = scoped.sparkSession
-    cand = spark.createDataFrame(
-        _cascade_rule_rows(schema_rows, first_wins=True), _RULES_SCHEMA
-    ).drop("form_name")
+    cand = local_df(spark, _cascade_rule_rows(schema_rows, first_wins=True),
+                    _RULES_SCHEMA).drop("form_name")
     j = scoped.join(F.broadcast(cand), "field_name", "left")
     return _cascade_winner(j, "context").drop("method")
 
@@ -1161,14 +1157,16 @@ def _cascade_winner(j: DataFrame, text_col: str) -> DataFrame:
     keyword fallback produced the value, else NULL).
 
     r15 note (negative result, kept for the record): a one-statement SQL
-    twin of this function was built and REVERTED twice over. The temp-view
-    spark.sql route breaks CacheManager sameResult matching (the persisted
-    scoped relation silently stopped cache-hitting and the sessionization
-    recomputed per action), and the selectExpr-with-generated-strings
-    route PARSED SLOWER than this Column builder (interleaved A/B: u7
-    build 0.94-0.99 s old vs 1.70-2.02 s with the ~30 KB generated
-    parse_value CASE strings -- textual duplication of the capture
-    expression beats py4j chatter only when the strings stay small)."""
+    twin of this function was built and REVERTED twice over. Through the
+    temp-view spark.sql route the persisted scoped relation silently
+    stopped cache-hitting and the sessionization recomputed per action
+    (root cause, found later: the public dropTempView in _sql_over_view
+    uncached the view's plan -- fixed there), and the
+    selectExpr-with-generated-strings route PARSED SLOWER than this
+    Column builder (interleaved A/B: u7 build 0.94-0.99 s old vs
+    1.70-2.02 s with the ~30 KB generated parse_value CASE strings --
+    textual duplication of the capture expression beats py4j chatter only
+    when the strings stay small)."""
     cap1 = F.expr(f"regexp_extract({text_col}, rx1, 1)")
     cap2 = F.expr(f"regexp_extract({text_col}, rx2, 1)")
     pcap = F.when(cap1 != "", cap1)

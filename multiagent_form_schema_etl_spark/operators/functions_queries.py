@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_df
 from ..fixtures import SCALAR_COLS, SCALAR_ROWS, values_sql
 from ..functions.scalars import (
     dec_avg,
@@ -28,7 +28,7 @@ _V = values_sql(SCALAR_ROWS, SCALAR_COLS)
 
 
 def _scalar_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SCALAR_ROWS, _SCALAR_SCHEMA)
+    return local_df(spark, SCALAR_ROWS, _SCALAR_SCHEMA)
 
 
 _MONTHS_RE = ("(?:January|February|March|April|May|June|July|August|September"

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_df
 from ..fixtures import values_sql
 from ..plans.registry import register
 
@@ -88,7 +88,7 @@ def j2_containment_theta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.scalars import dec_sum
 
     part = load_table(spark, sf_dir, "part")
-    kws = spark.createDataFrame(_KW_ROWS, "kw string")
+    kws = local_df(spark, _KW_ROWS, "kw string")
     return (
         part.join(F.broadcast(kws), F.instr(F.lower(part.p_type), kws.kw) > 0)
         .groupBy("kw")

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_df
 from ..fixtures import values_sql
 from ..plans.registry import register, track_persist
 from . import sqlgen as G
@@ -1188,8 +1188,9 @@ def x5_bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbouring pair sites intact ('l l l' merges to 'll l', not 'l ll').
     """
     merges = _learn_bpe_merges(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, schema="rnd BIGINT, lft STRING, rgt STRING, pair_count BIGINT")
+    return local_df(
+        spark, merges,
+        schema="rnd BIGINT, lft STRING, rgt STRING, pair_count BIGINT")
 
 
 def _apply_merge(syms: F.Column, lft: str, rgt: str) -> F.Column:
@@ -1850,4 +1851,4 @@ def x5_drift_psi_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(("EMPTY_STORE", "no streamed count rows"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "violation string, detail string")
+    return local_df(spark, rows, "violation string, detail string")

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_df
 from ..plans.registry import register
 
 
@@ -299,7 +299,7 @@ def x3_metadata_prune_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "metadata rollup empty on a non-empty corpus"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "violation string, detail string")
+    return local_df(spark, rows, "violation string, detail string")
 
 
 # ---------------------------------------------------------------------------
@@ -394,10 +394,11 @@ def x3_payload_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH engines, multi-byte utf-8 verified identical) exists only so
     DuckDB shingles the same byte string Spark does.
 
-    r15: the shingle+minhash+band candidate stage is split into
-    `_pnd_candidates` (identical lineage, shared code path) so the
-    candidate-volume probe (tools/probe_payload_neardup.py, VERDICT r14
-    item 8) can measure it in isolation."""
+    The shingle+minhash+band candidate stage is split into
+    `_pnd_candidates` (identical lineage, shared code path) so its
+    candidate volume can be measured in isolation; the measured volumes
+    and the decision to keep this verify shape are recorded in
+    OPTIMIZATION_r15.md, "x3_payload_neardup -- candidate-volume probe"."""
     d, cand = _pnd_candidates(spark, sf_dir)
     return _pnd_verify(d, cand)
 

@@ -21,7 +21,7 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution needs
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import gated_broadcast, load_table, table_rowcount
+from ..catalog import gated_broadcast, load_table, local_df, table_rowcount
 from ..plans.registry import register, track_persist
 
 _N_QUERIES = 10  # bounded query set for the exact-oracle variant
@@ -1069,8 +1069,8 @@ def _ivf_topk_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = emb.join(cells, "vec_id").select("vec_id", "vec", "cell")
 
     # centroid table (tiny, broadcast) for query-side probe selection
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(C)],
+    centroids = local_df(
+        spark, [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "cell int, centroid array<double>")
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
@@ -1339,8 +1339,8 @@ def x2_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id bigint, match_id bigint, approx_dist double, "
         "mv array<double>")
 
-    q = spark.createDataFrame(
-        [(int(vid), list(vec)) for vid, vec, _ in queries],
+    q = local_df(
+        spark, [(int(vid), list(vec)) for vid, vec, _ in queries],
         "query_id bigint, qv array<double>")
 
     wa = Window.partitionBy("query_id").orderBy(F.asc("approx_dist"),
@@ -1510,8 +1510,8 @@ def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str,
     picked = [(0, int(seed["vec_id"]), None)]
     state = emb.withColumn("min_dist", F.lit(None).cast("double"))
     for rank in range(1, k):
-        center = spark.createDataFrame(
-            [(picked[-1][1],)], "cid bigint").join(
+        center = local_df(
+            spark, [(picked[-1][1],)], "cid bigint").join(
             emb.select(F.col("vec_id").alias("cid"),
                        F.col("vecn").alias("cv")), "cid")
         # cosine distance to the newest center folded into the running min
@@ -1527,14 +1527,14 @@ def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str,
         # k-row DataFrame (VERDICT r5: a growing isin() literal rebuilds
         # an O(k)-term expression tree into every round's plan; the
         # anti-join keeps the plan size constant as k grows)
-        picked_df = spark.createDataFrame(
-            [(p[1],) for p in picked], "vec_id bigint")
+        picked_df = local_df(
+            spark, [(p[1],) for p in picked], "vec_id bigint")
         [far] = (state.join(F.broadcast(picked_df), "vec_id", "left_anti")
                  .orderBy(F.desc("min_dist"), F.asc("vec_id"))
                  .limit(1).collect())
         picked.append((rank, int(far["vec_id"]), float(far["min_dist"])))
-    return spark.createDataFrame(
-        picked, "rank int, vec_id bigint, min_dist double")
+    return local_df(
+        spark, picked, "rank int, vec_id bigint, min_dist double")
 
 
 @register("x2_coreset_kcenter")  # iterative FP selection => rows-only
@@ -1591,8 +1591,8 @@ def x2_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_dist",
             F.least(F.coalesce("min_dist", F.lit(float("inf"))), *dists))
             .localCheckpoint())  # truncate the per-pass lineage
-        picked_df = spark.createDataFrame(
-            [(p[1],) for p in picked], "vec_id bigint")
+        picked_df = local_df(
+            spark, [(p[1],) for p in picked], "vec_id bigint")
         cands = (state.join(F.broadcast(picked_df), "vec_id", "left_anti")
                  .orderBy(F.desc("min_dist"), F.asc("vec_id"))
                  .limit(4 * b).collect())
@@ -1611,8 +1611,8 @@ def x2_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             picked.append((len(picked), int(c["vec_id"]),
                            float(c["min_dist"])))
         new_centers = [list(c["vecn"]) for c in batch]
-    return spark.createDataFrame(
-        picked, "rank int, vec_id bigint, min_dist double")
+    return local_df(
+        spark, picked, "rank int, vec_id bigint, min_dist double")
 
 
 @register(
@@ -1678,8 +1678,9 @@ def x2_coreset_radius_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(("WRONG_K", float(nb), float(ng)))
     if rb is not None and rg is not None and rb > 2.0 * rg + 1e-9:
         rows.append(("RADIUS_BOUND_EXCEEDED", rb, rg))
-    return spark.createDataFrame(
-        rows, "violation string, radius_batched double, radius_greedy double")
+    return local_df(
+        spark, rows,
+        "violation string, radius_batched double, radius_greedy double")
 
 
 # ---------------------------------------------------------------------------
@@ -1937,15 +1938,15 @@ def x2_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     query_ids = [int(r["query_id"]) for r in q.select("query_id").collect()]
     if not query_ids:
-        return spark.createDataFrame(
-            [], "query_id long, match_id long, cosine double, rnk long")
+        return local_df(
+            spark, [], "query_id long, match_id long, cosine double, rnk long")
 
     beams: dict[int, list[tuple[float, int]]] = {qi: [] for qi in query_ids}
     # visited lives EXECUTOR-SIDE (r14): each hop's new candidates are
     # localCheckpointed (they're consumed twice -- scored, and unioned
     # into vis), so vis is a union of materialized relations and every
     # anti-join reads executor state instead of a driver re-ship
-    vis = spark.createDataFrame([], "query_id long, vec_id long")
+    vis = local_df(spark, [], "query_id long, vec_id long")
 
     def merge(qi: int, entries: list[tuple[float, int]]) -> bool:
         """Insert into qi's beam, keep top-ef by (score desc, id asc);
@@ -1962,8 +1963,8 @@ def x2_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed the level-0 phase). Mutates beams/vis in place."""
         nonlocal vis
         if entry:
-            sdf = spark.createDataFrame(
-                [(qi, h) for qi in query_ids for h in entry],
+            sdf = local_df(
+                spark, [(qi, h) for qi in query_ids for h in entry],
                 "query_id long, vec_id long")
             seeds = (sdf.join(vis, ["query_id", "vec_id"], "left_anti")
                      .localCheckpoint())
@@ -1980,7 +1981,7 @@ def x2_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             for qi, nid in frontier:
                 expanded[qi].add(nid)
-            fdf = spark.createDataFrame(frontier, "query_id long, src long")
+            fdf = local_df(spark, frontier, "query_id long, src long")
             cand = (fdf.join(adj, "src")
                     .select("query_id", F.col("dst").alias("vec_id"))
                     .distinct())
@@ -2025,9 +2026,9 @@ def x2_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = [(qi, nid) for qi in query_ids
              for _s, nid in beams[qi] if nid != qi]
     if not pairs:
-        return spark.createDataFrame(
-            [], "query_id long, match_id long, cosine double, rnk long")
-    pdf = spark.createDataFrame(pairs, "query_id long, match_id long")
+        return local_df(
+            spark, [], "query_id long, match_id long, cosine double, rnk long")
+    pdf = local_df(spark, pairs, "query_id long, match_id long")
     # final ranking recomputes the ROUNDED cosine on the raw vectors in
     # one engine pass -- the IVF/PQ faces' emission contract, so ranks
     # and values are directly comparable across the whole ANN family
@@ -2111,7 +2112,7 @@ def x2_ann_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         if rmean < _GRAPH_RECALL_MEAN_FLOOR:
             rows.append(("RECALL_MEAN_BELOW_FLOOR", round(rmean, 6),
                          len(eq)))
-    return spark.createDataFrame(rows, out_schema)
+    return local_df(spark, rows, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2591,7 +2592,7 @@ def x2_ann_lsh_index_incremental(spark: SparkSession, sf_dir: str
             rows.append(("EMPTY_INDEX", "incremental store is empty"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "violation string, detail string")
+    return local_df(spark, rows, "violation string, detail string")
 
 
 # --- Embedding-centroid drift (the vector-modality companion of the

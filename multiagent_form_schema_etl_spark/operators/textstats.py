@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, table_rowcount
+from ..catalog import load_table, local_df, table_rowcount
 from ..fixtures import values_sql
 from ..plans.registry import register, track_persist
 
@@ -439,7 +439,8 @@ def x4_lang_id_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(sequence(1, length(text) - 2), i -> substring(text, i, 3))"))
         .alias("g"))
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    profiles = spark.createDataFrame(_TRIGRAM_ROWS, "profile_lang string, trigram string")
+    profiles = local_df(spark, _TRIGRAM_ROWS,
+                        "profile_lang string, trigram string")
     hits = (grams.join(F.broadcast(profiles), grams.g == profiles.trigram)
             .groupBy("doc_id", "profile_lang")
             .agg(F.count(F.lit(1)).alias("n_hits")))
@@ -505,8 +506,8 @@ def x4_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             r["exact_count"] <= sketch.estimateCount(r["token"])
             <= r["exact_count"] + slack)
            for r in top_rows]
-    return spark.createDataFrame(
-        out, "token string, exact_count long, cms_in_band boolean")
+    return local_df(
+        spark, out, "token string, exact_count long, cms_in_band boolean")
 
 
 def _bucket_prefix_rank(sig: DataFrame, bucket: str, order, out: str,
@@ -525,7 +526,7 @@ def _bucket_prefix_rank(sig: DataFrame, bucket: str, order, out: str,
     for r in counts:
         offs.append((r[bucket], acc))
         acc += r["count"]
-    off_df = spark.createDataFrame(offs, f"{bucket} int, _off_{out} long")
+    off_df = local_df(spark, offs, f"{bucket} int, _off_{out} long")
     ww = Window.partitionBy(bucket).orderBy(*order)
     return (sig.join(F.broadcast(off_df), bucket)
             .withColumn(out, F.col(f"_off_{out}") + F.row_number().over(ww))
@@ -929,8 +930,8 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (tok_q.groupBy("doc_id", "token")
           .agg(F.count(F.lit(1)).cast("double").alias("tf")))
     df = tf.groupBy("token").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    q = spark.createDataFrame(
-        [(i, t) for i, qs in _BM25_QUERIES for t in qs.split(" ")],
+    q = local_df(
+        spark, [(i, t) for i, qs in _BM25_QUERIES for t in qs.split(" ")],
         "query_id int, term string")
     hits = (F.broadcast(q)
             .join(tf, tf.token == F.col("term"))
@@ -1305,8 +1306,8 @@ def x4_quality_classifier_invariant(spark: SparkSession,
                          float(r["mu_hi"]), float(r["mu_lo"])))
     if r["n_oob"]:
         rows.append(("PROB_OUT_OF_RANGE", float(r["n_oob"]), 0.0))
-    return spark.createDataFrame(
-        rows, "violation string, metric_good double, metric_bad double")
+    return local_df(
+        spark, rows, "violation string, metric_good double, metric_bad double")
 
 
 # --- Zipf / Heaps corpus diagnostics (r12) ------------------------------------

@@ -138,6 +138,31 @@ def test_registry_eviction_releases_tracked_subrelation_caches(spark, tmp_path):
     assert after <= base, (base, during, after)
 
 
+def test_sql_over_view_keeps_persisted_input_cached(spark):
+    """_sql_over_view drops its temp view without uncaching the view's
+    plan: a persisted input is still cached afterwards, and the generated
+    statement reads it through an InMemoryTableScan."""
+    from pyspark.sql import functions as F
+
+    from multiagent_form_schema_etl_spark.operators import document as D
+
+    df = spark.range(100).withColumn("b", F.col("id") % 7).persist()
+    try:
+        out = D._sql_over_view(
+            df, "cachecheck",
+            "SELECT b, count(*) AS n FROM __VIEW__ GROUP BY b UNION ALL "
+            "SELECT b, sum(id) AS n FROM __VIEW__ GROUP BY b")
+        assert df.storageLevel.useMemory or df.storageLevel.useDisk
+        assert not [t for t in spark.catalog.listTables()
+                    if t.name.startswith("__gen_cachecheck")]
+        assert len(out.collect()) == 14
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("InMemoryTableScan") == 2, plan
+    finally:
+        df.unpersist()
+
+
 def test_rotation_ledger_orders_window_and_tail_stalest_first():
     """VERDICT r9 item 2 / r11 item 3: the driver-checked window (first
     50) must carry every never-driver-green face (the new r12 faces, the

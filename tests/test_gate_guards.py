@@ -1,6 +1,7 @@
 """The r9 gate hardening pinned in CI: the plan-regression guard
-(CartesianProduct / Python-eval / unpartitioned-Window assertions in
-tools/check.py) and the rounded-oracle boundary audit's distance math.
+(CartesianProduct / Python-eval / Python-RDD scan / unpartitioned-Window
+assertions in tools/check.py) and the rounded-oracle boundary audit's
+distance math.
 The window-shape behaviors were verified against live Spark 4.1 plans
 when the detector was fixed (formatted explain OMITS empty groups, so
 the original '], [], [' heuristic was dead code); these tests keep that
@@ -70,6 +71,27 @@ def test_plan_guard_flags_each_regression_kind(spark):
     py = df.select("id").mapInPandas(ident, "id long")
     assert any("Python-eval" in p for p in plan_guard("rogue_query", py))
     assert plan_guard("x2_cosine_topk_gemm", py) == []  # allowlisted
+
+
+def test_plan_guard_flags_python_rdd_scan_leaf(spark, monkeypatch):
+    """A constant table built with createDataFrame(<list>) plans as a
+    `Scan ExistingRDD` over applySchemaToPythonRDD -- Python workers run on
+    every execution that reads it. Python-eval node counting misses it, so
+    the guard flags the leaf itself; catalog.local_df plans clean."""
+    import tools.check as check
+    from multiagent_form_schema_etl_spark.catalog import local_df
+
+    rows = [(i, f"k{i}") for i in range(45)]
+    facts = spark.range(1000).withColumn("k", F.concat(F.lit("k"),
+                                                       F.col("id") % 45))
+    offender = facts.join(spark.createDataFrame(rows, "v long, k string"),
+                          "k")
+    assert any("Python-RDD scan" in p
+               for p in plan_guard("rogue_query", offender))
+    clean = facts.join(local_df(spark, rows, "v long, k string"), "k")
+    assert plan_guard("rogue_query", clean) == []
+    monkeypatch.setattr(check, "_PYRDD_ALLOW", frozenset({"rogue_query"}))
+    assert plan_guard("rogue_query", offender) == []
 
 
 def test_boundary_distance_math():

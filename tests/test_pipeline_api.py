@@ -70,3 +70,20 @@ def test_pipeline_on_fresh_input_with_json_schemas(spark):
         "doc_id long, field_name string, true_value string")
     m = pipe.metrics(pipe.score(out["forms"], gt)).collect()[0]
     assert m["recall"] == 1.0  # every truth field predicted
+
+
+def test_pipeline_stages_read_no_python_rdd(spark):
+    """Every constant table a stage reads (candidates, schema meta, the
+    fixture inputs) is a LocalRelation: no optimized plan of run/recover/
+    score/metrics has an ExistingRDD leaf, so no write starts
+    Python-worker tasks to decode rule rows."""
+    pipe = DocumentPipeline(spark, SCHEMA_ROWS)
+    blocks, forms = D.blocks_df(spark), D.doc_forms_df(spark)
+    stages = dict(pipe.run(blocks, forms))
+    stages["recover"] = pipe.recover(blocks, forms)
+    stages["score"] = pipe.score(stages["recover"], D.ground_truth_df(spark))
+    stages["metrics"] = pipe.metrics(stages["score"])
+    for name, df in stages.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, name
+        assert "LocalRelation" in plan, name

@@ -369,11 +369,12 @@ def boundary_audit(con, faces: list[str]) -> list[str]:
 # ---------------------------------------------------------------------------
 # Plan-regression guard (VERDICT r8 item 7): PLANS.md is regenerated each
 # round but nothing FAILED if a plan regressed. Every checked query's
-# physical plan is asserted here: CartesianProduct and Python-eval nodes may
-# appear ONLY on the committed allowlist, and no Window may run with an
-# empty partition spec on anything but the allowlisted dimension-sized
-# relations (an unpartitioned window over a fact relation is the
-# single-executor bottleneck the rrf rewrite removed in r8).
+# physical plan is asserted here: CartesianProduct, Python-eval nodes and
+# Python-RDD scan leaves may appear ONLY on the committed allowlist, and
+# no Window may run with an empty partition spec on anything but the
+# allowlisted dimension-sized relations (an unpartitioned window over a
+# fact relation is the single-executor bottleneck the rrf rewrite removed
+# in r8).
 _CART_ALLOW: frozenset[str] = frozenset()  # intentional tiny cross joins
 #   plan as BroadcastNestedLoopJoin, never CartesianProduct -- keep empty
 _PYUDF_ALLOW: frozenset[str] = frozenset({
@@ -399,6 +400,11 @@ _PYUDF_ALLOW: frozenset[str] = frozenset({
     # sees only the bounded |Q|*pool candidate/pair rows
     "x2_topk_mmr",
 })
+# Faces allowed to read a constant table decoded by Python workers at
+# execution time (`Scan ExistingRDD` over applySchemaToPythonRDD, i.e.
+# spark.createDataFrame(<list>)). Constant tables go through
+# catalog.local_df (a LocalRelation) -- keep empty.
+_PYRDD_ALLOW: frozenset[str] = frozenset()
 _UNPART_WINDOW_ALLOW: frozenset[str] = frozenset({
     # the repo's TWO deliberate unpartitioned windows, each with a
     # docstring-stated size bound: the dimension-sized ntile
@@ -467,7 +473,7 @@ def plan_guard(name: str, sdf) -> list[str]:
         # unguarded, not silently skip the regression checks
         print(f"     WARNING {name}: plan_guard could not explain the "
               f"plan ({type(ex).__name__}: {ex}); Cartesian/Python-eval/"
-              "Window regression checks skipped for this face")
+              "Python-RDD/Window regression checks skipped for this face")
         return []
     plan = buf.getvalue()
     problems = []
@@ -478,6 +484,10 @@ def plan_guard(name: str, sdf) -> list[str]:
              + plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas"))
     if pyudf and name not in _PYUDF_ALLOW:
         problems.append(f"plan regression: {pyudf} Python-eval node(s) "
+                        "off the declared allowlist")
+    pyrdd = len(re.findall(r"Arguments: [^\n]*applySchemaToPythonRDD", plan))
+    if pyrdd and name not in _PYRDD_ALLOW:
+        problems.append(f"plan regression: {pyrdd} Python-RDD scan leaf(s) "
                         "off the declared allowlist")
     unp = _unpartitioned_windows(plan)
     if unp and name not in _UNPART_WINDOW_ALLOW:
