@@ -150,12 +150,32 @@ def run_pass() -> dict:
         assert len(rows) >= 0
         return round(time.perf_counter() - t0, 3)
 
+    # janino compile count and ns (process-wide counters, also bumped by
+    # the per-task compiles of whole-stage codegen)
+    jvm = spark._jvm
+    cg_hist = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME())
+    cg = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def codegen_counters() -> tuple[int, int]:
+        return cg_hist.getCount(), cg.compileTime()
+
+    def codegen_delta(a: tuple[int, int], b: tuple[int, int]) -> dict:
+        return {"compile_count": b[0] - a[0],
+                "compile_ms": round((b[1] - a[1]) / 1e6, 1)}
+
     # Cold pass (includes each query's one-time Catalyst analysis + codegen
     # compile -- the headline, comparable across rounds), then a warm pass
     # isolating steady-state execution: at scale the compile constant
     # amortizes to zero, so warm times are the per-round throughput signal.
+    # The warm pass compiles ~nothing while the codegen cache holds the
+    # headliners' working set (session.CODEGEN_CACHE_ENTRIES).
+    c0 = codegen_counters()
     times = {name: run_once(name) for name in names}
+    c1 = codegen_counters()
     warm = {name: run_once(name) for name in names}
+    c2 = codegen_counters()
+    codegen = {"cold": codegen_delta(c0, c1), "warm": codegen_delta(c1, c2)}
     # Methodology bridge (r2 -> r3 honesty): the r4+ hash-reduce timing
     # flatters large-result queries vs r1's collect()-based numbers; carry
     # the old methodology for the two affected headliners so r1->rN trends
@@ -172,6 +192,7 @@ def run_pass() -> dict:
         "queries_warm": warm,
         "warm_total": round(sum(warm.values()), 3),
         "queries_collect_method": collect_times,
+        "codegen": codegen,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # Scaling-probe evidence (VERDICT r14 item 2): the record itself
         # proves which core count the session ACTUALLY ran with -- the
@@ -282,7 +303,8 @@ def build_records(runs: list[dict]) -> tuple[dict, str]:
                   "queries": r["queries"], "queries_warm": r["queries_warm"],
                   "loadavg_before": r.get("loadavg_before", []),
                   "loadavg_after": r.get("loadavg_after", []),
-                  "steal_pct": r.get("steal_pct")}
+                  "steal_pct": r.get("steal_pct"),
+                  "codegen": r.get("codegen")}
                  for r in runs],
         "sf": runs[0]["sf"],
     }

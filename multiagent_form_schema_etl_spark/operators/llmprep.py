@@ -187,9 +187,8 @@ def x5_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle it replaces.
 
     Contested in r14 (driver cold read -11%); settled by the r15
-    interleaved old/new probe (tools/ab_contested.py, committed in
-    OPTIMIZATION_r15.md): new <= old at sf0.1 on min AND median in a
-    clean window (0.91/0.97 vs 0.93/0.99, steal 0.08%), and flat on the
+    interleaved old/new probe (OPTIMIZATION_r15.md, "VERDICT r14 item 1"):
+    new <= old at sf0.1 on min AND median in a clean window (0.91/0.97 vs 0.93/0.99, steal 0.08%), and flat on the
     10x corpus (2.87/3.48 vs 2.89/3.42, steal 0.14%) -- the r14 driver
     regression reading was noise; the shape is kept on the plan
     evidence (one pre-dedup gram exchange vs three post-dedup ones)."""
@@ -602,8 +601,8 @@ def x5_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Contested in r14 (driver cold read -14% while the builder's A/B said
     faster); settled by the r15 interleaved old/new probe
-    (tools/ab_contested.py, committed in OPTIMIZATION_r15.md): at sf0.1 the
-    shapes are within noise of each other (old 0.73 vs new 0.80 med,
+    (OPTIMIZATION_r15.md, "VERDICT r14 item 1"): at sf0.1 the shapes are
+    within noise of each other (old 0.73 vs new 0.80 med,
     steal 0.22%) because the single-file fixture scan serializes the
     per-row kernel on ONE task, and on the 10x corpus (32 part files, real
     scan parallelism) the kernel wins 2x (old 1.29/2.04 min/med vs new

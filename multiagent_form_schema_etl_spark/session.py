@@ -8,6 +8,16 @@ Design notes for 100 TB posture:
   and are cluster-invariant.
 - shuffle.partitions is only the *initial* value; AQE coalesces down. On a real
   cluster this would be set ~2-3x total cores by the submitter.
+- Generated-code cache sized to the working set: Spark keeps compiled
+  janino classes in an LRU of ``spark.sql.codegen.cache.maxEntries``
+  (default 100), but one doc pipeline + evaluate batch needs 109 distinct
+  classes and one corpus filter/dedup/decontaminate batch 215-219, so LRU
+  evicted every class before its next use and each steady batch
+  recompiled all of them -- once in the Spark driver and again in every
+  task. ``CODEGEN_CACHE_ENTRIES`` holds several such working sets. It is
+  a static conf: a session passed in by the caller (``tune_for_session``,
+  ``__spark_entry__.entry``) keeps Spark's 100-entry default, because it
+  cannot be changed once the JVM runs.
 """
 
 from __future__ import annotations
@@ -17,6 +27,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Compiled-class cache capacity. Measured distinct classes per batch:
+# doc pipeline + evaluate 109, corpus_prep's four faces 215-219, one
+# bench.py cold pass over its 26 headliners 450-452 (its warm pass then
+# compiles 0-2). 2000 holds any of these working sets with room to spare.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(app_name: str = "multiagent-form-schema-etl-spark",
@@ -58,6 +74,7 @@ def get_spark(app_name: str = "multiagent-form-schema-etl-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")

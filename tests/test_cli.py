@@ -84,6 +84,8 @@ def test_bench_compact_line_stays_under_tail_budget():
         "queries_collect_method": {"w1_running_revenue_per_customer": 2.5,
                                    "st_session_window": 0.9},
         "master": "local[32]", "parallelism": 32,
+        "codegen": {"cold": {"compile_count": 600, "compile_ms": 9000.0},
+                    "warm": {"compile_count": 0, "compile_ms": 0.0}},
     }
     run_loaded = dict(run, value=92.15,
                       loadavg_before=[7.01, 5.5, 3.2],
@@ -109,6 +111,9 @@ def test_bench_compact_line_stays_under_tail_budget():
     assert full["runs"][2]["loadavg_before"] == [7.01, 5.5, 3.2]
     assert full["runs"][0]["loadavg_before"] == []  # tolerated when absent
     assert full["runs"][0]["steal_pct"] is None
+    # per-pass codegen counts live in the side record only
+    assert full["runs"][0]["codegen"]["warm"]["compile_count"] == 0
+    assert "codegen" not in rec
 
     # a pathologically wide headliner set must shed queries_warm, not grow
     wide = dict(run)

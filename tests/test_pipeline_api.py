@@ -4,7 +4,13 @@ proving the engine is not fixture-hardwired."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
+
+import pytest
+from conftest import SF_SMOKE
+from pyspark.sql import functions as F
 
 from multiagent_form_schema_etl_spark.fixtures import SCHEMA_ROWS
 from multiagent_form_schema_etl_spark.operators import document as D
@@ -87,3 +93,54 @@ def test_pipeline_stages_read_no_python_rdd(spark):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "LogicalRDD" not in plan, name
         assert "LocalRelation" in plan, name
+
+
+def _compile_count(spark) -> int:
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def _doc_lifecycle(spark, _tmp):
+    """run (every stage), recover, score and metrics, each through a noop
+    write -- what the CLI ``pipeline`` + ``evaluate`` execute."""
+    pipe = DocumentPipeline(spark, SCHEMA_ROWS)
+    blocks, forms = D.blocks_df(spark), D.doc_forms_df(spark)
+    stages = pipe.run(blocks, forms).values()
+    recovered = pipe.recover(blocks, forms)
+    scored = pipe.score(recovered, D.ground_truth_df(spark))
+    for df in (*stages, recovered, scored, pipe.metrics(scored)):
+        df.write.format("noop").mode("overwrite").save()
+
+
+def _corpus_faces(spark, tmp):
+    """The four corpus-prep faces on a fresh copy of the smoke corpus (a
+    new path, so no memoized plan or cached relation is reused), each
+    through count + xor of row hashes."""
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    registry.load_all_modules()
+    d = tempfile.mkdtemp(dir=tmp)
+    shutil.copy(os.path.join(SF_SMOKE, "documents.parquet"), d)
+    for name in ("x5_corpus_pipeline_end_to_end", "x1_dedup_minhash_lsh",
+                 "x1_dedup_jaccard_prefix", "x1_dedup_keep_best_quality"):
+        df = registry.QUERIES[name](spark, d)
+        df.select(F.count(F.lit(1)),
+                  F.bit_xor(F.xxhash64(*df.columns))).collect()
+
+
+@pytest.mark.parametrize("batch", [_doc_lifecycle, _corpus_faces],
+                         ids=["doc_lifecycle", "corpus_prep"])
+def test_repeated_batch_compiles_no_new_code(spark, tmp_path, batch):
+    """A steady batch re-runs plans the session has already compiled, so
+    it must find every generated class in the codegen cache: a cache
+    smaller than one batch's working set evicts each class before its
+    next use and recompiles it in the Spark driver and in every task."""
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    try:
+        batch(spark, str(tmp_path))
+        before = _compile_count(spark)
+        batch(spark, str(tmp_path))
+        assert _compile_count(spark) - before == 0
+    finally:
+        registry.invalidate(spark)

@@ -29,18 +29,20 @@ FACES = ["x1_dedup_jaccard_ngram", "x5_repetition_stats",
 
 # Persist-free builders: the registered jaccard face track_persists its
 # result (a warm re-run would time a cache read, not the pipeline), so
-# the jaccard side uses the raw builder from tools.ab_contested; the
+# the jaccard side calls the face's helpers without the persist; the
 # other two registered faces have no persist and re-execute fully.
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {root!r})
 import __spark_entry__ as e
 from multiagent_form_schema_etl_spark.session import get_spark
-from tools.ab_contested import jaccard_new
+from multiagent_form_schema_etl_spark.operators.dedup import (
+    _jaccard_ngram_from, _tok_d_df)
 spark = get_spark("scaling_evidence")
 spark.sparkContext.setLogLevel("ERROR")
 qs = e.queries()
-qs = dict(qs, x1_dedup_jaccard_ngram=jaccard_new)
+qs = dict(qs, x1_dedup_jaccard_ngram=lambda s, d: _jaccard_ngram_from(
+    _tok_d_df(s, d)))
 d = {sf_dir!r}
 from multiagent_form_schema_etl_spark.catalog import load_table
 load_table(spark, d, "documents").limit(1).collect()
