@@ -75,24 +75,28 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
         stages: dict[str, DataFrame] = {"forms": forms}
     else:
         stages = pipe.run(blocks, doc_forms)
-    wanted = args.stages.split(",") if args.stages else list(stages)
-    unknown = [s for s in wanted if s not in stages]
-    if unknown:
-        print(f"unknown stages {unknown}; available: {list(stages)}",
-              file=sys.stderr)
-        return 2
-    for stage in wanted:
-        if stage == "forms":
-            continue  # forms are the final JSON output below
-        path = sinks.write_stage(stages[stage], args.out, stage)
-        print(f"stage {stage} -> {path}")
-    path = sinks.write_final_json(stages["forms"], args.out, "forms_json")
-    print(f"forms -> {path}")
-    if obs is not None:
-        # single-pass: the stage/forms writes above were the driving
-        # actions; the counters accumulated alongside them, no extra scan
-        print(json.dumps({"input_metrics": dict(obs.get)}))
-    return 0
+    try:
+        wanted = args.stages.split(",") if args.stages else list(stages)
+        unknown = [s for s in wanted if s not in stages]
+        if unknown:
+            print(f"unknown stages {unknown}; available: {list(stages)}",
+                  file=sys.stderr)
+            return 2
+        for stage in wanted:
+            if stage == "forms":
+                continue  # forms are the final JSON output below
+            path = sinks.write_stage(stages[stage], args.out, stage)
+            print(f"stage {stage} -> {path}")
+        path = sinks.write_final_json(stages["forms"], args.out, "forms_json")
+        print(f"forms -> {path}")
+        if obs is not None:
+            # single-pass: the stage/forms writes above were the driving
+            # actions; the counters accumulated alongside them, no extra scan
+            print(json.dumps({"input_metrics": dict(obs.get)}))
+        return 0
+    finally:
+        if "extractions" in stages:  # fulltext: release run()'s boundary
+            stages["extractions"].unpersist()
 
 
 def cmd_evaluate(args: argparse.Namespace) -> int:

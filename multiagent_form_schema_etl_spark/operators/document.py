@@ -430,7 +430,12 @@ def recovered_df(spark: SparkSession, blocks: DataFrame | None = None,
                  extraction: DataFrame | None = None) -> DataFrame:
     """U8: DefaultValueRecovery -- any-error fields take the schema default
     when present (utils/validation.py:190-203, 280-299)."""
-    v = validated_df(spark, blocks, doc_forms, schema_rows, extraction)
+    return recovered_of(
+        validated_df(spark, blocks, doc_forms, schema_rows, extraction))
+
+
+def recovered_of(v: DataFrame) -> DataFrame:
+    """The U8 recovery projection over a validated_df relation."""
     use_default = F.col("any_error") & F.col("default_value").isNotNull()
     return v.select(
         "doc_id", "form_name", "field_name", "required",

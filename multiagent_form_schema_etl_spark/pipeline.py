@@ -16,8 +16,18 @@ Typical use::
 
     pipe = DocumentPipeline(spark, schema_rows)        # or .from_schema_dir
     out = pipe.run(blocks_df, doc_forms_df)            # dict of stage DFs
-    out["forms"].write.parquet(...)                    # EAV form rows
-    scores = pipe.score(out["forms"], ground_truth_df) # J1+A4
+    try:
+        out["forms"].write.parquet(...)                # EAV form rows
+        scores = pipe.score(out["forms"], ground_truth_df)  # J1+A4
+    finally:
+        out["extractions"].unpersist()                 # release the boundary
+
+``run`` persists one stage boundary, the extraction EAV: the cascade runs
+once per run and validation, recovery, completeness and a later rebuilt
+``recover`` (Spark's CacheManager matches its plan to the persisted
+relation) all read that one result instead of rescanning blocks. The
+caller owns the handle and releases it with
+``out["extractions"].unpersist()`` once its writes and evaluation are done.
 """
 
 from __future__ import annotations
@@ -26,6 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import document as D
+from .plans.registry import track_persist
+
+# Most schema field rows from_schema_dir collects into this process.
+MAX_SCHEMA_FIELD_ROWS = 10_000
 
 
 class DocumentPipeline:
@@ -43,22 +57,23 @@ class DocumentPipeline:
         """Late-bind schemas from a JSON directory (S4)."""
         from .sources.schemas import load_schemas
 
-        schemas = load_schemas(spark, schema_dir)
-        n = schemas.count()
-        if n > 10_000:
+        # N + 1 rows, in one job, are enough to detect an oversized directory
+        rows = (load_schemas(spark, schema_dir)
+                .limit(MAX_SCHEMA_FIELD_ROWS + 1).collect())
+        if len(rows) > MAX_SCHEMA_FIELD_ROWS:
             # schemas are compiled into plan-time expressions; a mis-pointed
             # directory (e.g. a data lake path) would OOM the driver here
             raise ValueError(
-                f"schema_dir {schema_dir!r} holds {n} field rows -- "
+                f"schema_dir {schema_dir!r} holds more than "
+                f"{MAX_SCHEMA_FIELD_ROWS} field rows -- "
                 "refusing to collect (is this really a schema directory?)")
-        rows = [
+        return cls(spark, [
             (r["form_name"], r["field_name"], r["ftype"], r["section"],
              bool(r["required"]), r["keywords"], r["patterns"], r["examples"],
              r["c_min"], r["c_max"], r["c_pattern"], r["c_enum"],
              r["default_value"])
-            for r in load_schemas(spark, schema_dir).collect()
-        ]
-        return cls(spark, rows)
+            for r in rows
+        ])
 
     # -- stages ------------------------------------------------------------
 
@@ -90,10 +105,18 @@ class DocumentPipeline:
     # -- assembled lifecycle ----------------------------------------------
 
     def run(self, blocks: DataFrame, doc_forms: DataFrame) -> dict[str, DataFrame]:
-        """Full lifecycle; every value is a lazy DataFrame sharing one
-        lineage (write any subset as stage snapshots via sources.sinks)."""
-        validated = self.validate(blocks, doc_forms)
-        forms = self.recover(blocks, doc_forms)
+        """Full lifecycle as a dict of lazy stage DataFrames (write any
+        subset as stage snapshots via sources.sinks).
+
+        ``extractions`` is persisted: the cascade is the one stage
+        boundary, and ``validation_errors``, ``forms`` and
+        ``completeness`` derive from one validation of it, so no write
+        downstream of extraction rescans blocks. The caller owns the
+        handle: call ``out["extractions"].unpersist()`` when done."""
+        ext = track_persist(self.extract(blocks, doc_forms))
+        validated = D.validated_df(self.spark, schema_rows=self.schema_rows,
+                                   extraction=ext)
+        forms = D.recovered_of(validated)
         completeness = forms.groupBy("doc_id", "form_name").agg(
             F.bool_and(F.when(F.col("required"), F.col("value").isNotNull())
                         .otherwise(F.lit(True))).alias("is_complete"),
@@ -102,7 +125,7 @@ class DocumentPipeline:
             "words": self.words(blocks),
             "clauses": self.clauses(blocks),
             "full_text": self.full_text(blocks, doc_forms),
-            "extractions": self.extract(blocks, doc_forms),
+            "extractions": ext,
             "validation_errors": validated.selectExpr(
                 "doc_id", "form_name", "field_name",
                 f"stack({len(D._VIOL_RULES)}, "

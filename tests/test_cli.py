@@ -21,6 +21,29 @@ def test_cli_pipeline_writes_stages_and_forms(spark, tmp_path):
     assert rows and {"doc_id", "field_name", "value"} <= set(rows[0])
 
 
+def test_cli_pipeline_releases_its_stage_boundary(spark, tmp_path):
+    """The fulltext pipeline persists the extraction EAV for its writes
+    and unpersists it after them: no cache entry for the boundary and no
+    persisted RDD outlive the command."""
+    from multiagent_form_schema_etl_spark.fixtures import SCHEMA_ROWS
+    from multiagent_form_schema_etl_spark.operators import document as D
+    from multiagent_form_schema_etl_spark.pipeline import DocumentPipeline
+
+    blocks, doc_forms = str(tmp_path / "blocks"), str(tmp_path / "doc_forms")
+    D.blocks_df(spark).write.parquet(blocks)
+    D.doc_forms_df(spark).write.parquet(doc_forms)
+    sc = spark.sparkContext._jsc.sc()
+    base = sc.getPersistentRDDs().size()
+    assert main(["pipeline", "--blocks", blocks, "--doc-forms", doc_forms,
+                 "--out", str(tmp_path / "out")]) == 0
+    assert sc.getPersistentRDDs().size() == base
+    pipe = DocumentPipeline(spark, SCHEMA_ROWS)
+    ext = pipe.extract(spark.read.parquet(blocks),
+                       spark.read.parquet(doc_forms))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(ext._jdf).isEmpty()
+
+
 def test_cli_pipeline_scoped_mode_and_form_filter(spark, tmp_path):
     out = str(tmp_path / "scoped")
     rc = main(["pipeline", "--mode", "scoped", "--form", "NDA_Form",

@@ -4,6 +4,7 @@ proving the engine is not fixture-hardwired."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -21,15 +22,36 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+@contextlib.contextmanager
+def _released(stages):
+    """Yield ``run``'s stage dict and release its persisted boundary."""
+    try:
+        yield stages
+    finally:
+        stages["extractions"].unpersist()
+
+
 def test_pipeline_matches_fixture_queries(spark):
+    """Every stage fed from the persisted extraction boundary gives the
+    rows of an unpersisted build, both read through the cache and
+    recomputed after the boundary is released."""
     pipe = DocumentPipeline(spark, SCHEMA_ROWS)
     blocks = D.blocks_df(spark)
     forms = D.doc_forms_df(spark)
-    out = pipe.run(blocks, forms)
-    assert _rows(out["extractions"]) == _rows(D.extraction_df(spark))
-    assert _rows(out["forms"].select("doc_id", "field_name", "value")) == \
-        _rows(D.recovered_df(spark).select("doc_id", "field_name", "value"))
-    assert _rows(out["clauses"]) == _rows(D.clauses_df(spark))
+    # built and collected before run() persists anything
+    want = {
+        "extractions": _rows(D.extraction_df(spark)),
+        "forms": _rows(D.recovered_df(spark)),
+        "clauses": _rows(D.clauses_df(spark)),
+        "validation_errors": _rows(D.doc_p10_validation_errors(spark, None)),
+        "completeness": _rows(D.doc_a7_form_completeness(spark, None)
+                              .select("doc_id", "form_name", "is_complete",
+                                      "n_filled")),
+    }
+    with _released(pipe.run(blocks, forms)) as out:
+        cached = {name: _rows(df) for name, df in out.items()}
+        assert {name: cached[name] for name in want} == want
+    assert {name: _rows(df) for name, df in out.items()} == cached
 
 
 def test_pipeline_on_fresh_input_with_json_schemas(spark):
@@ -55,44 +77,108 @@ def test_pipeline_on_fresh_input_with_json_schemas(spark):
         "confidence double, source string")
     doc_forms = spark.createDataFrame([(99, "NDA_Form")],
                                       "doc_id long, form_name string")
-    out = pipe.run(blocks, doc_forms)
+    with _released(pipe.run(blocks, doc_forms)) as out:
+        ext = {r["field_name"]: r["value"]
+               for r in out["extractions"].collect()}
+        assert ext["effective_date"] == "2024-02-02"
+        assert ext["disclosing_party"] == "Zeta Ltd"
+        assert ext["receiving_party"] == "Eta GmbH"
+        assert ext["governing_law"] == "laws of Bavaria"
+        assert ext["confidentiality_period"] == "9 years"
 
-    ext = {r["field_name"]: r["value"] for r in out["extractions"].collect()}
-    assert ext["effective_date"] == "2024-02-02"
-    assert ext["disclosing_party"] == "Zeta Ltd"
-    assert ext["receiving_party"] == "Eta GmbH"
-    assert ext["governing_law"] == "laws of Bavaria"
-    assert ext["confidentiality_period"] == "9 years"
+        clauses = {r["section_key"]: r["clause_text"]
+                   for r in out["clauses"].collect()}
+        assert set(clauses) == {"1"}
+        comp = out["completeness"].collect()[0]
+        assert comp["is_complete"] is True
 
-    clauses = {r["section_key"]: r["clause_text"] for r in out["clauses"].collect()}
-    assert set(clauses) == {"1"}
-    comp = out["completeness"].collect()[0]
-    assert comp["is_complete"] is True
-
-    gt = spark.createDataFrame(
-        [(99, "effective_date", "2024-02-02"),
-         (99, "governing_law", "Bavaria"),
-         (99, "disclosing_party", "Zeta Ltd")],
-        "doc_id long, field_name string, true_value string")
-    m = pipe.metrics(pipe.score(out["forms"], gt)).collect()[0]
-    assert m["recall"] == 1.0  # every truth field predicted
+        gt = spark.createDataFrame(
+            [(99, "effective_date", "2024-02-02"),
+             (99, "governing_law", "Bavaria"),
+             (99, "disclosing_party", "Zeta Ltd")],
+            "doc_id long, field_name string, true_value string")
+        m = pipe.metrics(pipe.score(out["forms"], gt)).collect()[0]
+        assert m["recall"] == 1.0  # every truth field predicted
 
 
 def test_pipeline_stages_read_no_python_rdd(spark):
     """Every constant table a stage reads (candidates, schema meta, the
-    fixture inputs) is a LocalRelation: no optimized plan of run/recover/
+    fixture inputs) is a LocalRelation: no analyzed plan of run/recover/
     score/metrics has an ExistingRDD leaf, so no write starts
-    Python-worker tasks to decode rule rows."""
+    Python-worker tasks to decode rule rows. (The analyzed plan, because
+    cache substitution comes after analysis: the optimized plan of the
+    persisted ``extractions`` is an InMemoryRelation.)"""
     pipe = DocumentPipeline(spark, SCHEMA_ROWS)
     blocks, forms = D.blocks_df(spark), D.doc_forms_df(spark)
-    stages = dict(pipe.run(blocks, forms))
-    stages["recover"] = pipe.recover(blocks, forms)
-    stages["score"] = pipe.score(stages["recover"], D.ground_truth_df(spark))
-    stages["metrics"] = pipe.metrics(stages["score"])
-    for name, df in stages.items():
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "LogicalRDD" not in plan, name
-        assert "LocalRelation" in plan, name
+    with _released(pipe.run(blocks, forms)) as stages:
+        stages["recover"] = pipe.recover(blocks, forms)
+        stages["score"] = pipe.score(stages["recover"], D.ground_truth_df(spark))
+        stages["metrics"] = pipe.metrics(stages["score"])
+        for name, df in stages.items():
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert "LogicalRDD" not in plan, name
+            assert "LocalRelation" in plan, name
+
+
+def _leaves(plan) -> list:
+    """Leaf operators of a physical plan and its subqueries, looking
+    through AQE wrappers and query stages but not into the plan a cached
+    relation was built from."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return _leaves(plan.executedPlan())
+    if cls.endswith("QueryStageExec"):
+        return _leaves(plan.plan())
+    if cls == "ReusedExchangeExec":
+        return _leaves(plan.child())
+    kids, subs = plan.children(), plan.subqueries()
+    if kids.size() == 0 and subs.size() == 0:
+        return [plan]
+    return [leaf for seq in (kids, subs) for i in range(seq.size())
+            for leaf in _leaves(seq.apply(i))]
+
+
+def test_pipeline_boundary_hits_the_cache(spark, tmp_path):
+    """Once ``extractions`` is written, every stage downstream of it and a
+    separately rebuilt ``recover`` read the persisted relation: their
+    executed plans scan it (InMemoryTableScan) and no input file."""
+    from multiagent_form_schema_etl_spark.sources import sinks
+
+    D.blocks_df(spark).write.parquet(str(tmp_path / "blocks"))
+    D.doc_forms_df(spark).write.parquet(str(tmp_path / "doc_forms"))
+    blocks = spark.read.parquet(str(tmp_path / "blocks"))
+    doc_forms = spark.read.parquet(str(tmp_path / "doc_forms"))
+    pipe = DocumentPipeline(spark, SCHEMA_ROWS)
+    with _released(pipe.run(blocks, doc_forms)) as out:
+        sinks.write_stage(out["extractions"], str(tmp_path / "out"),
+                          "extractions")
+        readers = {name: out[name] for name in
+                   ("validation_errors", "forms", "completeness")}
+        readers["recover"] = pipe.recover(blocks, doc_forms)
+        for name, df in readers.items():
+            df.collect()
+            leaves = [leaf.getClass().getSimpleName() for leaf in
+                      _leaves(df._jdf.queryExecution().executedPlan())]
+            assert "InMemoryTableScanExec" in leaves, (name, leaves)
+            assert "FileSourceScanExec" not in leaves, (name, leaves)
+
+
+def test_from_schema_dir_refuses_oversized_directory(spark, tmp_path,
+                                                     monkeypatch):
+    """A directory with more field rows than MAX_SCHEMA_FIELD_ROWS is
+    refused instead of collected; at the limit it loads."""
+    from multiagent_form_schema_etl_spark import pipeline
+    from multiagent_form_schema_etl_spark.sources import schemas as sch
+
+    sch.save_schema(sch.schema_rows_to_json(SCHEMA_ROWS, "NDA_Form"),
+                    str(tmp_path))
+    n = sum(r[0] == "NDA_Form" for r in SCHEMA_ROWS)
+    monkeypatch.setattr(pipeline, "MAX_SCHEMA_FIELD_ROWS", n)
+    assert len(DocumentPipeline.from_schema_dir(spark, str(tmp_path))
+               .schema_rows) == n
+    monkeypatch.setattr(pipeline, "MAX_SCHEMA_FIELD_ROWS", n - 1)
+    with pytest.raises(ValueError, match="refusing to collect"):
+        DocumentPipeline.from_schema_dir(spark, str(tmp_path))
 
 
 def _compile_count(spark) -> int:
@@ -105,11 +191,11 @@ def _doc_lifecycle(spark, _tmp):
     write -- what the CLI ``pipeline`` + ``evaluate`` execute."""
     pipe = DocumentPipeline(spark, SCHEMA_ROWS)
     blocks, forms = D.blocks_df(spark), D.doc_forms_df(spark)
-    stages = pipe.run(blocks, forms).values()
-    recovered = pipe.recover(blocks, forms)
-    scored = pipe.score(recovered, D.ground_truth_df(spark))
-    for df in (*stages, recovered, scored, pipe.metrics(scored)):
-        df.write.format("noop").mode("overwrite").save()
+    with _released(pipe.run(blocks, forms)) as stages:
+        recovered = pipe.recover(blocks, forms)
+        scored = pipe.score(recovered, D.ground_truth_df(spark))
+        for df in (*stages.values(), recovered, scored, pipe.metrics(scored)):
+            df.write.format("noop").mode("overwrite").save()
 
 
 def _corpus_faces(spark, tmp):
