@@ -70,8 +70,9 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
         doc_forms = doc_forms.filter(doc_forms.form_name == args.form)
     pipe = _pipe(spark, args.schema_dir)
     if args.mode == "scoped":
-        forms = D.scoped_cascade_values(
-            D.section_context(spark, blocks, doc_forms), share_input=True)
+        forms = D.scoped_cascade_values_rules(
+            D.section_context(spark, blocks, doc_forms, pipe.schema_rows),
+            pipe.schema_rows)
         stages: dict[str, DataFrame] = {"forms": forms}
     else:
         stages = pipe.run(blocks, doc_forms)

@@ -24,6 +24,7 @@ eliminate the second shuffle entirely.
 
 from __future__ import annotations
 
+import functools
 import itertools
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -107,80 +108,47 @@ def words_df(spark: SparkSession, blocks: DataFrame | None = None) -> DataFrame:
          .cast("long"))
 
 
-def key_words(w: DataFrame) -> DataFrame:
-    """F3/F4/W1/W2 core over any (doc_id, pos, word, label) relation:
-    per-word heading trigger, section-key extraction with 2-word lookahead,
-    and the running 'current clause' state (layout_structure.py:152-208).
-
-    When the relation still carries (block_idx, widx), the windows order by
-    those instead of pos: the ordering is identical (pos IS row_number over
-    it), but it matches words_df's window spec exactly, so Catalyst runs
-    the whole row_number+lead+last cascade on ONE shuffle and ONE sort
-    instead of re-sorting 5x more word rows than blocks."""
-    if "widx" in w.columns:
-        win = Window.partitionBy("doc_id").orderBy("block_idx", "widx")
-    else:
-        win = Window.partitionBy("doc_id").orderBy("pos")
-    w = (w.withColumn("nw1", F.lead("word", 1).over(win))
-          .withColumn("nw2", F.lead("word", 2).over(win))
-          .withColumn("trig", F.expr(
-              f"lower(label) = 'heading' OR {G.is_secnum_sql('word', SPARK)}"))
-          .withColumn("new_key", F.when(F.col("trig"), F.expr(
-              G.extract_key_sql("word", "nw1", "nw2", SPARK)))))
-    return w.withColumn(
-        "cur_key",
-        F.last("new_key", ignorenulls=True).over(
-            win.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-
-
-def keyed_words_df(spark: SparkSession, blocks: DataFrame | None = None) -> DataFrame:
-    return key_words(words_df(spark, blocks))
-
-
 def clauses_from_words(w: DataFrame) -> DataFrame:
-    """A2 core over a keyed word relation (see clauses_df for semantics)."""
-    k = key_words(w) if "cur_key" not in w.columns else w
-    # r6 (VERDICT r5 item 5): ONE (doc_id, section_key) aggregation
-    # instead of keys-groupBy + content-groupBy + left join -- trigger
-    # rows (carrying new_key) and content rows (carrying cur_key) are
-    # disjoint, so they union into a single keyed relation and resolve
-    # with conditional aggregates: min(pos) over trigger rows = the
-    # key's first appearance; collect_list over content rows = the
-    # clause body (collect_list drops the NULL the trigger rows
-    # contribute). The first_pos IS NOT NULL filter reproduces the left
-    # join's keys-side retention exactly: content under a cur_key always
-    # descends from some trigger row, but a clause build fed a word
-    # slice could see orphaned content -- dropped then, dropped now.
-    rel = (k.filter((F.col("trig") & F.col("new_key").isNotNull())
-                    | ((~F.col("trig"))
-                       & F.lower("label").isin("paragraph", "list_item")
-                       & F.col("cur_key").isNotNull()))
-           .select("doc_id",
-                   F.when(F.col("trig"), F.col("new_key"))
-                    .otherwise(F.col("cur_key")).alias("section_key"),
-                   "trig", "pos", "word"))
-    return (rel.groupBy("doc_id", "section_key")
-            .agg(F.min(F.when(F.col("trig"), F.col("pos")))
-                 .alias("first_pos"),
-                 F.concat_ws(" ", F.transform(
-                     F.array_sort(F.collect_list(
-                         F.when(~F.col("trig"), F.struct("pos", "word")))),
-                     lambda x: x["word"])).alias("clause_text"))
-            .filter(F.col("first_pos").isNotNull()))
+    """A2 over a labeled word relation (doc_id, block_idx, pos, word,
+    label) instead of blocks -- doc_u1's model-labeled build. Same clause
+    SQL as clauses_df; only the word source differs (``pos`` stands in
+    for the in-block word index, so word order is unchanged and
+    first_pos is the word's ordinal within the relation)."""
+    return _sql_over_view(w, "clauses_w", _clauses_sql(_WSRC_WORDS))
 
 
-def _clauses_sql() -> str:
-    """The blocks→words→keys→clauses chain as ONE generated SQL statement
-    (Spark dialect; fragments from sqlgen, same ones key_words uses).
-    Static in the schema -- built once at import."""
-    is_secnum = G.is_secnum_sql("word", SPARK)
-    extract_key = G.extract_key_sql("word", "nw1", "nw2", SPARK)
-    return f"""
-    WITH wsrc AS (
+# The clause build's word source: blocks exploded into words, or a word
+# relation that already carries a per-doc position.
+_WSRC_BLOCKS = """
       SELECT doc_id, block_idx, label, widx, word
       FROM __VIEW__
       LATERAL VIEW posexplode(split(text, ' ')) t AS widx, word
-      WHERE trim(text) <> '' AND word <> ''),
+      WHERE trim(text) <> '' AND word <> ''"""
+_WSRC_WORDS = """
+      SELECT doc_id, block_idx, label, pos AS widx, word FROM __VIEW__"""
+
+
+@functools.cache  # static in the schema: built once per word source
+def _clauses_sql(wsrc: str) -> str:
+    """The words→keys→clauses chain as ONE generated SQL statement
+    (Spark dialect; fragments from sqlgen, the same ones the DuckDB
+    oracle chain uses).
+
+    F3/F4/W1/W2: per-word heading trigger, section-key extraction with
+    2-word lookahead and the running 'current clause' state
+    (layout_structure.py:152-208), all over one (doc_id, block_idx, widx)
+    window spec -- one shuffle, one sort. Then ONE (doc_id, section_key)
+    aggregation (VERDICT r5 item 5): trigger rows (carrying new_key) and
+    content rows (carrying cur_key) are disjoint, so they union into a
+    single keyed relation and resolve with conditional aggregates:
+    min(pos) over trigger rows = the key's first appearance; collect_list
+    over content rows = the clause body (collect_list drops the NULL the
+    trigger rows contribute). The first_pos IS NOT NULL filter drops
+    orphaned content, which only a word slice can carry."""
+    is_secnum = G.is_secnum_sql("word", SPARK)
+    extract_key = G.extract_key_sql("word", "nw1", "nw2", SPARK)
+    return f"""
+    WITH wsrc AS ({wsrc}),
     w AS (
       SELECT *, lead(word, 1) OVER win AS nw1, lead(word, 2) OVER win AS nw2,
              CAST(row_number() OVER win AS BIGINT) AS pos,
@@ -214,9 +182,6 @@ def _clauses_sql() -> str:
     WHERE first_pos IS NOT NULL"""
 
 
-_CLAUSES_SQL = None  # built lazily so import order stays cheap
-
-
 def clauses_df(spark: SparkSession, blocks: DataFrame | None = None) -> DataFrame:
     """A2: sessionized clause build with first-key-wins duplicate handling
     (repeated section keys concatenate, layout_structure.py:163-168) and
@@ -226,23 +191,17 @@ def clauses_df(spark: SparkSession, blocks: DataFrame | None = None) -> DataFram
     dict-insertion order (first appearance of the key) for J2's ordered
     fuzzy-context concat.
 
-    r15 (VERDICT r14 item 3, the extraction_df_hoisted precedent): the
-    words→keys→clauses chain runs as ONE generated SQL statement instead
-    of ~10 chained DataFrame calls -- classic PySpark re-analyzes the
-    growing logical plan on EVERY transformation, and this chain cost
-    ~1.4 s of driver time per build on the scaled doc faces (measured:
-    words_df 0.33 + key_words 0.53 + clauses_from_words 0.54 s at 2500
-    copies). One spark.sql parses and analyzes the tree once; the
-    physical plan is unchanged (same windows over the same
-    (doc_id, block_idx, widx) spec -- one shuffle, one sort -- same
-    aggregate). `clauses_from_words`/`keyed_words_df` remain the
-    word-relation path (doc_u1's model-labeled build, tests); every doc
-    oracle downstream of clauses re-proves equality."""
-    global _CLAUSES_SQL
-    if _CLAUSES_SQL is None:
-        _CLAUSES_SQL = _clauses_sql()
+    r15 (VERDICT r14 item 3): the words→keys→clauses chain runs as ONE
+    generated SQL statement instead of ~10 chained DataFrame calls --
+    classic PySpark re-analyzes the growing logical plan on EVERY
+    transformation, and the chain cost ~1.4 s of driver time per build on
+    the scaled doc faces (OPTIMIZATION_r15.md, "Measured first"). One
+    spark.sql parses and analyzes the tree once with the same physical
+    plan. It is the only clause build: clauses_from_words runs the same
+    statement over a word relation, and every doc oracle downstream of
+    clauses re-proves it against the DuckDB chain."""
     b = blocks if blocks is not None else blocks_df(spark)
-    return _sql_over_view(b, "clauses", _CLAUSES_SQL)
+    return _sql_over_view(b, "clauses", _clauses_sql(_WSRC_BLOCKS))
 
 
 def fulltext_df(spark: SparkSession, blocks: DataFrame | None = None,
@@ -289,9 +248,8 @@ def _sql_over_view(df: DataFrame, tag: str, sql_template: str) -> DataFrame:
     return out
 
 
-def _form_fields(form_name: str, schema_rows: list[tuple] | None = None) -> list[tuple]:
-    rows = schema_rows if schema_rows is not None else SCHEMA_ROWS
-    return [r for r in rows if r[0] == form_name]
+def _form_fields(form_name: str) -> list[tuple]:
+    return [r for r in SCHEMA_ROWS if r[0] == form_name]
 
 
 def extraction_df(spark: SparkSession, blocks: DataFrame | None = None,
@@ -302,81 +260,14 @@ def extraction_df(spark: SparkSession, blocks: DataFrame | None = None,
     fan-out (J3) is a broadcast join against the candidates table keyed
     (form_name, field_name) -- each doc fans to its form's field
     candidates -- and the cascade winner resolves in one aggregation.
-    Constant-size plan in the schema; semantics pinned equal to the
-    generated-projection strategy (extraction_df_hoisted) in pytest and by
-    the shared oracles of every downstream doc_* query."""
+    Constant-size plan in the schema; the same kernel (_cascade_winner)
+    runs the scoped cascade, and the DuckDB oracles of every downstream
+    doc_* query pin it to the generated-SQL reference cascade."""
     ft = fulltext_df(spark, blocks, doc_forms)
     cand = local_df(spark, _cascade_rule_rows(schema_rows, first_wins=False),
                     _RULES_SCHEMA)
     j = ft.join(F.broadcast(cand), "form_name")
     return _cascade_winner(j, "full_text")
-
-
-def extraction_df_hoisted(spark: SparkSession, blocks: DataFrame | None = None,
-                          doc_forms: DataFrame | None = None,
-                          schema_rows: list[tuple] | None = None) -> DataFrame:
-    """The generated-projection strategy for the full-text cascade: the
-    schema compiles into per-form guarded-hoist projections (each regex
-    runs once as a hoisted column, stack() emits the EAV rows). Higher
-    one-time driver cost (Catalyst analysis + janino compile), but no join
-    fan-out duplicating full_text per candidate row -- the right trade for
-    standing queries over very wide texts. Kept gate-visible via
-    doc_u7_cascade_hoisted (same oracle as doc_u7_extraction_cascade)."""
-    rows = schema_rows if schema_rows is not None else SCHEMA_ROWS
-    ft = fulltext_df(spark, blocks, doc_forms)
-    forms = sorted({r[0] for r in rows})
-    if len(forms) > 1:
-        # The per-form filter below pushes into the broadcast doc_forms side
-        # but cannot prune the per-doc full-text concat agg, so without
-        # sharing, that agg re-runs once PER FORM; every union branch reads
-        # the one persisted relation instead (an InMemoryTableScan per
-        # branch -- _sql_over_view keeps the cache entry alive).
-        ft = track_persist(ft)
-    parts = []
-    for form in forms:
-        # Three small projections instead of one giant stack expression:
-        # (1) every full-text regexp_extract once, (2) each field's cascade
-        # CASE over those columns, (3) stack + method. Keeps each codegen
-        # unit within janino's limits (VERDICT r1 #4); CollapseProject
-        # preserves the stage boundaries because the hoisted aliases are
-        # non-cheap and referenced more than once.
-        extract_cols: list[str] = []
-        pat_col_names: list[str] = []
-        val_cols: list[str] = []
-        items = []
-        for fi, r in enumerate(_form_fields(form, rows)):
-            _, fname, ftype, _, _, keywords, patterns, *_ = r
-            cols, val, any_pat = G.cascade_cols(
-                "full_text", ftype, patterns or [], keywords or [],
-                f"c{fi}", SPARK)
-            extract_cols += [f"{sql} AS {name}" for name, sql in cols]
-            pat_col_names += [name for name, _ in cols
-                              if name.startswith(f"c{fi}_p")]
-            vc = f"c{fi}_val"
-            val_cols.append(f"{val} AS {vc}")
-            regex_when = f"WHEN {any_pat} THEN 'regex' " if any_pat else ""
-            kw_when = (f"WHEN {vc} IS NOT NULL THEN 'keyword' "
-                       if keywords else "")
-            method = (f"(CASE {regex_when}{kw_when}END)"
-                      if (regex_when or kw_when) else G.null_str(SPARK))
-            items.append(f"'{fname}', {vc}, {method}")
-        stack = (f"stack({len(items)}, {', '.join(items)}) "
-                 "AS (field_name, value, method)")
-        def sel(cols: list[str]) -> str:
-            return "SELECT " + ", ".join(["doc_id", "form_name", *cols])
-
-        parts.append(
-            sel([stack]) + " FROM ("
-            + sel(pat_col_names + val_cols) + " FROM ("
-            + sel(extract_cols)
-            + f" FROM __VIEW__ WHERE form_name = '{form}'))")
-    # One generated SQL statement instead of ~14 chained DataFrame calls:
-    # classic PySpark re-parses and re-analyzes the growing plan on EVERY
-    # transformation, so chaining the giant cascade projections cost ~3s
-    # of driver time per build; a single spark.sql parses and analyzes the
-    # whole tree once. The nested subqueries produce the same Project
-    # nodes (and the same codegen-unit splitting) as the selectExpr chain.
-    return _sql_over_view(ft, "cascade_ft", " UNION ALL ".join(parts))
 
 
 _VIOL_RULES = ("required", "type", "constraint_min", "constraint_max",
@@ -699,9 +590,8 @@ def doc_a3_full_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_u7_extraction_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U7/J3/F1/F2: regex → keyword → (LLM slot = NULL) cascade per
-    (doc, schema field), EAV output (form_filler.py:40-135). Rules-as-data
-    execution; the generated-projection strategy stays gate-visible as
-    doc_u7_cascade_hoisted."""
+    (doc, schema field), EAV output (form_filler.py:40-135), executed
+    rules-as-data (extraction_df)."""
     return extraction_df(spark)
 
 
@@ -710,9 +600,10 @@ def doc_u7_extraction_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"{_CTES} SELECT doc_id, form_name, field_name, value, method FROM extractions",
 )
 def doc_u7_cascade_hoisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The generated-projection strategy for the full-text cascade (same
-    oracle as doc_u7_extraction_cascade; strategies pinned equal)."""
-    return extraction_df_hoisted(spark)
+    """Kept name of the retired generated-projection full-text cascade:
+    the rules-as-data kernel is the one Spark cascade, so this face runs
+    extraction_df like doc_u7_extraction_cascade (same oracle)."""
+    return extraction_df(spark)
 
 
 @register(
@@ -847,7 +738,8 @@ def doc_j2_section_context(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def section_context(spark: SparkSession, blocks: DataFrame | None = None,
-                    doc_forms: DataFrame | None = None) -> DataFrame:
+                    doc_forms: DataFrame | None = None,
+                    schema_rows: list[tuple] | None = None) -> DataFrame:
     """J2: section-key → clause context resolution: exact key hit first,
     else fuzzy containment (key substring-of clause key OR clause text) with
     matches concatenated in clause first-appearance order
@@ -861,7 +753,7 @@ def section_context(spark: SparkSession, blocks: DataFrame | None = None,
     (which planned as a stack of sort-merge joins, VERDICT r1 #7)."""
     forms = doc_forms if doc_forms is not None else doc_forms_df(spark)
     fields = forms.join(
-        F.broadcast(schema_meta_df(spark)
+        F.broadcast(schema_meta_df(spark, schema_rows)
                     .select("form_name", "field_name", "section")),
         "form_name")
     c = clauses_df(spark, blocks)
@@ -967,9 +859,9 @@ def doc_a6_baseline_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _scoped_cascade_case(engine: str) -> str:
     """One CASE over field_name dispatching each field's cascade against the
-    row's own scoped ``context`` column (the per-(doc,field) relation).
-    Used for the DuckDB oracle; the Spark side uses the column-hoisted
-    variant below (same janino-size rationale as extraction_df)."""
+    row's own scoped ``context`` column (the per-(doc,field) relation):
+    the DuckDB oracle's reference cascade. The Spark side runs it as data
+    (scoped_cascade_values_rules)."""
     whens = []
     for r in SCHEMA_ROWS:
         _, fname, ftype, _, _, keywords, patterns, *_ = r
@@ -977,80 +869,6 @@ def _scoped_cascade_case(engine: str) -> str:
                                   keywords or [], engine)
         whens.append(f"WHEN field_name = '{fname}' THEN {val}")
     return "(CASE " + " ".join(whens) + " END)"
-
-
-def scoped_cascade_values(scoped: DataFrame,
-                          share_input: bool = False) -> DataFrame:
-    """Spark-side scoped cascade over a (doc_id, form_name, field_name,
-    context) relation: per-field extracts are hoisted into CASE-guarded
-    columns (only the row's own field fires its regexes, preserving the
-    dispatch CASE's short-circuit cost), then the value CASE references only
-    cheap columns.
-
-    Split per form like extraction_df: each branch carries only its form's
-    fields, so every codegen unit stays within janino's 64 KB method limit
-    even when the projection fuses into an adjacent aggregate stage (one
-    giant 66-column projection overflowed `processNext`/
-    `hashAgg_doAggregateWithKeys` at any scale). Semantics stay identical to
-    the oracle's single CASE: dispatch is on field_name with FIRST
-    registration winning globally (start_date appears in two forms with
-    different cascades; both forms must use the first definition), so each
-    form's branch looks up the first-wins definition per field name.
-
-    ``share_input=True`` persists the scoped relation before the per-form
-    branches consume it. Without it each union branch re-derives the whole
-    clause-sessionization subtree (the per-form filter pushes into the
-    doc_forms side but cannot prune the windowed clause build, so that
-    subtree runs once PER FORM -- 3x the corpus sessionization CPU at
-    scale). A single-pass column-hoisted variant was tried instead and
-    collapses back into one giant projection that overflows janino's 64 KB
-    method limit, so row-splitting by form plus a shared materialized input
-    is the plan that both compiles and reads the input once. The cache is
-    MEMORY_AND_DISK, lineage-preserving (recompute on executor loss), and
-    LRU-evicted after the query's action completes.
-
-    A third layout -- persist only the (smaller) clauses relation and give
-    each branch its own form-pruned fields-join + context agg -- was
-    measured and rejected for the local bench: every branch then re-analyzes
-    the full cascade lineage (3x the driver-side Catalyst constant) and
-    re-shuffles the clause side, which loses once the session carries other
-    queries' caches. On a real cluster, where analysis amortizes and cache
-    memory is per-executor, that trade inverts; both layouts keep identical
-    semantics (every doc carries exactly one form, so form-branching
-    partitions rows disjointly)."""
-    if share_input:
-        scoped = track_persist(scoped)
-    first_def: dict[str, tuple] = {}
-    for r in SCHEMA_ROWS:
-        first_def.setdefault(r[1], r)
-    parts = []
-    for form in sorted({r[0] for r in SCHEMA_ROWS}):
-        fnames = []
-        seen: set[str] = set()
-        for r in SCHEMA_ROWS:
-            if r[0] == form and r[1] not in seen:
-                seen.add(r[1])
-                fnames.append(r[1])
-        col_defs: list[str] = []
-        whens = []
-        for fi, fname in enumerate(fnames):
-            _, _, ftype, _, _, keywords, patterns, *_ = first_def[fname]
-            cols, val, _ = G.cascade_cols("context", ftype, patterns or [],
-                                          keywords or [], f"s{fi}", SPARK)
-            col_defs += [f"(CASE WHEN field_name = '{fname}' THEN {sql} END) AS {name}"
-                         for name, sql in cols]
-            whens.append(f"WHEN field_name = '{fname}' THEN {val}")
-        value_case = "(CASE " + " ".join(whens) + " END)"
-        keys = "SELECT doc_id, form_name, field_name"
-        parts.append(
-            f"{keys}, {value_case} AS value FROM ("
-            + ", ".join([keys, *col_defs])
-            + f" FROM __VIEW__ WHERE form_name = '{form}')")
-    # One generated SQL statement for the same reason as extraction_df:
-    # chained selectExpr calls re-parse/re-analyze the giant guarded-hoist
-    # projections per call; a single spark.sql does it once. Identical
-    # Project nesting, identical codegen splitting.
-    return _sql_over_view(scoped, "scoped", " UNION ALL ".join(parts))
 
 
 def _cascade_rule_rows(schema_rows: list[tuple] | None = None,
@@ -1095,16 +913,19 @@ _RULES_SCHEMA = ("form_name string, field_name string, prio int, kind string, "
 def scoped_cascade_values_rules(scoped: DataFrame,
                                 schema_rows: list[tuple] | None = None
                                 ) -> DataFrame:
-    """Rules-as-data execution of the scoped cascade: semantically identical
-    to :func:`scoped_cascade_values` (same oracle, pinned equal in pytest)
-    but the plan is CONSTANT-SIZE in the schema -- a ~200-row broadcast
-    candidates table, three generic regex expressions with column patterns,
-    and one (doc, field) aggregation picking the cascade winner.
+    """The scoped cascade over a (doc_id, form_name, field_name, context)
+    relation, executed rules-as-data: the plan is CONSTANT-SIZE in the
+    schema -- a ~200-row broadcast candidates table, three generic regex
+    expressions with column patterns, and one (doc, field) aggregation
+    picking the cascade winner. Dispatch is on field_name with the FIRST
+    registration winning globally (start_date appears in two forms with
+    different cascades; both forms use the first definition), exactly like
+    the oracle's single CASE (_scoped_cascade_case).
 
-    Why this beats the generated-projection path: the guarded-hoist variant
-    compiles the whole schema into ~9 codegen units (~6 s of driver-side
-    Catalyst analysis + janino compile before any data moves, VERDICT r2
-    item 1) and needs the scoped input persisted against per-form re-reads.
+    Why rules-as-data: the retired generated-projection variant compiled
+    the whole schema into ~9 codegen units (~6 s of driver-side Catalyst
+    analysis + janino compile before any data moves, VERDICT r2 item 1)
+    and needed the scoped input persisted against per-form re-reads.
     Here the schema is late-bound DATA: candidates broadcast-join onto the
     scoped relation (one pass, no persist) and the winner aggregation is a
     map-side-combinable min(struct(prio, value)) on the already-
@@ -1236,8 +1057,7 @@ def doc_u7_scoped_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY §2.12 / form_filler.py:67): each field's cascade runs only
     against its section's resolved clause context. Both modes are first-class
     engine options; this is the scoped one. Executes through the
-    rules-as-data engine (constant-size plan); the generated-projection
-    strategy stays gate-visible as doc_u7_scoped_hoisted."""
+    rules-as-data kernel (constant-size plan, scoped_cascade_values_rules)."""
     return scoped_cascade_values_rules(section_context(spark))
 
 
@@ -1250,14 +1070,11 @@ def doc_u7_scoped_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_u7_scoped_hoisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The generated-projection strategy for the scoped cascade (same oracle
-    as doc_u7_scoped_extraction -- the two strategies are pinned equal).
-    Compiles the schema into per-form guarded-hoist projections: higher
-    one-time driver cost (Catalyst analysis + janino compile of ~9 codegen
-    units), zero join fan-out at runtime -- the right trade for standing
-    queries over very wide contexts where duplicating the context string
-    per candidate row would dominate."""
-    return scoped_cascade_values(section_context(spark), share_input=True)
+    """Kept name of the retired generated-projection scoped cascade: the
+    rules-as-data kernel is the one Spark cascade, so this face runs
+    scoped_cascade_values_rules like doc_u7_scoped_extraction (same
+    oracle)."""
+    return scoped_cascade_values_rules(section_context(spark))
 
 
 _SCALE_COPIES = 2500  # 4 fixture docs -> 10k documents
@@ -1332,7 +1149,7 @@ def doc_pipeline_scoped_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     clause-grounded mode (form_filler.py:101-115): blocks→clauses→J2 section
     context→scoped cascade over a 10k-document corpus, rolled up per form.
     Exercises the sessionization windows, the doc_id-co-partitioned context
-    join, and the guarded-hoisted cascade at data scale -- everything stays
+    join, and the rules-as-data cascade at data scale -- everything stays
     partitioned by doc_id, so the shape carries to 100 TB. Oracle = the
     fixture-scale scoped rollup times the copy count (replication is
     linear; see doc_pipeline_scaled for why the multiplier is also an
@@ -1409,8 +1226,8 @@ def doc_u1_label_scaffold_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     RLIKE on every corpus word (the claim every sectionization oracle
     leans on), and (b) the scaffold's row fidelity -- schema mapping,
     batching, no dropped/duplicated rows. Sharper than diffing the
-    downstream clauses: `key_words` ORs the secnum predicate into its
-    trigger anyway, so label errors would partially mask at clause
+    downstream clauses: the clause build ORs the secnum predicate into
+    its trigger anyway, so label errors would partially mask at clause
     level. Vacuity canary: EMPTY_SCAFFOLD marker if the mapInPandas
     side returns zero rows while the input has words."""
     from .strategies import classify_words

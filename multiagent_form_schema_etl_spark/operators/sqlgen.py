@@ -160,53 +160,6 @@ def cascade_value_sql(text: str, ftype: str, patterns: list[str],
     return "(CASE " + " ".join(whens) + f" ELSE {fallback} END)"
 
 
-def cascade_cols(text: str, ftype: str, patterns: list[str],
-                 keywords: list[str], prefix: str, engine: str
-                 ) -> tuple[list[tuple[str, str]], str, str | None]:
-    """Column-hoisted form of :func:`cascade_value_sql` for Spark's codegen.
-
-    Returns ``(cols, value_sql, any_pat_sql)`` where ``cols`` is a list of
-    ``(name, sql)`` intermediate extracts over ``text`` -- each regex runs
-    ONCE -- and ``value_sql`` / ``any_pat_sql`` reference only those column
-    names. Rendering the cascade inline duplicates every full-text
-    regexp_extract ~6x (parse_value repeats its argument; the method
-    expression re-extracts every pattern), which blew the generated class
-    past janino's limits and forced interpreted fallback (VERDICT r1 #4).
-    Split across two projections (extract cols, then cascade CASE over
-    them), every codegen unit stays small; CollapseProject keeps the
-    boundary because the aliases are non-cheap and multiply referenced.
-    Semantics are identical to cascade_value_sql by construction.
-    """
-    for p in patterns:
-        assert re.search(r"\(\?:", p) or "(" in p, f"pattern has no group: {p}"
-    cols: list[tuple[str, str]] = []
-    whens = []
-    pat_cols = []
-    for i, p in enumerate(patterns):
-        jp = "(?is)" + p
-        c = f"{prefix}_p{i}"
-        cols.append((c, f"NULLIF({rext(text, jp, 1, engine)}, '')"))
-        pat_cols.append(c)
-        whens.append(f"WHEN {c} IS NOT NULL THEN {parse_value_sql(c, ftype, engine)}")
-    kw_exprs = []
-    for ki, kw in enumerate(keywords):
-        kw_whens = []
-        for si, kp in enumerate(keyword_patterns(kw)):
-            jp = "(?i)" + kp
-            c = f"{prefix}_k{ki}_{si}"
-            cols.append((c, f"trim({rext(text, jp, 1, engine)})"))
-            ok = f"({c} <> '' AND lower({c}) <> 'n/a')"
-            kw_whens.append(f"WHEN {ok} THEN {parse_value_sql(c, ftype, engine)}")
-        kw_exprs.append("(CASE " + " ".join(kw_whens) + " END)")
-    fallback = ("COALESCE(" + ", ".join(kw_exprs + [null_str(engine)]) + ")"
-                if kw_exprs else null_str(engine))
-    value = (fallback if not whens
-             else "(CASE " + " ".join(whens) + f" ELSE {fallback} END)")
-    any_pat = ("(" + " OR ".join(f"{c} IS NOT NULL" for c in pat_cols) + ")"
-               if pat_cols else None)
-    return cols, value, any_pat
-
-
 def cascade_method_sql(text: str, value_sql: str, patterns: list[str],
                        keywords: list[str], engine: str) -> str:
     """Which cascade branch decided the field: 'regex' when any schema

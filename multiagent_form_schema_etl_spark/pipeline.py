@@ -7,8 +7,10 @@ blocks/doc-form/schema inputs -- fixtures are only a default used by the
 oracle-checked queries.
 
 Schemas are late-bound data: pass either fixture-style rows or a directory
-of JSON schema files (sources.schemas). They compile into generated Column
-expressions at plan-build time (driver-side, KBs), never interpreted per row.
+of JSON schema files (sources.schemas). They become a broadcast table of
+cascade rules (one row per pattern or keyword try, KBs) that one generic
+extraction kernel applies, so a new form or field changes data, not the
+compiled plan.
 
 Typical use::
 
@@ -61,7 +63,7 @@ class DocumentPipeline:
         rows = (load_schemas(spark, schema_dir)
                 .limit(MAX_SCHEMA_FIELD_ROWS + 1).collect())
         if len(rows) > MAX_SCHEMA_FIELD_ROWS:
-            # schemas are compiled into plan-time expressions; a mis-pointed
+            # schemas are collected into driver-side rule tables; a mis-pointed
             # directory (e.g. a data lake path) would OOM the driver here
             raise ValueError(
                 f"schema_dir {schema_dir!r} holds more than "

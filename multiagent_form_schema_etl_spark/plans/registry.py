@@ -25,7 +25,7 @@ ORACLES: dict[str, str] = {}
 # (1) repeat executions reuse the already-analyzed plan (Catalyst analysis
 # of generated lineages is a driver-side constant worth paying once) --
 # the semantics a long-lived cluster session gives a standing query;
-# (2) queries that persist() a shared sub-relation (the hoisted-strategy
+# (2) queries that persist() a shared sub-relation (the scaled
 # document pipelines) would otherwise register a NEW cached relation per
 # invocation -- CacheManager does not canonicalize them equal -- so a
 # cold+warm bench pass piled up duplicate 10k-doc caches and the warm
@@ -47,7 +47,7 @@ _MEMO: dict[int, tuple["weakref.ref[SparkSession]", dict]] = {}
 # sub-relation it persists through track_persist(); the handles land in
 # the builder's memo entry so snapshot eviction / invalidate() can release
 # them deterministically (ADVICE r3: unpersisting only the top-level
-# DataFrame orphaned the hoisted pipelines' shared caches on refresh).
+# DataFrame orphaned the scaled pipelines' shared caches on refresh).
 # A plain list works as a stack because builds are driver-side and
 # single-threaded per call chain; nested memoized builds each push their
 # own frame, so an inner builder's persists belong to the inner entry.

@@ -7,6 +7,8 @@ import json
 import glob
 import os
 
+import pytest
+
 from multiagent_form_schema_etl_spark.__main__ import main
 
 
@@ -42,6 +44,35 @@ def test_cli_pipeline_releases_its_stage_boundary(spark, tmp_path):
                        spark.read.parquet(doc_forms))
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.lookupCachedData(ext._jdf).isEmpty()
+
+
+def test_cli_scoped_pipeline_persists_nothing(spark, tmp_path):
+    """Scoped mode leaves no persisted RDD behind after the command: its
+    cascade runs over the unpersisted section context."""
+    sc = spark.sparkContext._jsc.sc()
+    base = sc.getPersistentRDDs().size()
+    assert main(["pipeline", "--mode", "scoped",
+                 "--out", str(tmp_path / "out")]) == 0
+    assert sc.getPersistentRDDs().size() == base
+
+
+@pytest.mark.parametrize("mode", ["fulltext", "scoped"])
+def test_cli_pipeline_honours_schema_dir(spark, tmp_path, mode):
+    """``--schema-dir`` drives the extracted fields in both modes: a
+    one-field NDA schema yields that field only, not the fixture schema's
+    NDA fields."""
+    from multiagent_form_schema_etl_spark.sources import schemas as sch
+
+    schema_dir = str(tmp_path / "schemas")
+    row = ("NDA_Form", "law_only", "string", "Governing", False,
+           ["governed by"], None, None, None, None, None, None, None)
+    sch.save_schema(sch.schema_rows_to_json([row], "NDA_Form"), schema_dir)
+    out = str(tmp_path / "out")
+    assert main(["pipeline", "--mode", mode, "--schema-dir", schema_dir,
+                 "--form", "NDA_Form", "--out", out]) == 0
+    [jf] = glob.glob(os.path.join(out, "forms_json", "part-*.json"))
+    rows = [json.loads(line) for line in open(jf)]
+    assert rows and {r["field_name"] for r in rows} == {"law_only"}
 
 
 def test_cli_pipeline_scoped_mode_and_form_filter(spark, tmp_path):

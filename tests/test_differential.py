@@ -12,6 +12,8 @@ import random
 import re
 import time
 
+import pytest
+
 
 # --- independent python model (spec re-derivation, not a code port) ---------
 
@@ -427,33 +429,23 @@ def test_min_label_components_chain_graph(spark):
     assert all(comp[i] == i for i in range(10, 13))
 
 
-def test_scoped_cascade_strategies_equal(spark):
-    """The rules-as-data scoped cascade and the generated-projection
-    strategy are the same operator: identical (doc, form, field, value)
-    rows on the fixture corpus. Guards the constant-size-plan rewrite
-    against semantic drift from the compiled path (both already share one
-    DuckDB oracle; this pins them to each other without the gate)."""
-    from multiagent_form_schema_etl_spark.operators.document import (
-        scoped_cascade_values, scoped_cascade_values_rules, section_context)
+@pytest.mark.parametrize("name", ["doc_u7_extraction_cascade",
+                                  "doc_u7_scoped_extraction"])
+def test_cascade_matches_its_duckdb_oracle(spark, name):
+    """The Spark extraction cascade (rules-as-data, full-text and scoped)
+    emits exactly its face's DuckDB oracle rows on the fixture corpus: one
+    row per (doc, schema field), values and cascade method included. The
+    oracle renders each field's cascade as generated SQL
+    (sqlgen.cascade_value_sql), an independent implementation."""
+    import duckdb
 
-    scoped = section_context(spark)
-    hoisted = sorted(map(tuple, scoped_cascade_values(scoped).collect()))
-    rules = sorted(map(tuple, scoped_cascade_values_rules(scoped).collect()))
-    assert hoisted == rules
-    assert len(rules) == 24  # one row per (doc, field), fixture corpus
+    from multiagent_form_schema_etl_spark.plans import registry
 
-
-def test_fulltext_cascade_strategies_equal(spark):
-    """Rules-as-data and generated-projection full-text cascades emit
-    identical (doc, form, field, value, method) rows on the fixture
-    corpus."""
-    from multiagent_form_schema_etl_spark.operators.document import (
-        extraction_df, extraction_df_hoisted)
-
-    rules = sorted(map(tuple, extraction_df(spark).collect()))
-    hoisted = sorted(map(tuple, extraction_df_hoisted(spark).collect()))
-    assert rules == hoisted
-    assert len(rules) == 24
+    registry.load_all_modules()
+    got = sorted(map(tuple, registry.QUERIES[name](spark, None).collect()))
+    want = sorted(duckdb.connect().execute(registry.ORACLES[name]).fetchall())
+    assert got == want
+    assert len(got) == 24
 
 
 def test_pagerank_components_drops_foreign_edge_endpoints(spark):

@@ -63,29 +63,33 @@ def test_regex_translation_rewrites_named_groups():
 def test_sessionization_invariants(spark):
     """Every content word lands in at most one clause; clause keys are
     exactly the extracted section keys; clause word multiset == appended
-    content words (layout_structure.py:138-174 invariants)."""
+    content words (layout_structure.py:138-174 invariants). The keyed
+    words come from the DuckDB oracle chain (CTE ``cur``), so Spark's
+    clause build is checked against an independent sessionization."""
+    import duckdb
     from pyspark.sql import functions as F
 
     from multiagent_form_schema_etl_spark.operators.document import (
+        _CTES,
         clauses_df,
-        keyed_words_df,
     )
 
-    k = keyed_words_df(spark).cache()
+    con = duckdb.connect()
+    [(n_content_words,)] = con.sql(f"""{_CTES}
+        SELECT COUNT(*) FROM cur
+        WHERE NOT trig AND lower(label) IN ('paragraph', 'list_item')
+          AND cur_key IS NOT NULL""").fetchall()
+    keys_from_words = set(con.sql(f"""{_CTES}
+        SELECT DISTINCT doc_id, new_key FROM cur
+        WHERE new_key IS NOT NULL""").fetchall())
+    con.close()
+
     clauses = clauses_df(spark)
-    content = k.filter(
-        (~F.col("trig"))
-        & F.lower("label").isin("paragraph", "list_item")
-        & F.col("cur_key").isNotNull())
-    n_content_words = content.count()
     n_clause_words = (clauses.filter(F.col("clause_text") != "")
                       .select(F.explode(F.split("clause_text", " ")).alias("w"))
                       .count())
+    assert n_content_words > 0
     assert n_content_words == n_clause_words
-
-    keys_from_words = {(r["doc_id"], r["new_key"])
-                       for r in k.filter(F.col("new_key").isNotNull())
-                       .select("doc_id", "new_key").distinct().collect()}
     keys_from_clauses = {(r["doc_id"], r["section_key"])
                          for r in clauses.select("doc_id", "section_key").collect()}
     assert keys_from_words == keys_from_clauses
