@@ -1,14 +1,21 @@
 """X2 -- similarity search over ``embeddings`` (SURVEY.md §2.11).
 
 Three tiers:
-- exact top-k for a bounded query set, oracle-checked. Dot products
-  accumulate through DECIMAL so Spark and DuckDB agree bit-for-bit (FP sums
-  are order-dependent; decimal sums aren't), making ranking deterministic.
-- brute-force all-pairs cosine via zip_with/aggregate -- the JVM-side
-  vectorized path used at bench scale (no explode blow-up, one self-join).
-- LSH-bucketed ANN (random hyperplane signs) -- the 100 TB path: candidates
-  come from a bucket join instead of the full cross product. Spark-only
-  hashing → rows-only check.
+- exact query-set top-k (`_query_topk`, the one kernel behind every exact
+  top-k face): the bounded query side broadcasts against the corpus and
+  each pair's cosine is the JVM double fold (`_cos_expr`) ROUNDED at 9 dp
+  before ranking, ties on match_id. The fold differs from the oracle's
+  decimal SUM by ~1e-15, three orders below the rounding grain, and the
+  gate's boundary audit (tools/check.py) fails any corpus whose compared
+  cells sit within 5e-15 of a rounding edge.
+- exact all-pairs near-dup and kNN: a block-GEMM double sieve
+  (`_gemm_block_pairs`), then the DECIMAL fold (`_dec_dot`) verifies the
+  surviving pairs -- decimal sums are order-independent, so Spark and
+  DuckDB agree bit-for-bit on every value a threshold or rank reads.
+- ANN candidates (LSH buckets, one IVF quantizer, PQ codes, a kNN graph)
+  -- the 100 TB path: candidates come from an index join instead of the
+  full cross product, then the same rounded emission (`_ranked`) as the
+  exact kernel.
 """
 
 from __future__ import annotations
@@ -55,11 +62,13 @@ def _dec_norm(v: str | F.Column) -> F.Column:
     return F.sqrt(_dec_fold(F.transform(v, lambda x: (x * x).cast(_DEC_ITEM))))
 
 
-# Shared by the decimal-exact face and the GEMM face: top-k over cosines
+# Shared by every query-set top-k face, exact and ANN: top-k over cosines
 # ROUNDED at 9 dp (rounding happens BEFORE ranking on both engines, ties
-# break on match_id), which is what makes the float64-GEMM compute path
+# break on match_id), which is what makes the double-fold compute path
 # hash-equal to the decimal-stated SQL -- fp fold-order divergence is
-# ~1e-15, three orders below the rounding grain (VERDICT r7 item 5).
+# ~1e-15, three orders below the rounding grain (VERDICT r7 item 5), and
+# the gate's boundary audit (topk_cells) fails any corpus that puts a
+# compared cell within 5e-15 of a rounding edge.
 _COS_TOPK_ORACLE = f"""
     WITH e AS (
       SELECT vec_id,
@@ -88,50 +97,21 @@ _COS_TOPK_ORACLE = f"""
     """
 
 
-@register("x2_cosine_topk", oracle=_COS_TOPK_ORACLE)
-def x2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k for a 10-vector query set (oracle variant).
+def _vectors(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
+    """(vec_id, *extra, vec): the embeddings with `vec` cast to double."""
+    return (load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", *extra,
+                    F.transform("embedding", lambda x: x.cast("double"))
+                    .alias("vec")))
 
-    The oracle states the dots as explode → dim-join → SUM; the Spark plan
-    keeps arrays packed and computes the identical decimal values with the
-    `_dec_dot` fold over a broadcast pair join (the query side is 10 rows),
-    so the corpus side is one narrow pass -- no explode, no dim-key
-    shuffle. Ranking ties break on match_id."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    norms = emb.select("vec_id", _dec_norm("vec").alias("nrm"))
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
-    # Match-side norm FUSED into the corpus projection (r15, VERDICT r14
-    # item 5): the old shape scanned the corpus a second time for a
-    # norms relation and re-attached it with a size-gated join; `nb` is a
-    # pure function of the match row, so computing it in the same
-    # projection that feeds the pair join removes one corpus scan + one
-    # corpus-sized join while keeping decimal semantics bit-equal (same
-    # `_dec_norm` fold over the same vec, same ROUND site). The b-side
-    # Project sits below the nested-loop join, so the fold runs once per
-    # corpus row, not once per (query, match) pair.
-    b = emb.select(F.col("vec_id").alias("match_id"), F.col("vec").alias("mv"),
-                   _dec_norm("vec").alias("nb"))
-    dots = (F.broadcast(q).join(b, F.col("query_id") != F.col("match_id"))
-            .select("query_id", "match_id",
-                    _dec_dot("qv", "mv").alias("dot"), "nb"))
-    # Query-side norms: only the _N_QUERIES query vectors' norms are ever
-    # read, so filter BEFORE the decimal-fold projection (r14, guide §5
-    # "don't compute things you throw away") -- the vec_id predicate pushes
-    # to the parquet scan and the na branch folds 10 vectors instead of the
-    # corpus. Bounded by _N_QUERIES => raw broadcast hint is safe.
-    na = (norms.filter(F.col("vec_id") < _N_QUERIES)
-          .select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("na")))
-    cos = (dots.join(F.broadcast(na), "query_id")
-           .select("query_id", "match_id",
-                   F.round(F.col("dot") / (F.col("na") * F.col("nb")), 9)
-                    .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+
+def _unit(emb: DataFrame) -> DataFrame:
+    """Adds `vecn`, the L2-normalized `vec` (NULL elements for a zero
+    vector)."""
+    nrm = F.sqrt(F.aggregate(F.transform("vec", lambda x: x * x),
+                             F.lit(0.0), lambda a, x: a + x))
+    return emb.withColumn(
+        "vecn", F.transform("vec", lambda x: x / F.nullif(nrm, F.lit(0.0))))
 
 
 def _cos_expr(a: str, b: str) -> F.Column:
@@ -144,6 +124,63 @@ def _cos_expr(a: str, b: str) -> F.Column:
     nb = F.sqrt(F.aggregate(F.zip_with(b, b, lambda x, y: x * y),
                             F.lit(0.0), lambda acc, x: acc + x))
     return dot / (na * nb)
+
+
+def _top_k(df: DataFrame, by: str | list[str], k: int, *order: F.Column
+           ) -> DataFrame:
+    """The rows ranked 1..k within each `by` group under `order` (callers
+    end it on a unique key, so the ranking is total and both engines pick
+    the same rows); the rank is the long column `rnk`."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return (df.withColumn("rnk", F.row_number().over(w).cast("long"))
+            .filter(F.col("rnk") <= k))
+
+
+def _ranked(pairs: DataFrame, k: int = _TOP_K) -> DataFrame:
+    """The emission step of every query-set top-k face: (query_id,
+    match_id, qv, mv) candidate pairs -> (query_id, match_id, cosine, rnk)
+    with the double-fold cosine rounded at 9 dp and rnk <= k under
+    (cosine desc, match_id asc)."""
+    cos = pairs.select("query_id", "match_id",
+                       F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
+    return (_top_k(cos, "query_id", k, F.desc("cosine"), F.asc("match_id"))
+            .select("query_id", "match_id", "cosine", "rnk"))
+
+
+def _query_topk(emb: DataFrame, k: int, same_label: bool = False
+                ) -> DataFrame:
+    """Exact cosine top-k of the bounded query set (vec_id < _N_QUERIES)
+    against the whole corpus: the one pair join behind every exact
+    top-k face. `emb` carries (vec_id, vec), plus `label` when
+    `same_label` restricts each query's matches to its own label.
+
+    The query side is _N_QUERIES rows and broadcasts, so the corpus side
+    is one narrow pass with packed arrays -- no explode, no dim-key
+    shuffle. With `same_label` the label is an equi-key of that join (a
+    BroadcastHashJoin on qlabel = mlabel): the predicate prunes the
+    corpus side before pairing instead of filtering pairs afterwards."""
+    lab = ["label"] if same_label else []
+    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(c).alias("qlabel") for c in lab], F.col("vec").alias("qv"))
+    b = emb.select(F.col("vec_id").alias("match_id"),
+                   *[F.col(c).alias("mlabel") for c in lab],
+                   F.col("vec").alias("mv"))
+    cond = F.col("query_id") != F.col("match_id")
+    if same_label:
+        cond = (F.col("qlabel") == F.col("mlabel")) & cond
+    return _ranked(F.broadcast(q).join(b, cond), k)
+
+
+@register("x2_cosine_topk", oracle=_COS_TOPK_ORACLE)
+def x2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k for a 10-vector query set (`_query_topk`).
+
+    The oracle states the dots as explode -> dim-join -> decimal SUM; the
+    Spark plan keeps arrays packed and ranks the double-fold cosine
+    rounded at 9 dp, which equals the oracle's rounded value wherever
+    the boundary audit passes. Ranking ties break on match_id."""
+    return _query_topk(_vectors(spark, sf_dir), _TOP_K)
 
 
 _GEMM_BLOCK = 512  # vectors per block in the distributed block-GEMM sieve
@@ -253,27 +290,15 @@ def _gemm_block_pairs(emb: DataFrame, threshold: float | None = None,
 
 @register("x2_cosine_topk_bruteforce", oracle=_COS_TOPK_ORACLE)
 def x2_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-k across ALL vectors (bench-scale path): broadcast
-    self-join + zip_with/aggregate cosine, TakeOrdered top-k per query.
-    O(n^2 * d) FLOPs but zero explode -- arrays stay packed, whole-stage
-    codegen keeps the fold JVM-side.
+    """Brute-force top-k across ALL vectors: the broadcast query-side pair
+    join with the zip_with/aggregate double fold (`_query_topk`). O(n * d)
+    FLOPs per query with zero explode -- arrays stay packed and
+    whole-stage codegen keeps the fold JVM-side.
 
-    Oracle-backed since r8 (the same rounding argument as the GEMM face):
-    cosines round at 9 dp BEFORE the top-k cut with ties on match_id --
-    the sequential JVM double fold diverges from the oracle's decimal SUM
-    by ~1e-15, three orders below the grain."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    q = emb.filter(F.col("vec_id") < _N_QUERIES)
-    a = q.select(F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
-    b = emb.select(F.col("vec_id").alias("match_id"), F.col("vec").alias("mv"))
-    pairs = F.broadcast(a).crossJoin(b).filter(F.col("match_id") != F.col("query_id"))
-    cos = pairs.select("query_id", "match_id",
-                       F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K))
+    Oracle-backed since r8: cosines round at 9 dp BEFORE the top-k cut
+    with ties on match_id -- the sequential JVM double fold diverges from
+    the oracle's decimal SUM by ~1e-15, three orders below the grain."""
+    return _query_topk(_vectors(spark, sf_dir), _TOP_K)
 
 
 _RERANK_K = 3      # survivors per query after the hybrid rescoring pass
@@ -378,78 +403,21 @@ def x2_rerank_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "match_id",
         F.round(F.lit(_RERANK_ALPHA) * F.col("cosine")
                 + F.lit(1 - _RERANK_ALPHA) * lex, 9).alias("hybrid"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("hybrid"),
-                                               F.asc("match_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _RERANK_K))
+    return _top_k(scored, "query_id", _RERANK_K, F.desc("hybrid"),
+                  F.asc("match_id"))
 
 
 @register("x2_cosine_topk_gemm", oracle=_COS_TOPK_ORACLE)
 def x2_cosine_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact top-k via Arrow-batched numpy GEMM -- the kernel a
-    100 TB bucket-rerank actually wants.
-
-    The zip_with/aggregate fold (`x2_cosine_topk_bruteforce`) evaluates one
-    scalar expression per (pair, dim); a matrix multiply against the whole
-    Arrow batch amortizes that into one BLAS call per batch:
-    ``scores = batch_matrix @ Q.T`` where Q is the L2-normalized query
-    matrix (10 x 64, riding the task closure -- small enough that a
-    broadcast variable would be overkill). Per batch, each query keeps a
-    local top-k under the FINAL ordering (cosine desc, match_id asc), so
-    the global window over the union of local winners is exact, and only
-    k rows per (query, batch) ever reach the shuffle.
-
-    Cosines are rounded at 9 dp BEFORE the top-k cut and ties break on
-    match_id -- which is exactly the shared `_COS_TOPK_ORACLE` statement,
-    so despite BLAS fp64 accumulation order differing from a SQL SUM the
-    face is ORACLE-BACKED (r8, VERDICT r7 item 5): the fold-order
-    divergence (~1e-15 on unit-normalized 64-dim vectors) sits three
-    orders below the 1e-9 rounding grain. Rank agreement with the
-    decimal-exact `x2_cosine_topk` is additionally pinned in pytest
-    (test_ann_recall.py)."""
-    import numpy as np
-    import pandas as pd
-
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    qrows = (emb.filter(F.col("vec_id") < _N_QUERIES)
-             .orderBy("vec_id").collect())  # 10 x 64 -- driver-side by design
-    q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.vec for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0  # zero vectors score 0, never NaN (ADVICE r8)
-    qm /= qn
-    top_k = _TOP_K
-
-    def gemm_topk(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0  # same guard as _gemm_block_pairs (ADVICE r8)
-            m /= n
-            scores = np.round(m @ qm.T, 9)  # (batch, n_queries)
-            out_q, out_m, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j]
-                mask = ids != qid
-                cand_ids, cand_cos = ids[mask], col[mask]
-                # local top-k under the exact final ordering
-                order = np.lexsort((cand_ids, -cand_cos))[:top_k]
-                out_q.extend([qid] * len(order))
-                out_m.extend(cand_ids[order])
-                out_c.extend(cand_cos[order])
-            yield pd.DataFrame({"query_id": np.array(out_q, dtype=np.int64),
-                                "match_id": np.array(out_m, dtype=np.int64),
-                                "cosine": np.array(out_c, dtype=np.float64)})
-
-    local = emb.mapInPandas(
-        gemm_topk, "query_id long, match_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (local.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+    """Exact top-k under the BLAS face name, run by the one exact kernel
+    (`_query_topk`). Its former per-batch numpy GEMM against the
+    collected query matrix read 0.29 s warm but 1.89 s cold in
+    BENCH_r15.json (sf0.1, local[32]; the double fold: 0.59 s / 0.93 s),
+    and it needed a driver-side query collect and Python workers; the
+    fold needs neither. BLAS stays
+    where the pair count is quadratic: the all-pairs block sieve
+    (`_gemm_block_pairs`)."""
+    return _query_topk(_vectors(spark, sf_dir), _TOP_K)
 
 
 # Shared by the exact all-pairs face and the IVF-bucketed face: every
@@ -513,9 +481,7 @@ def x1_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle/rerank variant; the LSH/IVF/PQ paths are the at-scale
     candidates -- but the FLOPs run as BLAS over block pairs instead of
     Catalyst scalar expressions over every (pair, dim)."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
+    emb = _vectors(spark, sf_dir)
     norms = emb.select("vec_id", _dec_norm("vec").alias("nrm"))
     # Double-precision sieve before the exact pass (r8: block-GEMM -- the
     # zip_with/aggregate pair sieve was the sweep's 167 s entry at sf0.1;
@@ -544,59 +510,75 @@ def x1_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("cosine") >= 0.45))
 
 
-_IVF_DEDUP_K = 8      # coarse-cell FLOOR for the bucketed near-dup path
+_IVF_CELLS = 8        # coarse-cell FLOOR of the one IVF quantizer
+_IVF_DEDUP_CELL = 250  # target vectors per cell, both IVF paths: K =
+#                        max(8, n // 250), so in-cell pair work
+#                        (n*probe)^2/(2K) stays LINEAR in n (fixed K
+#                        measured quadratic in the r4 scale probe)
 _IVF_DEDUP_PROBE = 4  # cells each vector lands in (multi-probe assignment;
 #                       3 measured 0.86/0.95 recall at sf0.01/0.1 -- boundary
 #                       pairs straddled >2 runner-up cells; 4 measures 1.0 at
 #                       both and the extra candidates only pay the cheap sieve)
-_IVF_DEDUP_CELL = 250  # target vectors per cell: K = max(8, n // 250), so
-#                        in-cell pair work (n*probe)^2/(2K) stays LINEAR in n
-#                        (fixed K measured quadratic in the r4 scale probe)
+_IVF_SEED = 7  # both IVF paths train with it, so they share one index
 
 
-def _ivf_dedup_cells(spark: SparkSession, sf_dir: str
-                     ) -> tuple[DataFrame, DataFrame]:
-    """Shared IVF coarse-quantization: returns (emb with vec/vecn,
-    cells(vec_id, cell)) -- the candidate generator the dedup operator
-    verifies and the scale probe measures directly."""
+def _ivf_k(spark: SparkSession, sf_dir: str) -> int:
+    """Cell count of the IVF quantizer: it scales with the corpus, and n
+    comes from the ~1 ms parquet-footer read (repo convention, VERDICT
+    r13 nit 2 -- no Spark job inside a build)."""
+    n = table_rowcount(spark, sf_dir, "embeddings")
+    return max(_IVF_CELLS, int(n) // _IVF_DEDUP_CELL)
+
+
+def _ivf_cells(emb: DataFrame, k: int, n_assign: int
+               ) -> tuple["np.ndarray", DataFrame]:
+    """The one IVF coarse quantizer, shared by the near-dup and the top-k
+    faces: seeded `_lloyd` over a bounded hash-ordered sample of the unit
+    vectors (`emb` carries vec_id and vecn; the collect is O(sample),
+    never O(corpus), and starts one Spark job), then every vector's
+    `n_assign` nearest cells. Returns (centroids, cells(vec_id, cell))."""
     import numpy as np
 
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    nrm = F.sqrt(F.aggregate(F.transform("vec", lambda x: x * x),
-                             F.lit(0.0), lambda a, x: a + x))
-    emb = emb.withColumn(
-        "vecn", F.transform("vec", lambda x: x / F.nullif(nrm, F.lit(0.0))))
-    # K scales with the corpus; n comes from the ~1 ms parquet-footer read
-    # (repo convention, VERDICT r13 nit 2 -- no Spark job inside a build).
-    n = table_rowcount(spark, sf_dir, "embeddings")
-    k = max(_IVF_DEDUP_K, int(n) // _IVF_DEDUP_CELL)
     sample = (emb.select("vecn").orderBy(F.xxhash64("vec_id"))
               .limit(max(_PQ_SAMPLE, 17 * k)).collect())
-    C = _lloyd(np.array([r["vecn"] for r in sample]), k, seed=7)
+    C = _lloyd(np.array([r["vecn"] for r in sample]), k, seed=_IVF_SEED)
+    return C, _nearest_cells(emb, C, n_assign)
 
-    probe = min(_IVF_DEDUP_PROBE, k)
+
+def _nearest_cells(emb: DataFrame, C: "np.ndarray", n: int) -> DataFrame:
+    """(vec_id, cell) for the min(n, K) centroids of C nearest each
+    `vecn`, ties -> lower cell id (stable argsort). One numpy Arrow
+    kernel instead of a K x dim literal tree, so plan size stays constant
+    as K grows with the corpus (same lesson as PQ-ADC)."""
+    import numpy as np
+
+    n = min(n, len(C))
+    c2 = (C * C).sum(axis=1)[None, :]
 
     def assign(batches):
-        # top-`probe` nearest centroids per vector, ties -> lower cell id
-        # (mergesort == stable, matching the old array_sort((d, i)) order);
-        # numpy kernel instead of a K x dim literal tree so plan size stays
-        # constant as K grows with the corpus (same lesson as PQ-ADC).
-        c2 = (C * C).sum(axis=1)[None, :]
         for pdf in batches:
             if not len(pdf):
                 continue
             Xb = np.nan_to_num(np.array(pdf["vecn"].tolist(),
                                         dtype=np.float64))
             d2 = (Xb * Xb).sum(axis=1)[:, None] - 2.0 * (Xb @ C.T) + c2
-            order = np.argsort(d2, axis=1, kind="stable")[:, :probe]
+            order = np.argsort(d2, axis=1, kind="stable")[:, :n]
             yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy().repeat(probe),
+                "vec_id": pdf["vec_id"].to_numpy().repeat(n),
                 "cell": order.reshape(-1).astype("int32")})
 
-    cells = emb.select("vec_id", "vecn").mapInPandas(
+    return emb.select("vec_id", "vecn").mapInPandas(
         assign, "vec_id bigint, cell int")
+
+
+def _ivf_dedup_cells(spark: SparkSession, sf_dir: str
+                     ) -> tuple[DataFrame, DataFrame]:
+    """The near-dup faces' IVF index: (emb with vec/vecn, cells(vec_id,
+    cell)) with each vector in its _IVF_DEDUP_PROBE nearest cells -- the
+    candidate generator the dedup operator verifies and the scale probe
+    measures directly."""
+    emb = _unit(_vectors(spark, sf_dir))
+    _, cells = _ivf_cells(emb, _ivf_k(spark, sf_dir), _IVF_DEDUP_PROBE)
     return emb, cells
 
 
@@ -905,11 +887,8 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
     a PRE-filter at the index level (the index is label-partitioned;
     at 100 TB that is partition pruning on the index relation), never a
     post-filter over an unfiltered candidate set."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id",
-                   *(["label"] if by_label else []),
-                   F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
+    key = ["label"] if by_label else []
+    emb = _vectors(spark, sf_dir, *key)
     # hyperplane h, dim i weight in {-1,+1} from xxhash64(h, i) parity --
     # ADAPTIVE planes per band (r4 scale probe): fixed 3-bit buckets hold
     # n/8 vectors each, so candidate volume is quadratic in n and the cap
@@ -924,17 +903,14 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
     # Unchanged at n <= 512 (the tested recall SFs).
     n = table_rowcount(spark, sf_dir, "embeddings")
     per_band = _lsh_per_band(n)
-    key = ["label"] if by_label else []
     sigs = emb.select("vec_id", *key, *_lsh_band_cols(per_band))
     buckets = sigs.select(
         "vec_id", *key,
         F.posexplode(F.array(*[F.col(f"band{b}")
                                for b in range(_LSH_SIM_BANDS)]))
          .alias("band", "bucket"))
-    wcap = (Window.partitionBy(*key, "band", "bucket")
-            .orderBy(F.xxhash64("vec_id"), F.asc("vec_id")))
-    capped = (buckets.withColumn("rn", F.row_number().over(wcap))
-              .filter(F.col("rn") <= _LSH_BUCKET_CAP)
+    capped = (_top_k(buckets, [*key, "band", "bucket"], _LSH_BUCKET_CAP,
+                     F.xxhash64("vec_id"), F.asc("vec_id"))
               .select("vec_id", *key, "band", "bucket"))
     # query side: own bucket + every Hamming<=_LSH_PROBE_HAMMING neighbor
     # (bit-flip XOR masks are a driver-side constant list of size
@@ -962,12 +938,18 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
             .filter(F.col("match_id") != F.col("query_id"))
             .select("query_id", "match_id")
             .dropDuplicates(["query_id", "match_id"]))
+    return _pair_vectors(cand, emb)
+
+
+def _pair_vectors(cand: DataFrame, emb: DataFrame) -> DataFrame:
+    """(query_id, match_id) candidates -> (query_id, match_id, qv, mv),
+    the input of `_ranked`. The candidate set is bounded (queries x
+    probes x bucket or cell size), so IT broadcasts, never the
+    corpus-sized vector relation (ADVICE r4)."""
     qv = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
     mv = emb.select(F.col("vec_id").alias("match_id"),
                     F.col("vec").alias("mv"))
-    # candidate set is bounded (queries x bands x probes x cap) =>
-    # broadcast IT, never the corpus-sized vector relation (ADVICE r4)
     return (F.broadcast(cand).join(mv, "match_id")
             .join(F.broadcast(qv), "query_id"))
 
@@ -999,26 +981,20 @@ def x2_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: the index is one narrow pass (4 buckets/vector), probes
     per query are O(log^3 n) buckets of ~constant expected size, so
     per-query work is polylog -- no all-pairs join anywhere."""
-    cand = _lsh_candidate_pairs(spark, sf_dir)
-    cos = cand.select("query_id", "match_id",
-                      F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K))
+    return _ranked(_lsh_candidate_pairs(spark, sf_dir))
 
 
-_IVF_CELLS = 8     # FLOOR; cells scale as max(8, n/250) like the dedup path
-_IVF_PROBES = 5    # query-side probe count: with 3-cell index assignment,
-#                    the gate-SF recall ladder (r9) reads
-#                    (probes, assign): (3,2) -> 0.92/0.90/0.92,
-#                    (5,2) -> 1.0/1.0/0.96, (5,3) -> 1.0/1.0/1.0 -- which
-#                    is what lets the face share the exact top-k oracle
-#                    as a standing recall == 1.0 assertion. probes and
+_IVF_PROBES = 5    # query-side probe count. Recall at sf0.001/0.01/0.1
+#                    with 3-cell index assignment on the shared `_ivf_cells`
+#                    quantizer: probes 2 -> 0.92/0.88/0.86, 3 -> 1.0/0.98/
+#                    0.94, 4 -> 1.0/1.0/0.98, 5 -> 1.0/1.0/1.0 (4916/4851/
+#                    19644 candidate pairs; the MLlib quantizer it replaced
+#                    read 1.0 at 5 with 4990/4974/19615) -- which is what
+#                    lets the face share the exact top-k oracle as a
+#                    standing recall == 1.0 assertion. probes and
 #                    assign are CONSTANTS, so the corpus fraction scanned
 #                    per query (probes*assign/K) falls as cells scale
 #                    with n
-
-
 _IVF_INDEX_ASSIGN = 3  # index-side soft assignment: each vector lands in
 #                        its 3 nearest cells (the trick that took the IVF
 #                        DEDUP path to recall 1.0), so a true neighbor
@@ -1031,94 +1007,53 @@ _IVF_INDEX_ASSIGN = 3  # index-side soft assignment: each vector lands in
 
 def _ivf_topk_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF candidate generation (pre-verification), shared by the
-    operator and the scale probe's candidate-volume measurement. Cell
-    count scales with the corpus (r4): fixed cells meant each probe
+    operator and the scale probe's candidate-volume measurement:
+    (query_id, match_id, qv, mv) for the bounded query set. The index is
+    the one quantizer (`_ivf_cells`, the near-dup faces' cells with
+    _IVF_INDEX_ASSIGN instead of _IVF_DEDUP_PROBE assignments); each
+    query's _IVF_PROBES nearest cells come from the same numpy kernel.
+    Cell count scales with the corpus (r4): fixed cells meant each probe
     scanned n/8 vectors -- linear per query but with a constant that
     defeats the index once n grows; n/250 cells keep per-probe work
     bounded while the bounded query side keeps total candidate volume
-    ~linear. r5: vectors are soft-assigned to their _IVF_INDEX_ASSIGN
-    nearest cells with one numpy Arrow kernel (constant plan size as K
-    grows, same lesson as PQ-ADC) instead of MLlib transform's single
-    nearest."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    feat = emb.withColumn("features", array_to_vector("vec"))
-    k = max(_IVF_CELLS, table_rowcount(spark, sf_dir, "embeddings") // 250)
-    km = KMeans(k=k, seed=42, maxIter=10).fit(feat)
-    C = np.array([[float(x) for x in c] for c in km.clusterCenters()])
-    n_assign = min(_IVF_INDEX_ASSIGN, k)
-
-    def assign(batches):
-        c2 = (C * C).sum(axis=1)[None, :]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Xb = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            d2 = (Xb * Xb).sum(axis=1)[:, None] - 2.0 * (Xb @ C.T) + c2
-            order = np.argsort(d2, axis=1, kind="stable")[:, :n_assign]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy().repeat(n_assign),
-                "cell": order.reshape(-1).astype("int32")})
-
-    cells = emb.mapInPandas(assign, "vec_id bigint, cell int")
-    assigned = emb.join(cells, "vec_id").select("vec_id", "vec", "cell")
-
-    # centroid table (tiny, broadcast) for query-side probe selection
-    centroids = local_df(
-        spark, [(i, [float(x) for x in c]) for i, c in enumerate(C)],
-        "cell int, centroid array<double>")
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
-    # distance of each query to each centroid -> keep nearest _IVF_PROBES
-    qc = (q.crossJoin(F.broadcast(centroids))
-          .withColumn("dist", F.sqrt(F.aggregate(
-              F.zip_with("qv", "centroid", lambda a, b: (a - b) * (a - b)),
-              F.lit(0.0), lambda acc, x: acc + x))))
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cell"))
-    probes = (qc.withColumn("pr", F.row_number().over(w))
-              .filter(F.col("pr") <= _IVF_PROBES)
-              .select("query_id", "qv", "cell"))
-    return (probes.join(assigned.select(F.col("vec_id").alias("match_id"),
-                                        F.col("vec").alias("mv"), "cell"),
-                        "cell")
+    ~linear."""
+    emb = _unit(_vectors(spark, sf_dir))
+    C, cells = _ivf_cells(emb, _ivf_k(spark, sf_dir), _IVF_INDEX_ASSIGN)
+    probes = _nearest_cells(emb.filter(F.col("vec_id") < _N_QUERIES), C,
+                            _IVF_PROBES).select(
+        F.col("vec_id").alias("query_id"), "cell")
+    cand = (F.broadcast(probes)
+            .join(cells.select(F.col("vec_id").alias("match_id"), "cell"),
+                  "cell")
             .filter(F.col("match_id") != F.col("query_id"))
+            .select("query_id", "match_id")
             # soft assignment can surface the same pair via two cells
             .dropDuplicates(["query_id", "match_id"]))
+    return _pair_vectors(cand, emb)
 
 
 @register("x2_ann_ivf_kmeans", oracle=_COS_TOPK_ORACLE)
 def x2_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: a KMeans coarse quantizer (seeded => deterministic
-    within Spark) partitions vectors into cells, soft-assigning each
-    vector to its ``_IVF_INDEX_ASSIGN`` nearest cells; each query probes
-    its nearest ``_IVF_PROBES`` cells and ranks candidates with the
-    packed-array cosine, ROUNDED at 9 dp (the engine's rounded-twin
-    policy, boundary-audited by the gate).
+    """IVF-style ANN: the seeded driver-side k-means quantizer
+    (`_ivf_cells`, deterministic) partitions vectors into cells,
+    soft-assigning each vector to its ``_IVF_INDEX_ASSIGN`` nearest
+    cells; each query probes its nearest ``_IVF_PROBES`` cells and ranks
+    candidates with the packed-array cosine, ROUNDED at 9 dp (the
+    engine's rounded-twin policy, boundary-audited by the gate).
 
-    Oracle-backed since r9 (VERDICT r8 item 8): the quantizer itself is
-    Spark-internal with no DuckDB twin, but the oracle only has to state
-    the OUTPUT -- at the committed (probes, assign) the candidate set
-    contains the true top-k at every gate SF (recall ladder at
-    _IVF_PROBES), so the face shares the exact top-k oracle and the gate
-    hash doubles as a recall == 1.0 assertion; the pytest floor keeps
-    guarding the contract on regenerated corpora.
+    Oracle-backed since r9 (VERDICT r8 item 8): the quantizer itself has
+    no DuckDB twin, but the oracle only has to state the OUTPUT -- at the
+    committed (probes, assign) the candidate set contains the true top-k
+    at every gate SF (recall ladder at _IVF_PROBES), so the face shares
+    the exact top-k oracle and the gate hash doubles as a recall == 1.0
+    assertion; the pytest floor keeps guarding the contract on
+    regenerated corpora.
 
     The 100 TB shape: the quantizer trains on a sample, assignment is one
     narrow Arrow-kernel pass, and the candidate join shuffles on cell id
     -- candidate volume is n_queries * (assign*probes/cells) * n_vectors
     instead of n^2."""
-    cand = _ivf_topk_candidates(spark, sf_dir)
-    cos = cand.select("query_id", "match_id",
-                      F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(wr).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+    return _ranked(_ivf_topk_candidates(spark, sf_dir))
 
 
 @register(
@@ -1147,14 +1082,12 @@ def x2_grouped_center_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFra
     9 dp (engine policy), which puts the numpy-pairwise vs SQL-sequential
     FP summation divergence (~1e-14 on 64-dim O(1) vectors) five orders
     below the rounding grain -- the same rounded-twin trick as the
-    pagerank star face and the GEMM top-k. Agreement with builtin
+    pagerank star face and the exact top-k kernel. Agreement with builtin
     DataFrame math stays pinned in test_properties.py."""
     import numpy as np
     import pandas as pd
 
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", "label",
-                   F.transform("embedding", lambda x: x.cast("double")).alias("vec")))
+    emb = _vectors(spark, sf_dir, "label")
 
     def center(pdf: pd.DataFrame) -> pd.DataFrame:
         m = np.stack(pdf["vec"].to_numpy())
@@ -1253,13 +1186,7 @@ def x2_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact top-k in tests."""
     import numpy as np
 
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    nrm = F.sqrt(F.aggregate(F.transform("vec", lambda x: x * x),
-                             F.lit(0.0), lambda a, x: a + x))
-    emb = emb.withColumn(
-        "vecn", F.transform("vec", lambda x: x / F.nullif(nrm, F.lit(0.0))))
+    emb = _unit(_vectors(spark, sf_dir))
 
     # Bounded deterministic pseudo-random sample to the driver (one top-k
     # job ordered by a hash of the key -- unbiased under sorted/clustered
@@ -1309,7 +1236,7 @@ def x2_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # top candidates per query under the SAME (approx_dist, vec_id)
         # total order the global shortlist uses, so batch-local pruning is
         # exact regardless of partitioning (any global top-R row is in its
-        # batch's top-R). Mirrors the x2_cosine_topk_gemm kernel shape.
+        # batch's top-R).
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1343,22 +1270,13 @@ def x2_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(int(vid), list(vec)) for vid, vec, _ in queries],
         "query_id bigint, qv array<double>")
 
-    wa = Window.partitionBy("query_id").orderBy(F.asc("approx_dist"),
-                                                F.asc("match_id"))
-    short = (cand.withColumn("ar", F.row_number().over(wa))
-             .filter(F.col("ar") <= _PQ_RERANK)
-             .join(F.broadcast(q), "query_id")
-             .select("query_id", "match_id", "qv", "mv"))
+    short = (_top_k(cand, "query_id", _PQ_RERANK, F.asc("approx_dist"),
+                    F.asc("match_id"))
+             .join(F.broadcast(q), "query_id"))
     # 9-dp rounding before the final rank: the rounded-twin policy that
     # makes the rerank hash-equal to the shared exact top-k oracle (see
     # _PQ_RERANK for the measured recall == 1.0 ladder, r9)
-    cos = short.select("query_id", "match_id",
-                       F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(wr).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+    return _ranked(short)
 
 
 _KNN_K = 3        # neighbors per vector in the graph
@@ -1408,14 +1326,10 @@ def x2_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 becomes one BLAS call per block pair). At 100 TB the candidate
     stage swaps for the LSH/IVF/PQ paths and the exact re-rank stays
     as-is."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
+    emb = _vectors(spark, sf_dir)
     norms = emb.select("vec_id", _dec_norm("vec").alias("nrm"))
     local = _gemm_block_pairs(emb, margin=_KNN_MARGIN)
-    ws = Window.partitionBy("src").orderBy(F.desc("dcos"), F.asc("dst"))
-    cand = (local.withColumn("crnk", F.row_number().over(ws))
-            .filter(F.col("crnk") <= _KNN_MARGIN)
+    cand = (_top_k(local, "src", _KNN_MARGIN, F.desc("dcos"), F.asc("dst"))
             .select("src", "dst"))
     va = emb.select(F.col("vec_id").alias("src"), F.col("vec").alias("va"))
     vb = emb.select(F.col("vec_id").alias("dst"), F.col("vec").alias("vb"))
@@ -1430,9 +1344,7 @@ def x2_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("src", "dst",
                    F.round(F.col("dot") / (F.col("na") * F.col("nb")), 9)
                     .alias("cosine")))
-    wr = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    return (cos.withColumn("rnk", F.row_number().over(wr).cast("long"))
-            .filter(F.col("rnk") <= _KNN_K)
+    return (_top_k(cos, "src", _KNN_K, F.desc("cosine"), F.asc("dst"))
             .select("src", "dst", "cosine", "rnk"))
 
 
@@ -1485,14 +1397,8 @@ _CORESET_BATCH = 4  # centers accepted per distributed pass (batched face)
 
 
 def _normalized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    nrm = F.sqrt(F.aggregate(F.transform("vec", lambda x: x * x),
-                             F.lit(0.0), lambda a, x: a + x))
-    return (emb.withColumn(
-        "vecn", F.transform("vec", lambda x: x / F.nullif(nrm, F.lit(0.0))))
-        .select("vec_id", "vecn").localCheckpoint())
+    return (_unit(_vectors(spark, sf_dir))
+            .select("vec_id", "vecn").localCheckpoint())
 
 
 def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str,
@@ -1823,9 +1729,8 @@ def _build_knn_adjacency(spark: SparkSession, emb: DataFrame,
                 .select("src", "dst", dot.alias("score")))
 
     def top_m(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
-        return (scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= _GRAPH_M)
+        return (_top_k(scored, "src", _GRAPH_M, F.desc("score"),
+                       F.asc("dst"))
                 .select("src", "dst", "score"))
 
     # 1. multi-seed hash-bucket init: within-bucket pairs under
@@ -2032,22 +1937,7 @@ def x2_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final ranking recomputes the ROUNDED cosine on the raw vectors in
     # one engine pass -- the IVF/PQ faces' emission contract, so ranks
     # and values are directly comparable across the whole ANN family
-    raw = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id",
-                   F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    qv = raw.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
-    mv = raw.select(F.col("vec_id").alias("match_id"),
-                    F.col("vec").alias("mv"))
-    cos = (pdf.join(F.broadcast(qv), "query_id").join(mv, "match_id")
-           .select("query_id", "match_id",
-                   F.round(_cos_expr("qv", "mv"), 9).alias("cosine")))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(wr).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+    return _ranked(_pair_vectors(pdf, _vectors(spark, sf_dir)))
 
 
 @register(
@@ -2064,7 +1954,7 @@ def x2_ann_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     x2_coreset_radius_bound recipe, prescribed by VERDICT r12 item 4):
     exact top-k equivalence is out -- the hash-seeded graph build has no
     SQL twin -- but the face's CONTRACT is checkable in-engine on every
-    sweep corpus: per-query recall@k vs the exact decimal-routed face
+    sweep corpus: per-query recall@k vs the exact top-k face
     (x2_cosine_topk) must keep its MINIMUM >= _GRAPH_RECALL_FLOOR and its
     MEAN >= _GRAPH_RECALL_MEAN_FLOOR (both floors committed with margin
     under the measured values -- see the constants' calibration note).
@@ -2120,7 +2010,7 @@ def x2_ann_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the production vector-search shape every serving stack exposes
 # ("nearest neighbors WHERE label = X"): retrieval corpora are filtered
 # by language / license / source / freshness before ranking. Two faces:
-# the exact decimal-routed reference (oracle-backed), and the pre-filter
+# the exact reference (oracle-backed), and the pre-filter
 # strategy note that makes it scale-honest: the predicate prunes the
 # corpus BEFORE any pairing, so at 100 TB the filter rides the parquet
 # scan (PushedFilters on the metadata column) and the pairing cost is
@@ -2167,48 +2057,17 @@ _FILTERED_ORACLE = f"""
 def x2_cosine_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact filtered top-k: each query's matches restricted to vectors
     sharing its LABEL (the metadata-predicate retrieval shape). Same
-    decimal-routed cosine + 9-dp rounded ranking as x2_cosine_topk; the
-    only plan difference is the label equi-condition in the pair join,
-    which is exactly where a 100 TB deploy wants it -- the predicate
-    prunes the corpus side BEFORE pairing (partition/scan pruning when
-    the corpus is label-partitioned, a join-key otherwise), so cost
-    follows the selected slice. Pre-filter, never post-filter: a
+    kernel as x2_cosine_topk (`_query_topk`: double-fold cosine rounded at
+    9 dp); the only plan difference is the label equi-key in the pair
+    join, which is exactly where a 100 TB deploy wants it -- the
+    predicate prunes the corpus side BEFORE pairing (partition/scan
+    pruning when the corpus is label-partitioned, a join-key otherwise),
+    so cost follows the selected slice. Pre-filter, never post-filter: a
     post-filtered unfiltered top-k under-fills k whenever the predicate
     is selective (here labels are ~10% of the corpus each -- an
     unfiltered top-5 usually contains ZERO label matches)."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", "label",
-                   F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    norms = emb.select("vec_id", _dec_norm("vec").alias("nrm"))
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("qlabel"),
-        F.col("vec").alias("qv"))
-    # match-side norm fused into the corpus projection -- one corpus scan
-    # and no corpus-sized norm join (r15; see x2_cosine_topk)
-    b = emb.select(F.col("vec_id").alias("match_id"),
-                   F.col("label").alias("mlabel"), F.col("vec").alias("mv"),
-                   _dec_norm("vec").alias("nb"))
-    dots = (F.broadcast(q).join(
-                b, (F.col("qlabel") == F.col("mlabel"))
-                & (F.col("query_id") != F.col("match_id")))
-            .select("query_id", "match_id",
-                    _dec_dot("qv", "mv").alias("dot"), "nb"))
-    # query-side norms: filter to the bounded query set BEFORE the decimal
-    # norm fold (r14, guide §5 -- same prune as x2_cosine_topk; the vec_id
-    # predicate reaches the parquet scan and the branch folds 10 vectors)
-    na = (norms.filter(F.col("vec_id") < _N_QUERIES)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("nrm").alias("na")))
-    cos = (dots.join(F.broadcast(na), "query_id")
-           .select("query_id", "match_id",
-                   F.round(F.col("dot") / (F.col("na") * F.col("nb")), 9)
-                    .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+    return _query_topk(_vectors(spark, sf_dir, "label"), _TOP_K,
+                       same_label=True)
 
 
 @register("x2_ann_lsh_filtered", oracle=_FILTERED_ORACLE)
@@ -2232,14 +2091,7 @@ def x2_ann_lsh_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing recall == 1.0 assertion, with the loud approximate-face
     diagnostic naming a recall shortfall if a regenerated corpus breaks
     the margin; the pytest floor (0.8) guards the contract."""
-    cand = _lsh_candidate_pairs(spark, sf_dir, by_label=True)
-    cos = cand.select("query_id", "match_id",
-                      F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("match_id"))
-    return (cos.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _TOP_K)
-            .select("query_id", "match_id", "cosine", "rnk"))
+    return _ranked(_lsh_candidate_pairs(spark, sf_dir, by_label=True))
 
 
 # ---------------------------------------------------------------------------
@@ -2250,10 +2102,13 @@ def x2_ann_lsh_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emitted set trades relevance against redundancy. VERDICT r13 item 2.
 #
 # Float contract (the st_stateful_threshold_batches recipe, adapted):
-# every similarity entering a DECISION is the decimal-routed cosine
-# ROUNDED at 9 dp -- identical doubles on both engines -- and the greedy
-# score lambda*qsim - (1-lambda)*max(psim) is one multiply/subtract over
-# those identical doubles with LITERAL lambda constants (0.7/0.3 are
+# every similarity entering a DECISION is a cosine ROUNDED at 9 dp. The
+# pool's qsim is the exact top-k kernel's double fold, equal to the
+# oracle's rounded decimal value wherever the boundary audit (mmr_cells,
+# over qsim_raw and psim_raw) passes; the pairwise psim is the decimal
+# fold, bit-identical by construction. The greedy score
+# lambda*qsim - (1-lambda)*max(psim) is one multiply/subtract over those
+# identical doubles with LITERAL lambda constants (0.7/0.3 are
 # independent literals on both sides: 1.0 - 0.7 != 0.3 in binary, so the
 # complement is never computed at runtime). Selection and emitted scores
 # are therefore bit-identical; ties break (score desc, cand_id asc) via
@@ -2401,49 +2256,25 @@ def x2_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, match_id, qsim, mmr, rnk), rnk <= {_TOP_K}.
 
     100 TB shape: only the CANDIDATE stage touches the corpus (here the
-    exact decimal face for oracle-comparability; a deploy swaps in any
-    ANN sibling -- same emission contract), after which everything is
-    bounded by |Q| * pool: the pairwise-cosine stage joins the broadcast
-    candidate list back to the corpus twice (two narrow id-probe passes,
-    pool^2 rows out), and the greedy loop runs per-query in one
-    cogrouped Arrow batch -- no corpus data ever reaches the driver. The
+    exact top-k kernel `_query_topk` for oracle-comparability; a deploy
+    swaps in any ANN sibling -- same emission contract), after which
+    everything is bounded by |Q| * pool: the pairwise-cosine stage joins
+    the broadcast candidate list back to the corpus twice (two narrow
+    id-probe passes, pool^2 rows out), and the greedy loop runs per-query
+    in one cogrouped Arrow batch -- no corpus data ever reaches the
+    driver. The
     oracle steps the identical greedy selection as a recursive CTE over
     the same rounded cosines (see the float contract above)."""
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id",
-                   F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("vec")))
-    norms = emb.select("vec_id", _dec_norm("vec").alias("nrm"))
-
+    emb = _vectors(spark, sf_dir)
     # stage 1: candidate pool = exact rounded-cosine top-C per query.
-    # Match-side norm fused into the corpus projection -- one corpus scan,
-    # no corpus-sized norm join (r15; see x2_cosine_topk).
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
-    b = emb.select(F.col("vec_id").alias("match_id"),
-                   F.col("vec").alias("mv"), _dec_norm("vec").alias("nb"))
-    dots = (F.broadcast(q).join(b, F.col("query_id") != F.col("match_id"))
-            .select("query_id", "match_id",
-                    _dec_dot("qv", "mv").alias("dot"), "nb"))
-    # query-side norms pruned to the bounded query set before the decimal
-    # fold (r14, guide §5 -- the x2_cosine_topk prune)
-    na = (norms.filter(F.col("vec_id") < _N_QUERIES)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("nrm").alias("na")))
-    cos = (dots.join(F.broadcast(na), "query_id")
-           .select("query_id", "match_id",
-                   F.round(F.col("dot") / (F.col("na") * F.col("nb")), 9)
-                   .alias("qsim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("qsim"),
-                                               F.asc("match_id"))
     # cands is |Q| x pool rows and fans out FOUR ways (ca, cb, cand_ids,
     # the stage-3 cogroup); unpersisted, every reference re-evaluated the
-    # corpus-wide stage-1 dot/window lineage (ADVICE r14). Persist the
+    # corpus-wide stage-1 pair join and window (ADVICE r14). Persist the
     # bounded relation so stage 1 touches the corpus exactly once.
     cands = track_persist(
-        cos.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _MMR_POOL)
-        .select("query_id", F.col("match_id").alias("cand_id"), "qsim"))
+        _query_topk(emb, _MMR_POOL)
+        .select("query_id", F.col("match_id").alias("cand_id"),
+                F.col("cosine").alias("qsim")))
 
     # stage 2: pairwise cosines WITHIN each pool -- |Q|*C^2 rows. The
     # corpus is touched by ONE candidate-bounded id-probe join that
@@ -2655,7 +2486,7 @@ def x2_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Float discipline: per-dim sums, centroid dot/norms, and the L2 shift
     all accumulate through DECIMAL(38,20) exactly like the decimal
-    cosine anchor (`x2_cosine_topk`), so both engines compute identical
+    pair verification (`_dec_dot`), so both engines compute identical
     doubles; the only cross-engine surface is the final ROUND 9dp, audited
     via the `emb_drift_cells` exposure."""
     emb = load_table(spark, sf_dir, "embeddings")

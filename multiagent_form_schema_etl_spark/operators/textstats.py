@@ -967,7 +967,7 @@ def x4_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching doc, which makes its final window per-query-partitioned over
     a potentially corpus-sized relation (3 partitions, each unbounded);
     this face truncates to k={_BM25_TOPK} with the two-phase top-k idiom
-    (`x2_cosine_topk_gemm`'s local-winners shape, expressed JVM-side):
+    (local winners per partition, then one global cut):
 
     1. LOCAL top-k: a window over (query_id, spark_partition_id()) keeps
        at most k rows per (query, partition). The shuffle key carries the

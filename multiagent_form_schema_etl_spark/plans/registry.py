@@ -58,11 +58,33 @@ def track_persist(df: DataFrame) -> DataFrame:
     """persist() a sub-relation and register the handle with the memo
     entry of the builder currently executing (no-op registration when
     called outside a registered build -- the caller then owns the
-    handle, as before)."""
+    handle, as before).
+
+    Spark's CacheManager is shared by every session of the application
+    and matches equal plans, so a relation another build already cached
+    is read from that entry: it is neither persisted again nor
+    registered, and releasing this build can never drop the entry its
+    owner still relies on. If the owner releases first, this build's
+    plan recomputes the relation -- slower, never wrong."""
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    if not cache.lookupCachedData(df._jdf).isEmpty():
+        return df
     df = df.persist()
     if _HANDLE_STACK:
         _HANDLE_STACK[-1].append(df)
     return df
+
+
+def _release(df: DataFrame, handles: tuple | list) -> None:
+    """Unpersist a memo entry's own caches: its tracked handles, and the
+    built DataFrame itself only if that object was persisted (an
+    unpersist() on an unpersisted DataFrame still uncaches any EQUAL
+    plan, which may be another session's entry)."""
+    for h in ([df] if df.is_cached else []) + list(handles):
+        try:
+            h.unpersist()
+        except Exception:
+            pass
 
 
 def _snapshot(sf_dir: str) -> tuple:
@@ -106,11 +128,7 @@ def invalidate(spark: SparkSession | None = None) -> None:
         if spark is not None and s is not spark:
             continue
         for _snap, df, handles in per.values():
-            for h in (df, *handles):
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
+            _release(df, handles)
         _MEMO.pop(sid, None)
 
 
@@ -128,11 +146,7 @@ def _memoized(name: str, fn: QueryFn) -> QueryFn:
         if hit is not None and hit[0] == snap:
             return hit[1]
         if hit is not None:
-            for h in (hit[1], *hit[2]):
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
+            _release(hit[1], hit[2])
         handles: list[DataFrame] = []
         _HANDLE_STACK.append(handles)
         try:

@@ -4,7 +4,7 @@ exact, independently-computed ground truth, so the queries the DuckDB gate
 can never verify still carry a correctness bound.
 
 All operators under test are deterministic (seeded xxhash64 hyperplanes,
-seeded KMeans, fixed band layout), so the measured recall floors are stable
+seeded driver-side k-means, fixed band layout), so the measured recall floors are stable
 run-to-run, not flaky thresholds.
 """
 
@@ -67,33 +67,25 @@ def test_jaccard_prefix_equals_naive(spark):
     assert naive == pref
 
 
-def test_bruteforce_topk_matches_exact(spark):
-    """The packed-array brute-force path must pick the same top-k pairs as
-    the decimal-exact oracle variant (cosine values differ only in FP fold
-    order, never enough to flip a rank on this data)."""
-    qs = _queries()
-    exact = {(r.query_id, r.match_id, r.rnk)
-             for r in qs["x2_cosine_topk"](spark, SF_CHECK).collect()}
-    brute = {(r.query_id, r.match_id, r.rnk)
-             for r in qs["x2_cosine_topk_bruteforce"](spark, SF_CHECK).collect()}
-    assert exact == brute
+@pytest.mark.parametrize("name", [
+    "x2_cosine_topk", "x2_cosine_topk_bruteforce", "x2_cosine_topk_gemm",
+    "x2_cosine_topk_filtered", "x2_topk_mmr",
+])
+def test_topk_faces_match_their_duckdb_oracle(spark, name):
+    """Every face built on the one exact top-k kernel returns exactly the
+    rows of its own DuckDB oracle (decimal-stated dots, rounded at 9 dp),
+    run here over a view on the same embeddings file."""
+    import duckdb
 
+    from multiagent_form_schema_etl_spark.plans import registry
 
-def test_gemm_topk_matches_exact(spark):
-    """The Arrow/numpy GEMM brute-force path must pick the same top-k pairs
-    (and ranks) as the decimal-exact oracle variant; its 9-dp-rounded
-    cosines may differ from the decimal values only below the rounding
-    grain."""
-    qs = _queries()
-    exact = {(r.query_id, r.match_id): (r.rnk, r.cosine)
-             for r in qs["x2_cosine_topk"](spark, SF_CHECK).collect()}
-    gemm = {(r.query_id, r.match_id): (r.rnk, r.cosine)
-            for r in qs["x2_cosine_topk_gemm"](spark, SF_CHECK).collect()}
-    assert exact.keys() == gemm.keys()
-    for pair, (rnk, cos) in exact.items():
-        grnk, gcos = gemm[pair]
-        assert grnk == rnk
-        assert abs(gcos - cos) <= 2e-9
+    got = sorted(tuple(r) for r in _queries()[name](spark, SF_CHECK)
+                 .collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{SF_CHECK}/embeddings.parquet')")
+    want = sorted(con.execute(registry.ORACLES[name]).fetchall())
+    assert got and got == want
 
 
 def test_ann_lsh_recall_vs_exact(spark):
@@ -111,11 +103,11 @@ def test_ann_lsh_recall_vs_exact(spark):
 
 
 def test_ann_ivf_recall_vs_exact(spark):
-    """IVF/KMeans probe search recall vs the exact top-5 (r5: index-side
-    soft assignment to 2 nearest cells -- the same trick that took IVF
-    dedup to recall 1.0 -- lifts recall 0.62 -> 0.90 at sf0.01 and
-    0.84 at the 10x probe corpus with 3 query probes; seeded KMeans =>
-    deterministic)."""
+    """IVF probe search recall vs the exact top-5 (r5: index-side soft
+    assignment to several nearest cells -- the same trick that took IVF
+    dedup to recall 1.0 -- lifted recall 0.62 -> 0.90 at sf0.01). The
+    quantizer is the near-dup faces' seeded driver-side k-means
+    (`_ivf_cells`), so the face is deterministic."""
     qs = _queries()
     exact = {(r.query_id, r.match_id)
              for r in qs["x2_cosine_topk"](spark, SF_CHECK).collect()}

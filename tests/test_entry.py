@@ -142,6 +142,46 @@ def test_registry_eviction_releases_tracked_subrelation_caches(spark, tmp_path):
     assert after <= base, (base, during, after)
 
 
+def test_invalidating_one_session_keeps_another_sessions_cache(spark,
+                                                              tmp_path):
+    """Spark's CacheManager is shared across sessions and matches equal
+    plans. When a second session builds a face whose sub-relations the
+    first session already cached, invalidating the second session must
+    not release the first session's entries: its plan still reads them
+    through InMemoryTableScan."""
+    import shutil
+
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(SF_SMOKE):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(SF_SMOKE, f), sf / f)
+
+    # persists its candidate pool (cands) and the pool's vectors (cv)
+    name = "x2_topk_mmr"
+    qs = __import__("__spark_entry__").queries()
+    sc = spark.sparkContext._jsc.sc()
+    first, second = spark.newSession(), spark.newSession()
+    try:
+        base = sc.getPersistentRDDs().size()
+        df1 = qs[name](first, str(sf))
+        df1.collect()
+        during = sc.getPersistentRDDs().size()
+        qs[name](second, str(sf)).collect()
+        registry.invalidate(second)
+        after = sc.getPersistentRDDs().size()
+        assert during > base, (base, during, after)
+        assert after == during, (base, during, after)
+        # a fresh QueryExecution re-runs the cache lookup
+        plan = df1.select("*")._jdf.queryExecution().executedPlan()
+        assert "InMemoryTableScan" in plan.toString()
+    finally:
+        registry.invalidate(first)
+        registry.invalidate(second)
+
+
 def test_sql_over_view_keeps_persisted_input_cached(spark):
     """_sql_over_view drops its temp view without uncaching the view's
     plan: a persisted input is still cached afterwards, and the generated

@@ -70,7 +70,7 @@ def test_plan_guard_flags_each_regression_kind(spark):
 
     py = df.select("id").mapInPandas(ident, "id long")
     assert any("Python-eval" in p for p in plan_guard("rogue_query", py))
-    assert plan_guard("x2_cosine_topk_gemm", py) == []  # allowlisted
+    assert plan_guard("x2_knn_graph", py) == []  # allowlisted
 
 
 def test_plan_guard_flags_python_rdd_scan_leaf(spark, monkeypatch):

@@ -389,7 +389,7 @@ _PYUDF_ALLOW: frozenset[str] = frozenset({
     # r10: block-local union-find components (valid behind the pair
     # generator's (lang, length-bucket) blocking invariant)
     "x1_dedup_keep_best_quality", "x1_dedup_apply_keeplist",
-    "x2_ann_ivf_kmeans", "x2_ann_pq_adc", "x2_cosine_topk_gemm",
+    "x2_ann_ivf_kmeans", "x2_ann_pq_adc",
     "x2_grouped_center_applyinpandas", "x2_knn_graph",
     "x3_decode_feature_stub", "x5_decontaminate_semantic",
     # r12: per-user EWMA -- sequential recursion on the previous OUTPUT,
