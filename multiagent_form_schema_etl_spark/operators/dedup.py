@@ -7,11 +7,13 @@ Four strategies, scaling from exact to fuzzy:
 - n-gram/token Jaccard: inverted-index similarity join (explode tokens, join
   on token within blocking keys, count intersections). Blocking on
   (lang, length-bucket) bounds the candidate-pair explosion -- without it the
-  token join degenerates to all-pairs on skewed tokens. Two physical
+  token join degenerates to all-pairs on skewed tokens. Three physical
   strategies share one oracle: the naive all-token join (wins on dense-match
-  corpora like this one) and exact df-ordered prefix filtering
+  corpora like this one), exact df-ordered prefix filtering
   (x1_dedup_jaccard_prefix, the sparse-match / Zipfian-vocabulary scale
-  path where stopword-hot tokens never reach the quadratic join).
+  path where stopword-hot tokens never reach the quadratic join) and the
+  blocked pair join over packed token arrays (x1_dedup_jaccard_blockpairs,
+  the dense-block path).
 - SimHash: 16-bit signature from per-token md5 bit votes, then hamming
   distance <= 3 over candidate pairs. md5 (not Spark's murmur) keeps the
   oracle bit-identical; at production scale swap in xxhash64 for speed and
@@ -19,6 +21,10 @@ Four strategies, scaling from exact to fuzzy:
 - MinHash+LSH: k=16 signatures via seeded xxhash64, banded 4x4; candidate
   pairs from band-bucket joins, verified by true Jaccard. Spark-hash based →
   rows-only check (no DuckDB twin), exactly the SURVEY §5 carve-out.
+
+Candidate pairs (prefix filtering, MinHash) are verified by one kernel,
+`_verify_pairs_arrays`: packed distinct-token arrays and `array_intersect`,
+never an explode of the token rows.
 """
 
 from __future__ import annotations
@@ -116,17 +122,6 @@ _JACCARD_ORACLE = f"""
     """
 
 
-def _jaccard_filter(inter: DataFrame, sizes: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, n_inter) + per-doc set sizes → pairs with J >= 0.8."""
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_tok").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_tok").alias("nb"))
-    j = (inter.join(sa, "doc_a").join(sb, "doc_b")
-         .withColumn("jaccard",
-                     F.col("n_inter").cast("double")
-                     / (F.col("na") + F.col("nb") - F.col("n_inter"))))
-    return j.filter(F.col("jaccard") >= 0.8).select("doc_a", "doc_b", "jaccard")
-
-
 @register("x1_dedup_jaccard_ngram", oracle=_JACCARD_ORACLE)
 def x1_dedup_jaccard_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup via token-set Jaccard >= 0.8, inverted-index join blocked on
@@ -166,8 +161,7 @@ def _jaccard_ngram_from(tok: DataFrame) -> DataFrame:
     token row of its doc (min() just picks that constant) -- so the two
     corpus-wide size builds and the two sort-merge joins re-shuffling the
     pair relation on doc_a/doc_b are gone (r14-audited plan: 8 Exchange,
-    4 of them for exactly this). Same integers into the same IEEE
-    division as `_jaccard_filter`."""
+    4 of them for exactly this)."""
     a = tok.alias("a")
     b = tok.alias("b")
     inter = (
@@ -196,20 +190,19 @@ def x1_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest common token inside BOTH prefixes (the suffix is shorter than
     the guaranteed overlap t*|x| <= O), so candidate generation loses
     nothing; the hottest (stopword-like) tokens never hit the quadratic
-    join. Candidates are then verified against full token sets.
+    join. Candidates are then verified against full token sets by
+    `_verify_pairs_arrays`, the packed-array verifier the MinHash faces
+    use: each side's distinct-token array joins the candidate pair once
+    and `array_intersect` counts the overlap in place, so no token rows
+    reach the verify joins and no per-(pair, token) aggregate runs.
 
     Same results and oracle as x1_dedup_jaccard_ngram. At 100 TB with a
     Zipfian vocabulary and sparse matches this is the right shape (the
     inverted index shrinks ~5x and hot tokens vanish); on this corpus's
     dense-match pathology the naive join wins because verification
     dominates -- both are registered so the tradeoff is measured, not
-    assumed.
-
-    r15: the separate per-doc size build is gone -- ``n_tok`` rides every
-    token row out of `_tok_d_df` (a pure function of the document row),
-    so the prefix-length filter reads it in place and the verify
-    aggregate resolves both set sizes with min() instead of re-joining a
-    corpus-wide size relation into the pair stream twice."""
+    assumed. ``n_tok`` rides every token row out of `_tok_d_df`, so the
+    prefix-length filter reads it in place."""
     from pyspark.sql import Window
 
     tok = _tok_d_df(spark, sf_dir)
@@ -231,18 +224,7 @@ def x1_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
-    ta = tok.select(F.col("doc_id").alias("doc_a"),
-                    F.col("n_tok").alias("na"), "token")
-    tb = tok.select(F.col("doc_id").alias("doc_b"),
-                    F.col("n_tok").alias("nb"), "token")
-    inter = (cand.join(ta, "doc_a").join(tb, ["doc_b", "token"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count(F.lit(1)).alias("n_inter"),
-                  F.min("na").alias("na"), F.min("nb").alias("nb")))
-    j = inter.withColumn(
-        "jaccard", F.col("n_inter").cast("double")
-        / (F.col("na") + F.col("nb") - F.col("n_inter")))
-    return j.filter(F.col("jaccard") >= 0.8).select("doc_a", "doc_b", "jaccard")
+    return _verify_pairs_arrays(load_table(spark, sf_dir, "documents"), cand)
 
 
 @register("x1_dedup_jaccard_blockpairs", oracle=_JACCARD_ORACLE)

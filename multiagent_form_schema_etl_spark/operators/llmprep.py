@@ -142,10 +142,11 @@ _DECON_ORACLE = f"""
 
 
 def _decon_gram_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRE-distinct (doc_id, heldout, gram) word-shingle rows -- the common
-    front of both decontamination faces. Callers place their own
-    ``.distinct()`` so the bloom face can prefilter BEFORE the distinct's
-    shuffle (the whole point of the bloom at scale)."""
+    """PRE-distinct (doc_id, heldout, gram) word-shingle rows: the one
+    tokenize + n-gram explode of the decontamination faces.
+    `_decon_grams` dedups and counts them behind one exchange; the bloom
+    face places its own dedup so it can prefilter train shingles BEFORE
+    their shuffle (the whole point of the bloom at scale)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -159,6 +160,26 @@ def _decon_gram_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("gram")))
 
 
+def _decon_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one n-gram decontamination kernel: each distinct
+    (doc_id, heldout, gram) shingle with its gram's `train_df` (distinct
+    train docs holding it -- doc counts, never occurrences) and `held_hit`
+    (a held-out doc holds it too). One explode, one exchange: the dedup
+    and both per-gram counts cluster by gram, so one `repartition(gram)`
+    serves them all. The counts are Window aggregates, not a groupBy
+    joined back, so a consumer's filter on `heldout` cannot be pushed
+    below them onto one split, which would explode and shuffle the
+    shingles once per split."""
+    w = Window.partitionBy("gram")
+    return (_decon_gram_rows(spark, sf_dir)
+            .repartition(F.col("gram"))
+            .dropDuplicates(["doc_id", "heldout", "gram"])
+            .select("doc_id", "heldout",
+                    F.count(F.when(~F.col("heldout"), 1)).over(w)
+                     .alias("train_df"),
+                    F.max("heldout").over(w).alias("held_hit")))
+
+
 @register("x5_decontaminate_ngram", oracle=_DECON_ORACLE)
 def x5_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/held-out contamination scan: a held-out (validation/test) doc is
@@ -167,41 +188,18 @@ def x5_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     on held-out data. Split membership reuses the deterministic md5 bucket
     of x5_train_test_split_hash.
 
-    Scale shape: distinct (doc, gram) shingles on both sides, then an
-    inverted-index equi-join on the gram -- never doc x doc. Grams seen in
-    more than _DECON_MAX_DF train docs are dropped as boilerplate before
-    the join (df-pruning), which both matches decontamination practice and
-    bounds the worst-case join fan-out per gram.
-
-    r14 optimization (guide §2.4 "share one exchange"): every downstream
-    step -- the (doc, gram) dedup, the train-df aggregation, and the
-    held x train inverted-index join -- clusters by GRAM, so one explicit
-    `repartition(gram)` up front satisfies all of their distributions
-    (HashPartitioning(gram) ⊆ each required clustering set) and the plan
-    carries ONE exchange of the shingle relation instead of three (the
-    old distinct-first shape shuffled on (doc, heldout, gram), then again
-    on gram for the df-agg, then a third time to co-partition the held
-    side for the join). The exchange now moves pre-dedup rows (intra-doc
+    Scale shape: distinct (doc, gram) shingles of both splits behind one
+    gram exchange (`_decon_grams`), never doc x doc. Grams seen in more
+    than _DECON_MAX_DF train docs are dropped as boilerplate (df-pruning),
+    which both matches decontamination practice and bounds the per-gram
+    work; a held-out shingle counts when its gram's train_df is in
+    [1, _DECON_MAX_DF]. The exchange moves pre-dedup rows (intra-doc
     repeated shingles survive to the reducer), but shingles are
-    near-unique within a doc, so the dup factor is far below the 2x
-    re-shuffle it replaces.
-
-    Contested in r14 (driver cold read -11%); settled by the r15
-    interleaved old/new probe (OPTIMIZATION_r15.md, "VERDICT r14 item 1"):
-    new <= old at sf0.1 on min AND median in a clean window (0.91/0.97 vs 0.93/0.99, steal 0.08%), and flat on the
-    10x corpus (2.87/3.48 vs 2.89/3.42, steal 0.14%) -- the r14 driver
-    regression reading was noise; the shape is kept on the plan
-    evidence (one pre-dedup gram exchange vs three post-dedup ones)."""
-    grams = (_decon_gram_rows(spark, sf_dir)
-             .repartition(F.col("gram"))
-             .dropDuplicates(["doc_id", "heldout", "gram"]))
-    train_grams = (grams.filter(~F.col("heldout"))
-                   .groupBy("gram")
-                   .agg(F.count(F.lit(1)).alias("train_df"))
-                   .filter(F.col("train_df") <= _DECON_MAX_DF))
-    held = grams.filter(F.col("heldout"))
-    return (held.join(train_grams, "gram")
-            .groupBy("doc_id")
+    near-unique within a doc."""
+    held = (_decon_grams(spark, sf_dir)
+            .filter(F.col("heldout") & F.col("train_df").between(
+                1, _DECON_MAX_DF)))
+    return (held.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_shared_grams"),
                  F.sum("train_df").cast("long").alias("n_train_hits")))
 
@@ -1432,16 +1430,18 @@ def x5_corpus_pipeline_end_to_end(spark: SparkSession,
 
     Each stage is the SAME kernel its standalone face registers
     (`x4_quality_score`'s closed form, `x1_dedup_exact`'s hash-groupBy
-    semantics, `_decon_gram_rows` + the decon join, `x5_shard_by_budget`'s
-    two-phase global cumsum) -- this face proves they COMPOSE into one
-    Catalyst plan with no materialization barriers between stages, and
-    its oracle is the same composition in one SQL statement.
+    semantics, `_decon_grams` as in `x5_decontaminate_ngram`,
+    `x5_shard_by_budget`'s two-phase global cumsum) -- this face proves
+    they COMPOSE into one Catalyst plan with no materialization barriers
+    between stages, and its oracle is the same composition in one SQL
+    statement.
 
-    Scale shape inherits from the parts: one tokenize pass feeds quality
-    + decon; the dedup representative and train-split predicates are
-    map-side; the decon join moves df-pruned grams only; the sharding
-    window never sees more than the coarse bucket table. The final
-    per-shard rollup is budget-bounded."""
+    Scale shape inherits from the parts: quality, the dedup
+    representative and the train-split predicate are per-document
+    expressions (no explode); the shingles are exploded once, cross one
+    gram exchange, and the contaminated train docs are a filter on them;
+    the sharding window never sees more than the coarse bucket table. The
+    final per-shard rollup is budget-bounded."""
     docs = load_table(spark, sf_dir, "documents")
     w_rep = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     n_tok_ws = (F.length("text")
@@ -1456,22 +1456,10 @@ def x5_corpus_pipeline_end_to_end(spark: SparkSession,
         (F.expr(_md5_int_sql("text", "spark")) % 100 < 80).alias("is_train"),
         (F.row_number().over(w_rep) == 1).alias("is_rep"),
         (quality >= 0.8).alias("good"))
-    grams = _decon_gram_rows(spark, sf_dir)
-    # df must be DOC-count semantics (distinct (doc_id, gram) rows), matching
-    # both the oracle's SELECT DISTINCT grams CTE and x5_decontaminate_ngram:
-    # counting raw occurrences would let a gram repeated within one train doc
-    # cross _DECON_MAX_DF while its doc count does not (ADVICE r11, high).
-    train_distinct = (grams.filter(~F.col("heldout"))
-                      .select("doc_id", "gram").distinct())
-    countable = (train_distinct
-                 .groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-                 .filter(F.col("df") <= _DECON_MAX_DF).select("gram"))
-    held_grams = (grams.filter(F.col("heldout"))
-                  .select("gram").distinct())
-    contaminated = (train_distinct
-                    .join(countable, "gram")
-                    .join(held_grams, "gram")
-                    .select("doc_id").distinct())
+    contaminated = (_decon_grams(spark, sf_dir)
+                    .filter(~F.col("heldout") & F.col("held_hit")
+                            & (F.col("train_df") <= _DECON_MAX_DF))
+                    .select("doc_id"))
     survivors = (base.filter("is_train AND is_rep AND good")
                  .join(contaminated, "doc_id", "left_anti")
                  .select("doc_id",

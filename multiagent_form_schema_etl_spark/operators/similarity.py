@@ -114,16 +114,23 @@ def _unit(emb: DataFrame) -> DataFrame:
         "vecn", F.transform("vec", lambda x: x / F.nullif(nrm, F.lit(0.0))))
 
 
-def _cos_expr(a: str, b: str) -> F.Column:
-    """JVM-side cosine over two array<double> columns: zip_with product +
+def _dot(a: str, b: str) -> F.Column:
+    """JVM-side dot product of two array<double> columns: zip_with product +
     sequential aggregate fold. No explode, no extra shuffle."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.zip_with(a, a, lambda x, y: x * y),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.zip_with(b, b, lambda x, y: x * y),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    return dot / (na * nb)
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm(v: str) -> F.Column:
+    """L2 norm by the same fold as `_dot`, so a norm computed once per
+    vector and carried to its pairs is bit-identical to one folded per
+    pair."""
+    return F.sqrt(_dot(v, v))
+
+
+def _cos_expr(a: str, b: str) -> F.Column:
+    """JVM-side cosine over two array<double> columns."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _top_k(df: DataFrame, by: str | list[str], k: int, *order: F.Column
@@ -138,11 +145,14 @@ def _top_k(df: DataFrame, by: str | list[str], k: int, *order: F.Column
 
 def _ranked(pairs: DataFrame, k: int = _TOP_K) -> DataFrame:
     """The emission step of every query-set top-k face: (query_id,
-    match_id, qv, mv) candidate pairs -> (query_id, match_id, cosine, rnk)
-    with the double-fold cosine rounded at 9 dp and rnk <= k under
-    (cosine desc, match_id asc)."""
+    match_id, qv, qn, mv, mn) candidate pairs -> (query_id, match_id,
+    cosine, rnk) with the double-fold cosine rounded at 9 dp and rnk <= k
+    under (cosine desc, match_id asc). The norms `qn`/`mn` come with the
+    vectors (`_norm`, once per vector), so a pair folds only its dot."""
     cos = pairs.select("query_id", "match_id",
-                       F.round(_cos_expr("qv", "mv"), 9).alias("cosine"))
+                       F.round(_dot("qv", "mv")
+                               / (F.col("qn") * F.col("mn")), 9)
+                        .alias("cosine"))
     return (_top_k(cos, "query_id", k, F.desc("cosine"), F.asc("match_id"))
             .select("query_id", "match_id", "cosine", "rnk"))
 
@@ -162,10 +172,11 @@ def _query_topk(emb: DataFrame, k: int, same_label: bool = False
     lab = ["label"] if same_label else []
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
-        *[F.col(c).alias("qlabel") for c in lab], F.col("vec").alias("qv"))
+        *[F.col(c).alias("qlabel") for c in lab], F.col("vec").alias("qv"),
+        _norm("vec").alias("qn"))
     b = emb.select(F.col("vec_id").alias("match_id"),
                    *[F.col(c).alias("mlabel") for c in lab],
-                   F.col("vec").alias("mv"))
+                   F.col("vec").alias("mv"), _norm("vec").alias("mn"))
     cond = F.col("query_id") != F.col("match_id")
     if same_label:
         cond = (F.col("qlabel") == F.col("mlabel")) & cond
@@ -942,14 +953,15 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
 
 
 def _pair_vectors(cand: DataFrame, emb: DataFrame) -> DataFrame:
-    """(query_id, match_id) candidates -> (query_id, match_id, qv, mv),
-    the input of `_ranked`. The candidate set is bounded (queries x
+    """(query_id, match_id) candidates -> (query_id, match_id, qv, qn, mv,
+    mn), the input of `_ranked`. The candidate set is bounded (queries x
     probes x bucket or cell size), so IT broadcasts, never the
     corpus-sized vector relation (ADVICE r4)."""
     qv = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"))
+        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"),
+        _norm("vec").alias("qn"))
     mv = emb.select(F.col("vec_id").alias("match_id"),
-                    F.col("vec").alias("mv"))
+                    F.col("vec").alias("mv"), _norm("vec").alias("mn"))
     return (F.broadcast(cand).join(mv, "match_id")
             .join(F.broadcast(qv), "query_id"))
 
@@ -1008,7 +1020,7 @@ _IVF_INDEX_ASSIGN = 3  # index-side soft assignment: each vector lands in
 def _ivf_topk_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF candidate generation (pre-verification), shared by the
     operator and the scale probe's candidate-volume measurement:
-    (query_id, match_id, qv, mv) for the bounded query set. The index is
+    (query_id, match_id, qv, qn, mv, mn) for the bounded query set. The index is
     the one quantizer (`_ivf_cells`, the near-dup faces' cells with
     _IVF_INDEX_ASSIGN instead of _IVF_DEDUP_PROBE assignments); each
     query's _IVF_PROBES nearest cells come from the same numpy kernel.
@@ -1268,10 +1280,11 @@ def x2_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = local_df(
         spark, [(int(vid), list(vec)) for vid, vec, _ in queries],
-        "query_id bigint, qv array<double>")
+        "query_id bigint, qv array<double>").withColumn("qn", _norm("qv"))
 
     short = (_top_k(cand, "query_id", _PQ_RERANK, F.asc("approx_dist"),
                     F.asc("match_id"))
+             .withColumn("mn", _norm("mv"))
              .join(F.broadcast(q), "query_id"))
     # 9-dp rounding before the final rank: the rounded-twin policy that
     # makes the rerank hash-equal to the shared exact top-k oracle (see

@@ -875,3 +875,77 @@ def test_drift_psi_counts_additive_and_replay_idempotent(spark, tmp_path):
     broken = {tuple(r) for r in L._psi_report(counts).collect()}
     good = {tuple(r) for r in L.x5_drift_psi(spark, SF_SMOKE).collect()}
     assert broken != good
+
+
+def test_decon_and_prefix_faces_match_oracle_on_null_empty_skew(
+        spark, tmp_path):
+    """The two decontamination faces, the end-to-end pipeline and the
+    prefix Jaccard face agree with their DuckDB oracles on a corpus of
+    edge rows: NULL text (and NULL lang), empty text, fewer than four
+    tokens, runs of spaces, an exact duplicate, and a skewed 4-gram held
+    by more than _DECON_MAX_DF train docs plus held-out docs. The skewed
+    gram is pruned, so only a held-out doc that shares a rare gram is
+    contaminated, and only the train docs holding that gram leave the
+    pipeline's survivors."""
+    import hashlib
+
+    import duckdb
+
+    from multiagent_form_schema_etl_spark.operators import llmprep as L
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    registry.load_all_modules()
+
+    def steer(text, held):
+        """`text` plus the first salt that puts it in the wanted split."""
+        for i in range(1000):
+            t = f"{text} z{i}"
+            if (int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % 100
+                    >= 80) == held:
+                return t
+        raise AssertionError(text)
+
+    n_skew = L._DECON_MAX_DF + 6
+    docs = [(1, None, "en"), (2, "", "en"), (3, "a b c", "en"),
+            (4, "a  b   c", "en"), (5, "p q r s n1 n2 n3", None)]
+    for i in range(n_skew):
+        rare = "m n o k " if i < 3 else ""
+        body = " ".join(f"t{i}w{j}" for j in range(44))
+        docs.append((10 + i, steer(f"{rare}p q r s {body}", False), "en"))
+    docs.append((10 + n_skew, docs[-1][1], "en"))     # exact duplicate
+    docs.append((200, steer("p q r s m n o k h1 h2", True), "en"))
+    docs.append((201, steer("p q r s x y", True), "en"))
+    near = [f"v{j}" for j in range(20)]
+    docs.append((300, " ".join(near), "en"))
+    docs.append((301, " ".join(near[:-1] + ["v99"]), "en"))
+    rows = [(i, t, lang, None if t is None else len(t))
+            for i, t, lang in docs]
+    sf = tmp_path / "edges"
+    sf.mkdir()
+    path = str(sf / "documents.parquet")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, n_chars long") \
+        .write.parquet(path)
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{path}/*.parquet')")
+
+    got = {}
+    for name in ("x5_decontaminate_ngram", "x5_decontaminate_bloom",
+                 "x5_corpus_pipeline_end_to_end", "x1_dedup_jaccard_prefix"):
+        df = registry.QUERIES[name](spark, str(sf))
+        res = con.execute(registry.ORACLES[name])
+        cols = [d[0] for d in res.description]
+        want = sorted(res.fetchall())
+        assert sorted(df.columns) == sorted(cols), name
+        got[name] = sorted(tuple(r[c] for c in cols) for r in df.collect())
+        assert got[name] == want, name
+
+    # the skewed gram is pruned: only doc 200's rare gram (3 train docs)
+    assert got["x5_decontaminate_ngram"] == [(200, 1, 3)]
+    survivors = sum(r.n_docs for r in registry.QUERIES[
+        "x5_corpus_pipeline_end_to_end"](spark, str(sf)).collect())
+    assert survivors == n_skew - 3
+    # runs of spaces leave the token set unchanged: docs 3 and 4 are twins
+    assert {(a, b) for a, b, _ in got["x1_dedup_jaccard_prefix"]} == {
+        (3, 4), (10 + n_skew - 1, 10 + n_skew), (300, 301)}

@@ -9,9 +9,11 @@ the final adaptive plan's operator inventory.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from tests.conftest import SF_CHECK
+from tests.conftest import SF_CHECK, SF_SMOKE
 
 
 def _plan(spark, name: str) -> str:
@@ -313,3 +315,55 @@ def test_decimal_output_detection_trips_on_decimal_face(spark):
     good = bad.selectExpr("id", "round(CAST(s AS DOUBLE), 6) AS s")
     assert _decimal_output_cols(good.schema) == []
     assert good.toPandas()["s"].dtype.kind == "f"
+
+
+def _final_plan(spark, name: str) -> str:
+    """The executed (final adaptive) plan of face `name` at SF_SMOKE,
+    where exchange reuse has already been applied."""
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    registry.load_all_modules()
+    df = registry.QUERIES[name](spark, SF_SMOKE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("name", ["x5_corpus_pipeline_end_to_end",
+                                  "x5_decontaminate_ngram"])
+def test_decontamination_shingles_once_behind_one_gram_exchange(spark, name):
+    """Both n-gram decontamination faces read the one kernel
+    `_decon_grams`: the shingle explode runs once and its rows cross one
+    repartition(gram) exchange. A consumer that re-derives a split's
+    shingles shows up as a second explode (the exchange reuse between
+    two consumers of one relation does not fire reliably)."""
+    plan = _final_plan(spark, name)
+    assert plan.count("Generate explode(transform(sequence") == 1, plan
+    assert plan.count("REPARTITION_BY_COL") == 1, plan
+
+
+def test_jaccard_prefix_verifies_packed_arrays_not_token_rows(spark):
+    """x1_dedup_jaccard_prefix verifies its candidate pairs with
+    `_verify_pairs_arrays`: the per-document side of every join keyed on
+    a pair column (doc_a / doc_b) is a packed token array, never an
+    exploded token relation."""
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    registry.load_all_modules()
+    df = registry.QUERIES["x1_dedup_jaccard_prefix"](spark, SF_CHECK)
+
+    def nodes(p):
+        stack = [p]
+        while stack:
+            p = stack.pop()
+            yield p
+            ch = p.children()
+            stack.extend(ch.apply(i) for i in range(ch.size()))
+
+    verify = [j for j in nodes(df._jdf.queryExecution().sparkPlan())
+              if j.nodeName() in ("BroadcastHashJoin", "SortMergeJoin",
+                                  "ShuffledHashJoin")
+              and re.search(r"\bdoc_[ab]#", j.leftKeys().toString())]
+    assert len(verify) == 2
+    for j in verify:
+        assert not any(n.nodeName() == "Generate" for n in nodes(j.right()))

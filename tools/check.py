@@ -517,17 +517,6 @@ def canon(v):
     return str(v)
 
 
-def _spark_kind(dt) -> str:
-    s = dt.simpleString()
-    if s in ("tinyint", "smallint", "int", "bigint"):
-        return "i"
-    if s in ("float", "double") or s.startswith("decimal"):
-        return "f"
-    if s == "boolean":
-        return "b"
-    return "O"
-
-
 def rowset(cols, rows):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted("|".join(canon(r[i]) for i in idx) for r in rows)
@@ -612,7 +601,11 @@ def main() -> int:
                 print(f"     WARNING {name}: zero rows")
             continue
         try:
-            res = con.execute(oracles[name])
+            # the oracle runs once; its rows and its pandas dtypes are both
+            # read back from the one materialized result
+            con.execute("CREATE OR REPLACE TEMP TABLE _oracle AS "
+                        + oracles[name])
+            res = con.execute("SELECT * FROM _oracle")
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as ex:
@@ -628,7 +621,7 @@ def main() -> int:
             # dtype-kind parity: a strict driver hashing pandas frames would
             # see int-vs-float drift (e.g. DuckDB HUGEINT sums -> float64)
             try:
-                ddf = con.execute(oracles[name]).df()
+                ddf = con.execute("SELECT * FROM _oracle").df()
                 spdf = sdf.toPandas()
                 for c in ddf.columns:
                     dk = ddf[c].dtype.kind
