@@ -36,38 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# host load and steal (loadavg, cpu_jiffies) and Spark's codegen counters
+# (SparkCounters) come from the benchmark's measurement layer
+from perfbench import probe  # noqa: E402
 
-def _loadavg() -> list[float]:
-    """Host 1/5/15-min load averages. Self-diagnosis (VERDICT r12 item 1):
-    BENCH_r12's cold runs climbed 55.9 -> 70.3 -> 92.1 s on identical code
-    because ambient load ramped to ~7 mid-bench; stamping every pass with
-    before/after loadavg lets a contaminated sample identify itself inside
-    the committed record instead of needing out-of-band disclosure."""
-    try:
-        with open("/proc/loadavg") as f:
-            return [round(float(x), 2) for x in f.read().split()[:3]]
-    except (OSError, ValueError):
-        return []
-
-
-def _cpu_counters() -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) from /proc/stat. On a VM (this box
-    is one), CPU STEAL is the definitive contamination signal loadavg
-    can't see: jiffies the hypervisor withheld from this guest for other
-    tenants. A pass's steal_pct = 100 * d(steal)/d(total) directly
-    quantifies how much compute the host took back mid-measurement --
-    loadavg only shows the guest's own runnable queue."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()[1:]
-        vals = [int(x) for x in parts]
-        # fields: user nice system idle iowait irq softirq steal guest
-        # guest_nice -- the kernel already folds guest/guest_nice into
-        # user/nice, so summing all 10 double-counts them and slightly
-        # understates steal_pct (ADVICE r13): total over the first 8.
-        return (vals[7] if len(vals) > 7 else 0, sum(vals[:8]))
-    except (OSError, ValueError, IndexError):
-        return (0, 0)
 
 # Headline set: one per operator family (relational joins/aggs, windows,
 # scalar funcs, doc pipeline, dedup, similarity, text stats, events windows).
@@ -152,17 +124,12 @@ def run_pass() -> dict:
 
     # janino compile count and ns (process-wide counters, also bumped by
     # the per-task compiles of whole-stage codegen)
-    jvm = spark._jvm
-    cg_hist = (jvm.org.apache.spark.metrics.source.CodegenMetrics
-               .METRIC_COMPILATION_TIME())
-    cg = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    counters = probe.SparkCounters(spark)
 
-    def codegen_counters() -> tuple[int, int]:
-        return cg_hist.getCount(), cg.compileTime()
-
-    def codegen_delta(a: tuple[int, int], b: tuple[int, int]) -> dict:
-        return {"compile_count": b[0] - a[0],
-                "compile_ms": round((b[1] - a[1]) / 1e6, 1)}
+    def codegen_delta(a: dict, b: dict) -> dict:
+        d = probe.delta(b, a)
+        return {"compile_count": d["compile_count"],
+                "compile_ms": round(d["compile_ns"] / 1e6, 1)}
 
     # Cold pass (includes each query's one-time Catalyst analysis + codegen
     # compile -- the headline, comparable across rounds), then a warm pass
@@ -170,11 +137,11 @@ def run_pass() -> dict:
     # amortizes to zero, so warm times are the per-round throughput signal.
     # The warm pass compiles ~nothing while the codegen cache holds the
     # headliners' working set (session.CODEGEN_CACHE_ENTRIES).
-    c0 = codegen_counters()
+    c0 = counters.snapshot()
     times = {name: run_once(name) for name in names}
-    c1 = codegen_counters()
+    c1 = counters.snapshot()
     warm = {name: run_once(name) for name in names}
-    c2 = codegen_counters()
+    c2 = counters.snapshot()
     codegen = {"cold": codegen_delta(c0, c1), "warm": codegen_delta(c1, c2)}
     # Methodology bridge (r2 -> r3 honesty): the r4+ hash-reduce timing
     # flatters large-result queries vs r1's collect()-based numbers; carry
@@ -221,9 +188,10 @@ def main() -> None:
             break
         # fresh subprocess JVM per pass: cold numbers keep their own
         # analysis+codegen, and a noisy-host spike in one pass cannot
-        # contaminate the others
-        load_before = _loadavg()
-        steal0, total0 = _cpu_counters()
+        # contaminate the others; before/after loadavg and hypervisor
+        # steal let a contaminated pass identify itself in the record
+        load_before = probe.loadavg()
+        jiffies0 = probe.cpu_jiffies()
         p = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--single"],
             stdout=subprocess.PIPE, text=True, env=os.environ)
@@ -248,11 +216,9 @@ def main() -> None:
                 f"record={'missing' if rec is None else 'ok'}): "
                 f"{p.stdout[-500:]}")
         rec["loadavg_before"] = load_before
-        rec["loadavg_after"] = _loadavg()
-        steal1, total1 = _cpu_counters()
-        rec["steal_pct"] = (round(100.0 * (steal1 - steal0)
-                                  / max(1, total1 - total0), 2)
-                            if total1 > total0 else None)
+        rec["loadavg_after"] = probe.loadavg()
+        rec["steal_pct"] = round(
+            probe.steal_pct(jiffies0, probe.cpu_jiffies()), 2)
         runs.append(rec)
 
     full, line = build_records(runs)

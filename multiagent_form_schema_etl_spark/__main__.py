@@ -11,9 +11,13 @@ surface (SURVEY.md §3.1-3.3), driven by argparse subcommands::
 
 - ``pipeline`` = §3.1: blocks → clauses → extraction → validation/recovery →
   forms, with per-stage parquet snapshots (K2) and the final form rows as
-  JSON (K1). ``--mode scoped`` is the reference's intended clause-grounded
-  extraction; ``--form`` filters to one form like the reference's --form
-  flag (which the reference then ignores, SURVEY §2.12 — here it works).
+  JSON (K1). ``--mode`` picks the text the extraction cascade reads:
+  ``fulltext`` (the reference's actual behavior) or ``scoped`` (its
+  intended clause-grounded extraction). It is passed to
+  ``DocumentPipeline.run``, so both modes write the same stages and the
+  same validated, recovered form columns. ``--form`` filters to one form
+  like the reference's --form flag (which the reference then ignores,
+  SURVEY §2.12 — here it works).
 - ``evaluate`` = §3.3: score forms against ground truth (J1/A4) and write
   the per-form metrics report (A5/A6) as JSON (K4).
 - ``query`` runs any registered query (TPC-H, dedup, similarity, streaming
@@ -68,14 +72,7 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
     doc_forms = _load_or_fixture(spark, args.doc_forms, D.doc_forms_df)
     if args.form:
         doc_forms = doc_forms.filter(doc_forms.form_name == args.form)
-    pipe = _pipe(spark, args.schema_dir)
-    if args.mode == "scoped":
-        forms = D.scoped_cascade_values_rules(
-            D.section_context(spark, blocks, doc_forms, pipe.schema_rows),
-            pipe.schema_rows)
-        stages: dict[str, DataFrame] = {"forms": forms}
-    else:
-        stages = pipe.run(blocks, doc_forms)
+    stages = _pipe(spark, args.schema_dir).run(blocks, doc_forms, args.mode)
     try:
         wanted = args.stages.split(",") if args.stages else list(stages)
         unknown = [s for s in wanted if s not in stages]
@@ -96,8 +93,7 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
             print(json.dumps({"input_metrics": dict(obs.get)}))
         return 0
     finally:
-        if "extractions" in stages:  # fulltext: release run()'s boundary
-            stages["extractions"].unpersist()
+        stages["extractions"].unpersist()  # release run()'s boundary
 
 
 def cmd_evaluate(args: argparse.Namespace) -> int:

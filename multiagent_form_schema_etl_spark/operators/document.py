@@ -254,15 +254,44 @@ def _form_fields(form_name: str) -> list[tuple]:
 
 def extraction_df(spark: SparkSession, blocks: DataFrame | None = None,
                   doc_forms: DataFrame | None = None,
-                  schema_rows: list[tuple] | None = None) -> DataFrame:
-    """U7/J3/F1/F2: the per-(doc, field) extraction cascade over full text
-    (EAV output, FIXTURES.md A4), executed rules-as-data: the schema
-    fan-out (J3) is a broadcast join against the candidates table keyed
-    (form_name, field_name) -- each doc fans to its form's field
-    candidates -- and the cascade winner resolves in one aggregation.
-    Constant-size plan in the schema; the same kernel (_cascade_winner)
-    runs the scoped cascade, and the DuckDB oracles of every downstream
-    doc_* query pin it to the generated-SQL reference cascade."""
+                  schema_rows: list[tuple] | None = None,
+                  mode: str = "fulltext") -> DataFrame:
+    """U7/J3/F1/F2: the per-(doc, field) extraction cascade, EAV output
+    (doc_id, form_name, field_name, value, method) (FIXTURES.md A4),
+    executed rules-as-data by one kernel (_cascade_winner). This is the
+    only place the two extraction modes differ; everything downstream
+    (validation, recovery, completeness, scoring) reads the EAV alike.
+
+    - ``fulltext`` (what the reference runs, form_filler.py:67): the
+      cascade reads each document's full text. The schema fan-out (J3) is
+      a broadcast join against the candidates table keyed (form_name,
+      field_name), so each doc fans to its form's field candidates.
+    - ``scoped`` (what the reference intends, form_filler.py:101-115):
+      each field's cascade reads only its section's clause context
+      (section_context, J2). Dispatch is on field_name with the FIRST
+      registration winning globally (start_date appears in two forms with
+      different cascades; both forms use the first definition), exactly
+      like the oracle's single CASE (_scoped_cascade_case).
+
+    Either way the plan is constant-size in the schema: a small broadcast
+    candidates table, generic regex expressions with column patterns and
+    one (doc, field) aggregation picking the winner, so a new form or
+    field changes data, not the compiled program. The DuckDB oracles of
+    every downstream doc_* face pin both modes to the generated-SQL
+    reference cascade. Column-typed regex patterns re-compile when
+    consecutive rows carry different patterns (Spark's regexp evaluator
+    caches only the last pattern); negligible at this rule-set size, but
+    rule sets large enough for Pattern.compile to dominate should
+    sortWithinPartitions(field, prio) before the extraction projection."""
+    if mode == "scoped":
+        cand = local_df(spark, _cascade_rule_rows(schema_rows, first_wins=True),
+                        _RULES_SCHEMA).drop("form_name")
+        j = section_context(spark, blocks, doc_forms, schema_rows).join(
+            F.broadcast(cand), "field_name", "left")
+        return _cascade_winner(j, "context")
+    if mode != "fulltext":
+        raise ValueError(f"unknown extraction mode {mode!r}: "
+                         "fulltext or scoped")
     ft = fulltext_df(spark, blocks, doc_forms)
     cand = local_df(spark, _cascade_rule_rows(schema_rows, first_wins=False),
                     _RULES_SCHEMA)
@@ -861,7 +890,7 @@ def _scoped_cascade_case(engine: str) -> str:
     """One CASE over field_name dispatching each field's cascade against the
     row's own scoped ``context`` column (the per-(doc,field) relation):
     the DuckDB oracle's reference cascade. The Spark side runs it as data
-    (scoped_cascade_values_rules)."""
+    (extraction_df, scoped mode)."""
     whens = []
     for r in SCHEMA_ROWS:
         _, fname, ftype, _, _, keywords, patterns, *_ = r
@@ -908,46 +937,6 @@ def _cascade_rule_rows(schema_rows: list[tuple] | None = None,
 
 _RULES_SCHEMA = ("form_name string, field_name string, prio int, kind string, "
                  "rx1 string, rx2 string, ftype string")
-
-
-def scoped_cascade_values_rules(scoped: DataFrame,
-                                schema_rows: list[tuple] | None = None
-                                ) -> DataFrame:
-    """The scoped cascade over a (doc_id, form_name, field_name, context)
-    relation, executed rules-as-data: the plan is CONSTANT-SIZE in the
-    schema -- a ~200-row broadcast candidates table, three generic regex
-    expressions with column patterns, and one (doc, field) aggregation
-    picking the cascade winner. Dispatch is on field_name with the FIRST
-    registration winning globally (start_date appears in two forms with
-    different cascades; both forms use the first definition), exactly like
-    the oracle's single CASE (_scoped_cascade_case).
-
-    Why rules-as-data: the retired generated-projection variant compiled
-    the whole schema into ~9 codegen units (~6 s of driver-side Catalyst
-    analysis + janino compile before any data moves, VERDICT r2 item 1)
-    and needed the scoped input persisted against per-form re-reads.
-    Here the schema is late-bound DATA: candidates broadcast-join onto the
-    scoped relation (one pass, no persist) and the winner aggregation is a
-    map-side-combinable min(struct(prio, value)) on the already-
-    doc_id-partitioned key. At 100 TB this is also the plan that scales:
-    adding a form or field changes a broadcast table, not the compiled
-    program. Column-typed regex patterns re-compile when consecutive rows
-    carry different patterns (Spark's regexp evaluator caches only the last
-    pattern); measured negligible at this rule-set size (sort-vs-nosort
-    A/B was a wash steady-state), but rule sets large enough for
-    Pattern.compile to dominate should sortWithinPartitions(field, prio)
-    before the extraction projection to restore run-length amortization.
-
-    Winner semantics preserved exactly: a pattern row decides iff its
-    group-1 capture is non-empty (parsed value final even when NULL); a
-    keyword row's capture shapes resolve within the row (shape 1 else
-    shape 2, 'n/a'/empty fall through) and keyword rows decide across rows
-    on first non-NULL PARSED value; patterns always beat keywords."""
-    spark = scoped.sparkSession
-    cand = local_df(spark, _cascade_rule_rows(schema_rows, first_wins=True),
-                    _RULES_SCHEMA).drop("form_name")
-    j = scoped.join(F.broadcast(cand), "field_name", "left")
-    return _cascade_winner(j, "context").drop("method")
 
 
 def _parse_value_col(cap, ftype):
@@ -1056,9 +1045,9 @@ def doc_u7_scoped_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (clause-grounded, bypassed in practice by the full_text shortcut,
     SURVEY §2.12 / form_filler.py:67): each field's cascade runs only
     against its section's resolved clause context. Both modes are first-class
-    engine options; this is the scoped one. Executes through the
-    rules-as-data kernel (constant-size plan, scoped_cascade_values_rules)."""
-    return scoped_cascade_values_rules(section_context(spark))
+    engine options; this is the scoped one (extraction_df, scoped mode)."""
+    return extraction_df(spark, mode="scoped").select(
+        "doc_id", "form_name", "field_name", "value")
 
 
 @register(
@@ -1071,13 +1060,40 @@ def doc_u7_scoped_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_u7_scoped_hoisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept name of the retired generated-projection scoped cascade: the
-    rules-as-data kernel is the one Spark cascade, so this face runs
-    scoped_cascade_values_rules like doc_u7_scoped_extraction (same
-    oracle)."""
-    return scoped_cascade_values_rules(section_context(spark))
+    rules-as-data kernel is the one Spark cascade, so this face runs the
+    scoped extraction_df like doc_u7_scoped_extraction (same oracle)."""
+    return extraction_df(spark, mode="scoped").select(
+        "doc_id", "form_name", "field_name", "value")
 
 
 _SCALE_COPIES = 2500  # 4 fixture docs -> 10k documents
+
+
+def replicated_fixture(spark: SparkSession,
+                       n_copies: int) -> tuple[DataFrame, DataFrame]:
+    """(blocks, doc_forms) of the fixture corpus replicated ``n_copies``
+    times, copy k's doc_ids shifted by 4k past the 4 fixture docs (a range
+    cross-join: pure Spark, no driver loop). Replication only changes the
+    doc_id key space, so every doc_id-partitioned stage stays linear."""
+    copies = spark.range(n_copies).select(F.col("id").alias("copy"))
+
+    def shifted(df: DataFrame) -> DataFrame:
+        return (df.crossJoin(copies)
+                .withColumn("doc_id", F.col("doc_id") + F.col("copy") * 4)
+                .drop("copy"))
+
+    return shifted(blocks_df(spark)), shifted(doc_forms_df(spark))
+
+
+def _scaled_extraction(spark: SparkSession, mode: str) -> DataFrame:
+    """The persisted extraction EAV of the 10k-document corpus. The EAV is
+    the natural stage boundary (the reference sinks exactly this relation
+    between its extraction and validation phases): a standing pipeline
+    re-executes per round, and without the persist every round re-pays
+    the sessionization or full-text aggregation and the cascade fan-out
+    (~3 s of a ~3.4 s warm run at 10k docs)."""
+    blocks, doc_forms = replicated_fixture(spark, _SCALE_COPIES)
+    return track_persist(extraction_df(spark, blocks, doc_forms, mode=mode))
 
 
 @register(
@@ -1093,9 +1109,8 @@ _SCALE_COPIES = 2500  # 4 fixture docs -> 10k documents
 )
 def doc_pipeline_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Throughput variant: the full blocks→clauses→extraction→validation→
-    recovery lineage over a 10k-document corpus (fixture docs replicated
-    with shifted doc_ids via a range cross-join -- pure Spark, no driver
-    loop). Output is the per-form completeness rollup, so bench measures the
+    recovery lineage over a 10k-document corpus (replicated_fixture).
+    Output is the per-form completeness rollup, so bench measures the
     whole pipeline while collecting only 3 rows.
 
     Oracle: replication is linear -- every copy is the fixture corpus with
@@ -1105,25 +1120,9 @@ def doc_pipeline_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation of the replication (any window/aggregate leaking across the
     shifted doc_id boundaries breaks the multiplier).
 
-    This is the shape that carries to 100 TB: replication only changes the
-    doc_id key space; every stage stays partitioned by doc_id."""
-    copies = spark.range(_SCALE_COPIES).select(F.col("id").alias("copy"))
-    shift = F.col("copy") * 4
-
-    blocks = (blocks_df(spark).crossJoin(copies)
-              .withColumn("doc_id", F.col("doc_id") + shift)
-              .drop("copy"))
-    doc_forms = (doc_forms_df(spark).crossJoin(copies)
-                 .withColumn("doc_id", F.col("doc_id") + shift)
-                 .drop("copy"))
-    # Persist the extraction EAV -- the natural stage boundary (the
-    # reference sinks exactly this relation between its extraction and
-    # validation phases): a standing pipeline re-executes per round, and
-    # without the persist every round re-pays the full-text concat agg +
-    # cascade fan-out (~3 s of the ~3.4 s warm run at 10k docs).
-    # Validation, recovery, and the rollup stay live on the warm path.
-    ext = track_persist(extraction_df(spark, blocks, doc_forms))
-    forms = recovered_df(spark, blocks, doc_forms, extraction=ext)
+    Validation, recovery and the rollup stay live over the persisted
+    extraction EAV (_scaled_extraction) on the warm path."""
+    forms = recovered_df(spark, extraction=_scaled_extraction(spark, "fulltext"))
     return (forms.groupBy("form_name")
             .agg(F.countDistinct("doc_id").alias("n_docs"),
                  F.sum(F.when(F.col("required") & F.col("value").isNull(), 1)
@@ -1149,35 +1148,15 @@ def doc_pipeline_scoped_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     clause-grounded mode (form_filler.py:101-115): blocks→clauses→J2 section
     context→scoped cascade over a 10k-document corpus, rolled up per form.
     Exercises the sessionization windows, the doc_id-co-partitioned context
-    join, and the rules-as-data cascade at data scale -- everything stays
-    partitioned by doc_id, so the shape carries to 100 TB. Oracle = the
-    fixture-scale scoped rollup times the copy count (replication is
-    linear; see doc_pipeline_scaled for why the multiplier is also an
-    isolation check)."""
-    copies = spark.range(_SCALE_COPIES).select(F.col("id").alias("copy"))
-    shift = F.col("copy") * 4
-    blocks = (blocks_df(spark).crossJoin(copies)
-              .withColumn("doc_id", F.col("doc_id") + shift)
-              .drop("copy"))
-    doc_forms = (doc_forms_df(spark).crossJoin(copies)
-                 .withColumn("doc_id", F.col("doc_id") + shift)
-                 .drop("copy"))
-    # Rules-as-data cascade over the PERSISTED scoped relation: a single
-    # execution reads it once (the candidates fan-out is one pass), but a
-    # standing pipeline re-executes per round, and without the persist
-    # every round re-pays the explode + window sessionization + context
-    # aggregation subtree (profiled: ~2.6 s of the ~3.4 s warm run at 10k
-    # docs). track_persist is MEMORY_AND_DISK, lineage-preserving, and
-    # LRU-evicted with the memo entry -- the standard stage-materialization
-    # trade a production pipeline makes (the sessionized context relation
-    # is the natural stage boundary; on a cluster it would be a stage
-    # sink). Plan stays constant-size in the schema (VERDICT r2 item 1).
-    vals = scoped_cascade_values_rules(
-        track_persist(section_context(spark, blocks, doc_forms)))
+    join, and the rules-as-data cascade at data scale. The rollup reads the
+    pre-recovery extraction EAV, so ``n_values`` counts what the cascade
+    extracted. Oracle = the fixture-scale scoped rollup times the copy
+    count (replication is linear; see doc_pipeline_scaled for why the
+    multiplier is also an isolation check)."""
+    vals = _scaled_extraction(spark, "scoped")
     # Two-level rollup instead of countDistinct: the per-(form, doc) partial
     # agg is map-side-combinable on a high-cardinality key (no distinct
-    # Expand, no 3-key skew), and it keeps the giant cascade projection out
-    # of the distinct-aggregate codegen unit (janino 64KB method limit).
+    # Expand, no 3-key skew).
     per_doc = (vals.groupBy("form_name", "doc_id")
                .agg(F.count("value").alias("n_values"),
                     F.count(F.lit(1)).alias("n_fields")))

@@ -12,23 +12,29 @@ cascade rules (one row per pattern or keyword try, KBs) that one generic
 extraction kernel applies, so a new form or field changes data, not the
 compiled plan.
 
+Two extraction modes, one lifecycle: ``fulltext`` (the default, what the
+reference runs) reads each document's full text, ``scoped`` (what the
+reference intends) reads each field's section clause context. The mode is
+decided in one place (operators.document.extraction_df); everything after
+extraction is shared.
+
 Typical use::
 
     from multiagent_form_schema_etl_spark.pipeline import DocumentPipeline
 
     pipe = DocumentPipeline(spark, schema_rows)        # or .from_schema_dir
-    out = pipe.run(blocks_df, doc_forms_df)            # dict of stage DFs
+    out = pipe.run(blocks_df, doc_forms_df)            # or mode="scoped"
     try:
         out["forms"].write.parquet(...)                # EAV form rows
         scores = pipe.score(out["forms"], ground_truth_df)  # J1+A4
     finally:
         out["extractions"].unpersist()                 # release the boundary
 
-``run`` persists one stage boundary, the extraction EAV: the cascade runs
-once per run and validation, recovery, completeness and a later rebuilt
-``recover`` (Spark's CacheManager matches its plan to the persisted
-relation) all read that one result instead of rescanning blocks. The
-caller owns the handle and releases it with
+In both modes ``run`` persists one stage boundary, the extraction EAV: the
+cascade runs once per run and validation, recovery, completeness and a
+later rebuilt ``recover`` of the same mode (Spark's CacheManager matches
+its plan to the persisted relation) all read that one result instead of
+rescanning blocks. The caller owns the handle and releases it with
 ``out["extractions"].unpersist()`` once its writes and evaluation are done.
 """
 
@@ -88,14 +94,15 @@ class DocumentPipeline:
     def full_text(self, blocks: DataFrame, doc_forms: DataFrame) -> DataFrame:
         return D.fulltext_df(self.spark, blocks, doc_forms)
 
-    def extract(self, blocks: DataFrame, doc_forms: DataFrame) -> DataFrame:
-        return D.extraction_df(self.spark, blocks, doc_forms, self.schema_rows)
+    def extract(self, blocks: DataFrame, doc_forms: DataFrame,
+                mode: str = "fulltext") -> DataFrame:
+        return D.extraction_df(self.spark, blocks, doc_forms, self.schema_rows,
+                               mode)
 
-    def validate(self, blocks: DataFrame, doc_forms: DataFrame) -> DataFrame:
-        return D.validated_df(self.spark, blocks, doc_forms, self.schema_rows)
-
-    def recover(self, blocks: DataFrame, doc_forms: DataFrame) -> DataFrame:
-        return D.recovered_df(self.spark, blocks, doc_forms, self.schema_rows)
+    def recover(self, blocks: DataFrame, doc_forms: DataFrame,
+                mode: str = "fulltext") -> DataFrame:
+        return D.recovered_df(self.spark, schema_rows=self.schema_rows,
+                              extraction=self.extract(blocks, doc_forms, mode))
 
     def score(self, forms: DataFrame, ground_truth: DataFrame) -> DataFrame:
         return D.score_predictions(
@@ -106,16 +113,19 @@ class DocumentPipeline:
 
     # -- assembled lifecycle ----------------------------------------------
 
-    def run(self, blocks: DataFrame, doc_forms: DataFrame) -> dict[str, DataFrame]:
+    def run(self, blocks: DataFrame, doc_forms: DataFrame,
+            mode: str = "fulltext") -> dict[str, DataFrame]:
         """Full lifecycle as a dict of lazy stage DataFrames (write any
-        subset as stage snapshots via sources.sinks).
+        subset as stage snapshots via sources.sinks). ``mode`` picks the
+        text the cascade reads (``fulltext`` or ``scoped``); the seven
+        stages and their columns are the same in both modes.
 
         ``extractions`` is persisted: the cascade is the one stage
         boundary, and ``validation_errors``, ``forms`` and
         ``completeness`` derive from one validation of it, so no write
         downstream of extraction rescans blocks. The caller owns the
         handle: call ``out["extractions"].unpersist()`` when done."""
-        ext = track_persist(self.extract(blocks, doc_forms))
+        ext = track_persist(self.extract(blocks, doc_forms, mode))
         validated = D.validated_df(self.spark, schema_rows=self.schema_rows,
                                    extraction=ext)
         forms = D.recovered_of(validated)

@@ -12,21 +12,52 @@ import pytest
 from multiagent_form_schema_etl_spark.__main__ import main
 
 
-def test_cli_pipeline_writes_stages_and_forms(spark, tmp_path):
+STAGES = ("words", "clauses", "full_text", "extractions",
+          "validation_errors", "forms", "completeness")
+
+
+@pytest.mark.parametrize("mode", ["fulltext", "scoped"])
+def test_cli_pipeline_writes_stages_and_forms(spark, tmp_path, mode):
+    """Both modes run one lifecycle: every stage can be written, and
+    forms_json carries the validated, recovered form columns. The extra
+    field is required, has a default and a keyword that document 1's full
+    text matches, but its section matches no clause: scoped extraction
+    finds nothing, fails validation and recovers the default."""
+    from multiagent_form_schema_etl_spark.fixtures import SCHEMA_ROWS
+    from multiagent_form_schema_etl_spark.sources import schemas as sch
+
+    schema_dir = str(tmp_path / "schemas")
+    extra = ("NDA_Form", "law_fallback", "string", "No Such Section", True,
+             ["governed by"], None, None, None, None, None, None, "Delaware")
+    sch.save_schema(sch.schema_rows_to_json([*SCHEMA_ROWS, extra],
+                                            "NDA_Form"), schema_dir)
     out = str(tmp_path / "out")
-    rc = main(["pipeline", "--out", out,
-               "--stages", "clauses,forms"])
-    assert rc == 0
-    assert spark.read.parquet(os.path.join(out, "clauses")).count() > 0
+    assert main(["pipeline", "--mode", mode, "--schema-dir", schema_dir,
+                 "--form", "NDA_Form", "--out", out,
+                 "--stages", ",".join(STAGES)]) == 0
+    for stage in STAGES:
+        if stage != "forms":
+            assert spark.read.parquet(os.path.join(out, stage)).count() > 0
     [jf] = glob.glob(os.path.join(out, "forms_json", "part-*.json"))
     rows = [json.loads(line) for line in open(jf)]
-    assert rows and {"doc_id", "field_name", "value"} <= set(rows[0])
+    assert rows and all(set(r) == {"doc_id", "form_name", "field_name",
+                                   "required", "value", "method"}
+                        for r in rows)
+    fallback = {r["doc_id"]: (r["value"], r["method"]) for r in rows
+                if r["field_name"] == "law_fallback"}
+    assert set(fallback) == {1, 2}  # the two NDA fixture documents
+    assert fallback[2] == ("Delaware", "recovery_default")  # no keyword hit
+    # document 1's full text says "governed by"; its clauses' sections do not
+    assert fallback[1] == ({"fulltext": ("the laws of the State of "
+                                         "California", "keyword"),
+                            "scoped": ("Delaware", "recovery_default")}[mode])
 
 
-def test_cli_pipeline_releases_its_stage_boundary(spark, tmp_path):
-    """The fulltext pipeline persists the extraction EAV for its writes
-    and unpersists it after them: no cache entry for the boundary and no
-    persisted RDD outlive the command."""
+@pytest.mark.parametrize("mode", ["fulltext", "scoped"])
+def test_cli_pipeline_releases_its_stage_boundary(spark, tmp_path, mode):
+    """The pipeline persists the extraction EAV for its writes and
+    unpersists it after them, in both modes: no cache entry for the
+    boundary and no persisted RDD outlive the command."""
     from multiagent_form_schema_etl_spark.fixtures import SCHEMA_ROWS
     from multiagent_form_schema_etl_spark.operators import document as D
     from multiagent_form_schema_etl_spark.pipeline import DocumentPipeline
@@ -36,24 +67,14 @@ def test_cli_pipeline_releases_its_stage_boundary(spark, tmp_path):
     D.doc_forms_df(spark).write.parquet(doc_forms)
     sc = spark.sparkContext._jsc.sc()
     base = sc.getPersistentRDDs().size()
-    assert main(["pipeline", "--blocks", blocks, "--doc-forms", doc_forms,
-                 "--out", str(tmp_path / "out")]) == 0
+    assert main(["pipeline", "--mode", mode, "--blocks", blocks,
+                 "--doc-forms", doc_forms, "--out", str(tmp_path / "out")]) == 0
     assert sc.getPersistentRDDs().size() == base
     pipe = DocumentPipeline(spark, SCHEMA_ROWS)
     ext = pipe.extract(spark.read.parquet(blocks),
-                       spark.read.parquet(doc_forms))
+                       spark.read.parquet(doc_forms), mode)
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.lookupCachedData(ext._jdf).isEmpty()
-
-
-def test_cli_scoped_pipeline_persists_nothing(spark, tmp_path):
-    """Scoped mode leaves no persisted RDD behind after the command: its
-    cascade runs over the unpersisted section context."""
-    sc = spark.sparkContext._jsc.sc()
-    base = sc.getPersistentRDDs().size()
-    assert main(["pipeline", "--mode", "scoped",
-                 "--out", str(tmp_path / "out")]) == 0
-    assert sc.getPersistentRDDs().size() == base
 
 
 @pytest.mark.parametrize("mode", ["fulltext", "scoped"])

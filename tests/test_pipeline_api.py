@@ -54,6 +54,29 @@ def test_pipeline_matches_fixture_queries(spark):
     assert {name: _rows(df) for name, df in out.items()} == cached
 
 
+def test_scoped_run_matches_the_scoped_oracle(spark):
+    """Scoped ``run`` persists the scoped extraction EAV: its
+    (doc, form, field, value) rows are the DuckDB oracle of the scoped
+    cascade face, a scoped ``recover`` gives run's forms, and every stage
+    gives the same rows through the cache and after the boundary is
+    released."""
+    import duckdb
+
+    from multiagent_form_schema_etl_spark.plans import registry
+
+    registry.load_all_modules()
+    want = sorted(duckdb.connect().execute(
+        registry.ORACLES["doc_u7_scoped_extraction"]).fetchall())
+    pipe = DocumentPipeline(spark, SCHEMA_ROWS)
+    blocks, forms = D.blocks_df(spark), D.doc_forms_df(spark)
+    with _released(pipe.run(blocks, forms, mode="scoped")) as out:
+        cached = {name: _rows(df) for name, df in out.items()}
+        assert _rows(out["extractions"].select(
+            "doc_id", "form_name", "field_name", "value")) == want
+        assert _rows(pipe.recover(blocks, forms, "scoped")) == cached["forms"]
+    assert {name: _rows(df) for name, df in out.items()} == cached
+
+
 def test_pipeline_on_fresh_input_with_json_schemas(spark):
     """New document, schema loaded from JSON on disk -- end to end."""
     from multiagent_form_schema_etl_spark.sources import schemas as sch

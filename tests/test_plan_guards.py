@@ -258,11 +258,11 @@ def test_pagerank_star_per_component_solve_no_cartesian(spark):
 
 
 def test_scaled_pipelines_pin_stage_persist(spark):
-    """The 10k-doc pipelines materialize their stage relation through
-    track_persist (r6: sessionized context for the scoped twin, the
-    extraction EAV for the full pipeline) so standing re-executions skip
-    the explode+window subtree. Pin the InMemoryRelation in both plans --
-    dropping the persist silently costs ~5x warm throughput."""
+    """The 10k-doc pipelines materialize their stage relation, the
+    extraction EAV of either mode, through track_persist so standing
+    re-executions skip the explode+window subtree. Pin the
+    InMemoryRelation in both plans -- dropping the persist silently costs
+    ~5x warm throughput."""
     for name in ("doc_pipeline_scoped_scaled", "doc_pipeline_scaled"):
         plan = _plan(spark, name)
         assert "InMemoryRelation" in plan or "InMemoryTableScan" in plan, name

@@ -33,7 +33,7 @@ ALLOWED_TOP = set(sys.stdlib_module_names) | {
     "pyspark", "pandas", "numpy", "pyarrow", "duckdb", "pytest",
     "hypothesis", "py4j",
     "multiagent_form_schema_etl_spark", "tests", "tools",
-    "__spark_entry__", "bench", "conftest",
+    "__spark_entry__", "bench", "conftest", "perfbench",
     # vendored clean-room protobuf shim (package dir: vendor/pbshim);
     # `google.protobuf` resolves there via the documented sys.path shim
     "google",

@@ -1255,15 +1255,9 @@ def scoped_pipeline_copies(spark, n_copies: int) -> float:
     10x that)."""
     from multiagent_form_schema_etl_spark.operators import document as D
 
-    copies = spark.range(n_copies).select(F.col("id").alias("copy"))
-    shift = F.col("copy") * 4
-    blocks = (D.blocks_df(spark).crossJoin(copies)
-              .withColumn("doc_id", F.col("doc_id") + shift).drop("copy"))
-    doc_forms = (D.doc_forms_df(spark).crossJoin(copies)
-                 .withColumn("doc_id", F.col("doc_id") + shift).drop("copy"))
+    blocks, doc_forms = D.replicated_fixture(spark, n_copies)
     t0 = time.perf_counter()
-    vals = D.scoped_cascade_values_rules(
-        D.section_context(spark, blocks, doc_forms))
+    vals = D.extraction_df(spark, blocks, doc_forms, mode="scoped")
     per_doc = (vals.groupBy("form_name", "doc_id")
                .agg(F.count("value").alias("n_values")))
     out = per_doc.groupBy("form_name").agg(

@@ -60,11 +60,6 @@ print("SCALEREC " + json.dumps(out))
 """
 
 
-def _steal() -> tuple[int, int]:
-    v = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-    return (v[7] if len(v) > 7 else 0, sum(v[:8]))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=3)
@@ -72,6 +67,7 @@ def main() -> None:
 
     # build (or reuse) the x10 linear corpus with a throwaway session
     from multiagent_form_schema_etl_spark.session import get_spark
+    from perfbench import probe
     from tools import scale_probe
     spark = get_spark("scaling_evidence_build")
     spark.sparkContext.setLogLevel("ERROR")
@@ -79,7 +75,7 @@ def main() -> None:
     spark.stop()
 
     child = _CHILD.format(root=ROOT, sf_dir=sf_dir, faces=FACES)
-    s0, t0 = _steal()
+    jiffies0 = probe.cpu_jiffies()
     runs: dict[str, list[dict]] = {"32": [], "8": []}
     for i in range(args.n):
         for cpus in ("32", "8"):
@@ -93,12 +89,12 @@ def main() -> None:
             if rec is None:
                 raise RuntimeError(f"pass failed: {p.stderr[-500:]}")
             runs[cpus].append(rec)
-    s1, t1 = _steal()
+    steal = probe.steal_pct(jiffies0, probe.cpu_jiffies())
 
     med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
     out = {
         "corpus": sf_dir, "n": args.n,
-        "steal_pct": round(100.0 * (s1 - s0) / max(1, t1 - t0), 2),
+        "steal_pct": round(steal, 2),
         "parallelism": {c: runs[c][0]["cpus"] for c in runs},
         "per_face": {},
         "runs": runs,
