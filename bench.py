@@ -20,7 +20,8 @@ full per-run data, overflowed the driver's ~2 KB stdout-tail capture,
 and BENCH_r08.parsed came back null): the FINAL stdout line is a COMPACT
 medians-only JSON record (hard-capped under ~1.9 KB); the full per-run
 records land in the committed side artifact BENCH_LOCAL.json, which is
-where the error bars live.
+where the error bars live, together with each face's layers (build,
+Catalyst phases, codegen, stage metrics) from ``time_face``.
 """
 
 from __future__ import annotations
@@ -31,13 +32,17 @@ import statistics
 import subprocess
 import sys
 import time
+import types
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# host load and steal (loadavg, cpu_jiffies) and Spark's codegen counters
-# (SparkCounters) come from the benchmark's measurement layer
+# host load and steal (loadavg, cpu_jiffies), Spark's codegen counters
+# (SparkCounters), Catalyst phases (plan_phases_ms) and per-job-group stage
+# metrics (StatusReader, exec_by_group) come from the benchmark's
+# measurement layer
 from perfbench import probe  # noqa: E402
 
 
@@ -60,8 +65,6 @@ OPTIONAL = [
     "x1_dedup_jaccard_ngram",
     "x1_dedup_minhash_lsh",
     "x2_cosine_topk",
-    "x2_cosine_topk_bruteforce",
-    "x2_cosine_topk_gemm",
     "x2_ann_pq_adc",
     "x1_dedup_embedding_cosine",
     "x5_decontaminate_semantic",
@@ -74,6 +77,66 @@ OPTIONAL = [
     "st_tumbling_window",
     "st_session_window",
 ]
+
+
+def time_face(spark, name: str, build) -> dict:
+    """Time one face: ``build()`` returns its DataFrame, which is reduced
+    to one row through count + a hash of EVERY output column. That forces
+    full computation of the result (nothing is prunable the way it is
+    under a bare count) while shipping one row to the driver, so the
+    timing measures the engine, not Python Row materialization of large
+    results (w1 at sf0.1 is 150k rows; collecting them costs ~2.5s of
+    pure driver-side transfer that no cluster deploy pays).
+
+    Returns the wall seconds ``s`` (build + reduce) and the face's
+    layers: ``build_s``, Catalyst ``plan_ms`` of the reduce, the janino
+    ``codegen`` delta, and ``exec`` -- the stage metrics of the face's
+    own job group plus ``peak_exec_mem_bytes``, the largest
+    ``peakExecutionMemory`` among its stages (Spark sums that figure over
+    a stage's tasks). Counters and the status store are read outside the
+    timed region."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    counters = probe.SparkCounters(spark)
+    batch = f"face-{uuid.uuid4().hex[:12]}"  # this run's own job group
+    group = f"{batch}/{name}"
+    sc.setJobGroup(group, name)
+    c0 = counters.snapshot()
+    try:
+        t0 = time.perf_counter()
+        df = build()
+        t_build = time.perf_counter()
+        reduced = df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"))
+        [r] = reduced.collect()
+        t1 = time.perf_counter()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    cg = probe.delta(counters.snapshot(), c0)
+    # the status store is fed by an asynchronous listener: let it catch up
+    # with the jobs that just ran before reading their stages
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    reader = probe.StatusReader(spark)
+    jobs, stages = reader.jobs(), reader.stages()
+    store = types.SimpleNamespace(jobs=lambda: jobs, stages=lambda: stages)
+    ex = probe.exec_by_group(store, batch).get(
+        group, dict.fromkeys(probe.EXEC_KEYS, 0))
+    ids = {sid for j in jobs if j.get("jobGroup") == group
+           for sid in j["stageIds"]}
+    ex["peak_exec_mem_bytes"] = max(
+        (s["peakExecutionMemory"] for s in stages
+         if s["stageId"] in ids and s["status"] == "COMPLETE"), default=0)
+    ex["task_s"] = round(ex["task_s"], 3)
+    ex["gc_s"] = round(ex["gc_s"], 3)
+    return {"s": round(t1 - t0, 3), "rows": r["n"],
+            "build_s": round(t_build - t0, 3),
+            "plan_ms": probe.plan_phases_ms(reduced),
+            "codegen": {"compile_count": cg["compile_count"],
+                        "compile_ms": round(cg["compile_ns"] / 1e6, 1)},
+            "exec": ex}
 
 
 def run_pass() -> dict:
@@ -98,38 +161,11 @@ def run_pass() -> dict:
     if "doc_a3_full_text" in qs:
         qs["doc_a3_full_text"](spark, SF_DIR).collect()
 
-    from pyspark.sql import functions as F
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = qs[name](spark, SF_DIR)
-        # Reduce through count + a hash of EVERY output column: forces full
-        # computation of the result (nothing is prunable the way it is
-        # under a bare count) while shipping one row to the driver -- the
-        # timing measures the engine, not Python Row materialization of
-        # large results (w1 at sf0.1 is 150k rows; collecting them costs
-        # ~2.5s of pure driver-side transfer that no cluster deploy pays).
-        [r] = (df.select(F.count(F.lit(1)).alias("n"),
-                         F.max(F.xxhash64(*[F.col(c) for c in df.columns]))
-                          .alias("h"))
-               .collect())
-        assert r["n"] >= 0
-        return round(time.perf_counter() - t0, 3)
-
     def run_collect(name: str) -> float:
         t0 = time.perf_counter()
         rows = qs[name](spark, SF_DIR).collect()
         assert len(rows) >= 0
         return round(time.perf_counter() - t0, 3)
-
-    # janino compile count and ns (process-wide counters, also bumped by
-    # the per-task compiles of whole-stage codegen)
-    counters = probe.SparkCounters(spark)
-
-    def codegen_delta(a: dict, b: dict) -> dict:
-        d = probe.delta(b, a)
-        return {"compile_count": d["compile_count"],
-                "compile_ms": round(d["compile_ns"] / 1e6, 1)}
 
     # Cold pass (includes each query's one-time Catalyst analysis + codegen
     # compile -- the headline, comparable across rounds), then a warm pass
@@ -137,12 +173,16 @@ def run_pass() -> dict:
     # amortizes to zero, so warm times are the per-round throughput signal.
     # The warm pass compiles ~nothing while the codegen cache holds the
     # headliners' working set (session.CODEGEN_CACHE_ENTRIES).
-    c0 = counters.snapshot()
-    times = {name: run_once(name) for name in names}
-    c1 = counters.snapshot()
-    warm = {name: run_once(name) for name in names}
-    c2 = counters.snapshot()
-    codegen = {"cold": codegen_delta(c0, c1), "warm": codegen_delta(c1, c2)}
+    layers: dict[str, dict] = {"cold": {}, "warm": {}}
+    for phase in layers:
+        for name in names:
+            layers[phase][name] = time_face(
+                spark, name, lambda: qs[name](spark, SF_DIR))
+    times = {n: r.pop("s") for n, r in layers["cold"].items()}
+    warm = {n: r.pop("s") for n, r in layers["warm"].items()}
+    codegen = {phase: {k: round(sum(r["codegen"][k] for r in recs.values()), 1)
+                       for k in ("compile_count", "compile_ms")}
+               for phase, recs in layers.items()}
     # Methodology bridge (r2 -> r3 honesty): the r4+ hash-reduce timing
     # flatters large-result queries vs r1's collect()-based numbers; carry
     # the old methodology for the two affected headliners so r1->rN trends
@@ -160,6 +200,7 @@ def run_pass() -> dict:
         "warm_total": round(sum(warm.values()), 3),
         "queries_collect_method": collect_times,
         "codegen": codegen,
+        "layers": layers,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # Scaling-probe evidence (VERDICT r14 item 2): the record itself
         # proves which core count the session ACTUALLY ran with -- the
@@ -270,7 +311,8 @@ def build_records(runs: list[dict]) -> tuple[dict, str]:
                   "loadavg_before": r.get("loadavg_before", []),
                   "loadavg_after": r.get("loadavg_after", []),
                   "steal_pct": r.get("steal_pct"),
-                  "codegen": r.get("codegen")}
+                  "codegen": r.get("codegen"),
+                  "layers": r.get("layers")}
                  for r in runs],
         "sf": runs[0]["sf"],
     }

@@ -865,19 +865,14 @@ def x1_entity_qgram_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = (load_table(spark, sf_dir, "part")
              .select("p_name").distinct()
              .select("p_name", F.length("p_name").alias("len")))
-    _grams, _cand, out = qgram_join_parts(names)
-    return out
+    return qgram_join(names)
 
 
-def qgram_join_parts(names: DataFrame
-                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
+def qgram_join(names: DataFrame) -> DataFrame:
     """The q-gram count-filtered similarity join over an arbitrary
-    (p_name, len) relation, returning its three stages -- (gram index,
-    count-filtered candidates, levenshtein-verified pairs) -- so the face
-    above registers the verified relation while the scale probe
-    (tools/scale_probe.py --qgram) measures the intermediate volumes
-    (gram posting-list skew, candidate count vs all-pairs) on replicated
-    and name-flood corpora (VERDICT r9 item 5)."""
+    (p_name, len) relation: the levenshtein-verified pairs
+    (name_a, name_b, edit_dist) of every name pair within _QGRAM_K
+    edits."""
     q, k = _QGRAM_Q, _QGRAM_K
     min_long = q + k * q  # max(len) >= this  <=>  count bound >= 1
 
@@ -905,10 +900,9 @@ def qgram_join_parts(names: DataFrame
     short_pairs = (shorts.select(F.col("p_name").alias("name_a"))
                    .join(shorts.select(F.col("p_name").alias("name_b")),
                          F.col("name_a") < F.col("name_b")))
-    verified = (cand.unionByName(short_pairs).distinct()
-                .withColumn("edit_dist", F.levenshtein("name_a", "name_b"))
-                .filter(F.col("edit_dist") <= k))
-    return grams, cand, verified
+    return (cand.unionByName(short_pairs).distinct()
+            .withColumn("edit_dist", F.levenshtein("name_a", "name_b"))
+            .filter(F.col("edit_dist") <= k))
 
 
 @register(
@@ -1176,7 +1170,7 @@ def x1_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = (load_table(spark, sf_dir, "part")
              .select("p_name").distinct()
              .select("p_name", F.length("p_name").alias("len")))
-    _grams, _cand, pairs = qgram_join_parts(names)
+    pairs = qgram_join(names)
     part = load_table(spark, sf_dir, "part")
     reps = (part.groupBy("p_name").agg(F.min("p_partkey").alias("pk"))
             .join(part, ["p_name"])

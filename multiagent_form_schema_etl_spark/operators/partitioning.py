@@ -107,9 +107,9 @@ def salted_join(fact: DataFrame, dim: DataFrame, fact_key: str,
     salt meets its replicated dim row), the dim side replicates once per
     salt via a small explode, and the join runs shuffle-hash on
     (key, salt) so a hot fact key spreads over ``n_salts`` reducers.
-    Shared by the gate-visible j_salted_skew_join and the skew scale
-    probe (tools/scale_probe.py --skew, which measured it 3.1x faster
-    than the naive join on a 50%%-one-key corpus).
+    Used by the gate-visible j_salted_skew_join; on a 50%-one-key
+    corpus it ran 3.1x faster than the naive join (SCALE_PROBE.md, the
+    skew probe).
 
     Output contract (ADVICE r6): the salt is an internal mechanism, so
     the returned relation carries the ORIGINAL columns of both inputs

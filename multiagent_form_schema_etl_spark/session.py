@@ -36,14 +36,13 @@ CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(app_name: str = "multiagent-form-schema-etl-spark",
-              cpus: str | None = None, ui: bool = False) -> SparkSession:
+              cpus: str | None = None) -> SparkSession:
     """Build (or fetch) the session with scale-oriented defaults.
 
     Any existing active session is reused (configs are then whatever it was
     built with) -- the driver may pass its own session to ``entry``.
-    ``ui=True`` keeps the Spark UI (and its REST status API) up for probes
-    that read per-stage spill/shuffle metrics; off by default (static conf,
-    only effective when this call launches the JVM).
+    The Spark UI stays off: per-stage shuffle, spill and memory figures
+    are read from the status store, which Spark keeps without the UI.
     """
     # When no real protobuf distribution exists, expose the repo's
     # clean-room wire-format shim (vendor/pbshim) on PYTHONPATH *before*
@@ -76,7 +75,7 @@ def get_spark(app_name: str = "multiagent-form-schema-etl-spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true" if ui else "false")
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )

@@ -533,9 +533,9 @@ def streaming_category_totals_tws(spark: SparkSession, sf_dir: str,
 # the longest per-key sequence. For the ORACLE GATE both engines run the
 # SQL over the first {cap} events per key (explicit, identical filter on
 # both sides -- the hash match still proves step-identical recursion over
-# 20+ levels and ~6 batch closures per key at threshold 100); the
-# FULL-DEPTH run (86 levels at sf0.01, 99 at sf0.1) stays probed by
-# tools/scale_probe.py --streaming via threshold_sql_full_depth().
+# 20+ levels and ~6 batch closures per key at threshold 100). The
+# uncapped run (86 levels at sf0.01, 99 at sf0.1) was timed and matched
+# against the batch kernel once; SCALE_PROBE.md round 7 records it.
 _THRESHOLD_SQL_DEPTH_CAP = 24
 
 _THRESHOLD_RECURSIVE_SQL = """
@@ -581,8 +581,8 @@ def st_stateful_threshold_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The GATE face runs depth-capped at _THRESHOLD_SQL_DEPTH_CAP (the same
     explicit ``rn <= cap`` filter on both engines -- still 24 levels and
-    ~6 threshold closures per key); threshold_sql_full_depth() is the
-    uncapped run the --streaming probe measures. This face is the right
+    ~6 threshold closures per key); the uncapped run is recorded in
+    SCALE_PROBE.md round 7. This face is the right
     tool for SHORT sequences (orchestration phase chains, retry ladders);
     for unbounded streams the applyInPandas kernel face scales with O(1)
     state per key, one level per EVENT being materialized as a full
@@ -618,38 +618,6 @@ def st_stateful_threshold_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.createOrReplaceTempView(name)
     return s2.sql(_THRESHOLD_RECURSIVE_SQL.format(
         v=name, cap=_THRESHOLD_SQL_DEPTH_CAP))
-
-
-def threshold_sql_full_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UNCAPPED recursive-CTE run (depth = longest per-key sequence:
-    86 levels at sf0.01, 99 at sf0.1). Not registered -- the oracle gate
-    runs the depth-capped twin above; tools/scale_probe.py --streaming
-    measures and row-checks this one against the batch kernel face.
-
-    Cache ownership: the loop-invariant input persists OUTSIDE any
-    registered build, so the memo cannot release it -- the handle rides
-    on the returned DataFrame as ``_sg_cached_input`` and the CALLER
-    unpersists it after consuming the result (the probe does; a caller
-    that forgets merely leaves one LRU-evictable relation behind)."""
-    from ..session import tune_for_session
-
-    s2 = tune_for_session(spark.newSession())
-    s2.conf.set("spark.sql.cteRecursionLevelLimit", "10000")
-    ev = load_table(s2, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value").persist()
-    n_rows = ev.count()
-    # the rec CTE accumulates one row per (key, level) = one per input
-    # event; Spark's default cteRecursionRowLimit (1M) trips at the 10x
-    # probe corpus, so size the backstop to the input with headroom
-    s2.conf.set("spark.sql.cteRecursionRowLimit",
-                str(max(1_000_000, 2 * n_rows)))
-    s2.conf.set("spark.sql.shuffle.partitions",
-                str(max(1, min(32, n_rows // 100_000))))
-    name = "__threshold_sql_events_full"
-    ev.createOrReplaceTempView(name)
-    out = s2.sql(_THRESHOLD_RECURSIVE_SQL.format(v=name, cap=1 << 30))
-    out._sg_cached_input = ev
-    return out
 
 
 # ---------------------------------------------------------------------------

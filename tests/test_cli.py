@@ -161,6 +161,8 @@ def test_bench_compact_line_stays_under_tail_budget():
         "master": "local[32]", "parallelism": 32,
         "codegen": {"cold": {"compile_count": 600, "compile_ms": 9000.0},
                     "warm": {"compile_count": 0, "compile_ms": 0.0}},
+        "layers": {"cold": {n: {"build_s": 0.1} for n in names},
+                   "warm": {n: {"build_s": 0.0} for n in names}},
     }
     run_loaded = dict(run, value=92.15,
                       loadavg_before=[7.01, 5.5, 3.2],
@@ -189,6 +191,9 @@ def test_bench_compact_line_stays_under_tail_budget():
     # per-pass codegen counts live in the side record only
     assert full["runs"][0]["codegen"]["warm"]["compile_count"] == 0
     assert "codegen" not in rec
+    # so do the per-face layers
+    assert full["runs"][0]["layers"]["cold"][names[0]]["build_s"] == 0.1
+    assert "layers" not in rec
 
     # a pathologically wide headliner set must shed queries_warm, not grow
     wide = dict(run)

@@ -46,3 +46,39 @@ def test_streaming_observed_metrics_per_microbatch(spark):
     null_total = sum(p["observedMetrics"]["quality"]["nulls_user_id"]
                      for p in progresses)
     assert null_total == batch_ev.filter(F.col("user_id").isNull()).count()
+
+
+def test_time_face_records_each_faces_own_jobs_and_stages(spark):
+    """bench.time_face is the one way a face is timed (bench passes, the
+    scale probe, the scaling evidence). Two faces timed in turn each get
+    their own jobs and stages: together the two records account for every
+    job and completed stage that ran, so the second counts none of the
+    first's. The session runs without the Spark UI: the stage metrics come
+    from the status store."""
+    import __spark_entry__ as e
+    import bench
+    from perfbench import probe
+
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.ui.enabled") == "false"
+    assert sc.uiWebUrl is None
+    qs = e.queries()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    reader = probe.StatusReader(spark)
+    jobs_before = {j["jobId"] for j in reader.jobs()}
+
+    recs = [bench.time_face(spark, name,
+                            lambda name=name: qs[name](spark, SF_SMOKE))
+            for name in ("x1_dedup_exact", "q01_pricing_summary")]
+
+    for r in recs:
+        assert r["exec"]["jobs"] >= 1 and r["exec"]["stages"] >= 1
+        assert r["rows"] > 0 and 0 <= r["build_s"] <= r["s"]
+        assert set(r["plan_ms"]) == {"analysis", "optimization", "planning"}
+        assert r["exec"]["peak_exec_mem_bytes"] >= 0
+    new_jobs = [j for j in reader.jobs() if j["jobId"] not in jobs_before]
+    stages = {s["stageId"]: s["status"] for s in reader.stages()}
+    ran = {sid for j in new_jobs for sid in j["stageIds"]
+           if stages.get(sid) == "COMPLETE"}
+    assert sum(r["exec"]["jobs"] for r in recs) == len(new_jobs)
+    assert sum(r["exec"]["stages"] for r in recs) == len(ran)

@@ -3,11 +3,13 @@
 item 2): at sf0.1 every headliner is 0.5-2 s and fixed per-query cost
 (Catalyst planning, task scheduling) hides the data-parallel part, so the
 driver's core-count probe reads flat ratios and can only conclude
-"harness bug". This runs the heaviest faces on the 10x-replicated linear
-corpus (tools/scale_probe.py build: 50k docs across 32 part files, so scan
-parallelism is real) under local[8] and local[32] -- fresh subprocess JVM
-per (face, cores) pass, interleaved 32/8/32/8 so ambient drift hits both
-sides -- and writes SCALING_r15.json.
+"harness bug". This runs the heaviest faces on the 30x-replicated linear
+corpus (tools/scale_probe.py build: 150k docs across 32 part files, so
+scan parallelism is real) under local[8] and local[32] -- fresh
+subprocess JVM per (face, cores) pass, interleaved 32/8/32/8 so ambient
+drift hits both sides -- and writes SCALING_r15.json. Each face is timed
+by ``bench.time_face`` (count + hash reduce), so every run also records
+the face's build/plan/codegen/stage layers.
 
 Usage: python tools/scaling_evidence.py [--n 3]
 """
@@ -19,7 +21,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -32,9 +33,10 @@ FACES = ["x1_dedup_jaccard_ngram", "x5_repetition_stats",
 # the jaccard side calls the face's helpers without the persist; the
 # other two registered faces have no persist and re-execute fully.
 _CHILD = r"""
-import json, os, sys, time
+import json, sys
 sys.path.insert(0, {root!r})
 import __spark_entry__ as e
+from bench import time_face
 from multiagent_form_schema_etl_spark.session import get_spark
 from multiagent_form_schema_etl_spark.operators.dedup import (
     _jaccard_ngram_from, _tok_d_df)
@@ -48,14 +50,11 @@ from multiagent_form_schema_etl_spark.catalog import load_table
 load_table(spark, d, "documents").limit(1).collect()
 out = {{"cpus": spark.sparkContext.defaultParallelism}}
 for name in {faces!r}:
-    df = qs[name](spark, d)
     # first execution pays Catalyst planning + codegen (a per-query
-    # constant that hides the data-parallel part); the timed WARM pass
+    # constant that hides the data-parallel part); the recorded WARM pass
     # isolates steady-state compute, which is what must scale with cores
-    df.write.format("noop").mode("overwrite").save()
-    t0 = time.perf_counter()
-    qs[name](spark, d).write.format("noop").mode("overwrite").save()
-    out[name] = round(time.perf_counter() - t0, 3)
+    time_face(spark, name, lambda: qs[name](spark, d))
+    out[name] = time_face(spark, name, lambda: qs[name](spark, d))
 print("SCALEREC " + json.dumps(out))
 """
 
@@ -65,7 +64,7 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=3)
     args = ap.parse_args()
 
-    # build (or reuse) the x10 linear corpus with a throwaway session
+    # build (or reuse) the x30 linear corpus with a throwaway session
     from multiagent_form_schema_etl_spark.session import get_spark
     from perfbench import probe
     from tools import scale_probe
@@ -100,8 +99,8 @@ def main() -> None:
         "runs": runs,
     }
     for f in FACES:
-        m32 = med([r[f] for r in runs["32"]])
-        m8 = med([r[f] for r in runs["8"]])
+        m32 = med([r[f]["s"] for r in runs["32"]])
+        m8 = med([r[f]["s"] for r in runs["8"]])
         out["per_face"][f] = {"sec_32c": m32, "sec_8c": m8,
                               "ratio_8c_over_32c": round(m8 / m32, 2)}
     with open(os.path.join(ROOT, "SCALING_r15.json"), "w") as fh:
