@@ -45,10 +45,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so `spark.sql` queries see the
     same names the DuckDB oracle uses."""

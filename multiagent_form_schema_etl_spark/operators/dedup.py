@@ -682,7 +682,7 @@ def x1_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOCK_UF_MAX_PAIRS = 5_000_000  # per-block pair bound for the single-task
 #   union-find: ~80 MB of int64 edge arrays per Arrow batch -- comfortably
 #   inside one task; a block above it falls back to the distributed
-#   min-label kernel rather than risking task memory
+#   star-contraction kernel rather than risking task memory
 
 
 def blocked_components(spark: SparkSession, sf_dir: str,
@@ -690,12 +690,13 @@ def blocked_components(spark: SparkSession, sf_dir: str,
     """Connected components of the near-dup pair graph, exploiting the
     generator's BLOCKING INVARIANT: `_tok_d_df`'s inverted-index join only
     ever pairs documents sharing (lang, floor(n_chars/50)), so components
-    can never span blocks -- which turns the O(diameter)-round distributed
+    can never span blocks -- which turns the multi-round distributed
     fixpoint into ONE applyInPandas union-find per block (a single shuffle
-    of the near-dup-sized pair relation on the block key; r10 measured the
-    min-label kernel's 9 checkpoint rounds at ~4.5 s at sf0.1 vs ~1 s for
-    this pass). Labels are the component-minimum doc_id, identical to both
-    iterative kernels, so every downstream oracle is unchanged.
+    of the near-dup-sized pair relation on the block key, where star
+    contraction pays a checkpointed round per contraction step). Labels
+    are the component-minimum doc_id, identical to
+    `star_contraction_components`, so every downstream oracle is
+    unchanged.
 
     100 TB: per-task work is bounded by the largest BLOCK's pair count,
     not the corpus -- blocks are (lang x length-bucket) shards whose pair
@@ -705,11 +706,12 @@ def blocked_components(spark: SparkSession, sf_dir: str,
     _BLOCK_UF_MAX_PAIRS, or a caller-passed pair graph with ANY
     cross-block edge (i.e. the blocking invariant this shortcut needs
     does not actually hold -- embedding/semantic pairs, say), falls back
-    to the O(diameter) min-label kernel; the general kernels remain the
-    registered `x1_dedup_components`/`_star` faces.
+    to `star_contraction_components`, the one general kernel (behind the
+    registered `x1_dedup_components`/`_star` faces).
 
     Returns (node_id, component_id) for EVERY document (singletons label
-    themselves), same contract as the iterative kernels."""
+    themselves; pairs with a NULL endpoint are dropped), same contract as
+    `star_contraction_components`."""
     import numpy as np
     import pandas as pd
 
@@ -743,7 +745,7 @@ def blocked_components(spark: SparkSession, sf_dir: str,
            .agg(F.max("n").alias("mx"), F.sum("x").alias("n_cross"))
            .collect())
     if (g["n_cross"] or 0) > 0 or (g["mx"] or 0) > _BLOCK_UF_MAX_PAIRS:
-        return min_label_components(docs.select("doc_id"), pairs)
+        return star_contraction_components(docs.select("doc_id"), pairs)
     blocked = blocked.select("doc_a", "doc_b", "lang", "bucket")
 
     def uf(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -777,49 +779,10 @@ def blocked_components(spark: SparkSession, sf_dir: str,
                      .alias("component_id")))
 
 
-def min_label_components(nodes: DataFrame, pairs: DataFrame,
-                         max_rounds: int = 15) -> DataFrame:
-    """Connected components by iterative min-label propagation, shared by
-    every pair-graph clustering operator (Jaccard near-dups, embedding
-    semantic clusters): each round every node takes the min of its own and
-    its neighbors' labels (one join + one groupBy per round, all shuffles on
-    the node id), converging in O(graph diameter) rounds -- near-dup
-    clusters are near-cliques, so 2-4 rounds in practice. localCheckpoint
-    truncates the growing lineage each round; labels are monotonically
-    non-increasing, so an unchanged label SUM means convergence -- one
-    scalar aggregate per round, never a data collect.
-
-    ``nodes``: single-column node-id relation. ``pairs``: two-column
-    undirected edge list. Returns (node_id, component_id) with
-    component_id = min node id of the component."""
-    node_col, (pa, pb) = nodes.columns[0], pairs.columns[:2]
-    edges = (pairs.select(F.col(pa).alias("a"), F.col(pb).alias("b"))
-             .unionByName(pairs.select(F.col(pb).alias("a"),
-                                       F.col(pa).alias("b"))))
-    edges = edges.localCheckpoint()
-    labels = nodes.select(F.col(node_col).alias("node_id"),
-                          F.col(node_col).alias("label"))
-    prev_sum = None
-    for _ in range(max_rounds):  # diameter cap; converges far earlier
-        neighbor_min = (edges.join(labels, edges.a == labels.node_id)
-                        .groupBy(F.col("b").alias("node_id"))
-                        .agg(F.min("label").alias("nlabel")))
-        labels = (labels.join(neighbor_min, "node_id", "left")
-                  .select("node_id",
-                          F.least("label", F.coalesce("nlabel", "label"))
-                           .alias("label"))
-                  .localCheckpoint())
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels.select("node_id", F.col("label").alias("component_id"))
-
-
-# Shared by both connected-components strategies (min-label propagation and
-# large-star/small-star contraction): the physical algorithm differs, the
-# logical result -- per-cluster canonical ids over the Jaccard >= 0.8 pair
-# graph -- is identical, so they share one recursive-CTE oracle.
+# Shared by both connected-components face names (x1_dedup_components and
+# x1_dedup_components_star build the same star-contraction plan): per-cluster
+# canonical ids over the Jaccard >= 0.8 pair graph, via recursive
+# reachability + MIN.
 _COMPONENTS_ORACLE = f"""
     WITH RECURSIVE {_TOKENS_CTE},
     inter AS (
@@ -854,17 +817,14 @@ def x1_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- the step that turns pairwise near-dup hits into actual corpus dedup
     decisions at scale.
 
-    Spark side is iterative min-label propagation: each round every node
-    takes the min of its own and its neighbors' labels (one join + one
-    groupBy per round, all shuffles on doc_id), converging in O(graph
-    diameter) rounds -- near-dup clusters are near-cliques, so 2-4 rounds in
-    practice. localCheckpoint truncates the growing lineage each round; the
-    convergence check is a scalar aggregate, not a data collect (see
-    min_label_components). The DuckDB twin computes the same components via
+    Spark side is `star_contraction_components`, the one general
+    connected-components kernel (O(log n) rounds whatever the chain
+    depth); `x1_dedup_components_star` is the same plan under its
+    original name. The DuckDB twin computes the same components via
     recursive reachability + MIN."""
     pairs = _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    comp = min_label_components(docs, pairs)
+    comp = star_contraction_components(docs, pairs)
     return (comp.groupBy("component_id")
             .agg(F.count(F.lit(1)).alias("n_docs")))
 
@@ -924,9 +884,9 @@ def x1_dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     member is the whole point of finding the cluster. Composes the
     Jaccard pair graph + the block-local union-find components kernel
     (`blocked_components` -- valid here because the pair generator blocks
-    on (lang, length-bucket), so components never span blocks; r10 swap,
-    VERDICT r9 item 4: the min-label fixpoint's 9 checkpoint rounds were
-    ~4.5 s of this face's cold time at sf0.1) with the portable
+    on (lang, length-bucket), so components never span blocks; star
+    contraction in its place took this face's warm span in perfbench
+    corpus_prep from 1.77 s to 2.72 s on a 4-vCPU box) with the portable
     saturating quality formula (identical in both engines, rounded at 6
     before ranking).
 
@@ -967,11 +927,14 @@ def star_contraction_components(nodes: DataFrame, pairs: DataFrame,
                                 max_rounds: int = 24) -> DataFrame:
     """Connected components by alternating large-star/small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond") -- the
-    100 TB alternative to min-label propagation: label propagation needs
-    O(graph diameter) rounds (a chain of pairwise near-dups propagates one
-    hop per round), star contraction converges in O(log n) rounds
-    regardless of diameter, because every round rewires whole neighborhoods
-    onto their minimum instead of moving labels one edge at a time.
+    one general connected-components kernel of the engine (behind
+    `x1_dedup_components`/`_star`, `x1_dedup_semantic_clusters`, the
+    pagerank faces and `blocked_components`' fallback). Label propagation
+    would need O(graph diameter) rounds (a chain of pairwise near-dups
+    propagates one hop per round); star contraction converges in O(log n)
+    rounds regardless of diameter, because every round rewires whole
+    neighborhoods onto their minimum instead of moving labels one edge at
+    a time.
 
     Each round is two edge rewrites, all shuffles on node id:
     - large-star: per node u, every LARGER neighbor v re-attaches to
@@ -981,9 +944,15 @@ def star_contraction_components(nodes: DataFrame, pairs: DataFrame,
     At the fixed point the edge set is exactly the star {(v, root)} per
     component. Convergence is detected with a scalar signature (edge count
     + xxhash sum), never a data collect; localCheckpoint truncates lineage
-    per round exactly like the label-prop twin. The round cap is pure
-    headroom (covers n ~ 2^24 at the documented O(log n) rate) -- converged
-    graphs exit at the signature check, so an unused cap costs nothing."""
+    per round. The round cap is pure headroom (covers n ~ 2^24 at the
+    documented O(log n) rate) -- converged graphs exit at the signature
+    check, so an unused cap costs nothing.
+
+    ``nodes``: single-column node-id relation. ``pairs``: two-column
+    undirected edge list; self-loops and rows with a NULL endpoint are
+    dropped. Returns (node_id, component_id) for every node, with
+    component_id = min node id of the component (a node without edges
+    labels itself)."""
     node_col, (pa, pb) = nodes.columns[0], pairs.columns[:2]
     e = (pairs.select(F.col(pa).alias("u"), F.col(pb).alias("v"))
          .filter(F.col("u") != F.col("v")))
@@ -1032,105 +1001,39 @@ def star_contraction_components(nodes: DataFrame, pairs: DataFrame,
 
 @register("x1_dedup_components_star", oracle=_COMPONENTS_ORACLE)
 def x1_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering via large-star/small-star contraction -- same
-    logical result (and oracle) as `x1_dedup_components`, different physical
-    strategy: O(log n) rounds instead of O(diameter), the shape that wins on
-    long-chain duplicate graphs at 100 TB. Cross-strategy equality is also
-    pinned in pytest (test_corpus_prep.py)."""
-    pairs = _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    comp = star_contraction_components(docs, pairs)
-    return (comp.groupBy("component_id")
-            .agg(F.count(F.lit(1)).alias("n_docs")))
+    """Near-dup clustering via large-star/small-star contraction -- the
+    same plan and oracle as `x1_dedup_components` (both names stay
+    registered). The kernel's agreement with `blocked_components` and its
+    long-chain behaviour are pinned in pytest (test_corpus_prep.py)."""
+    return x1_dedup_components(spark, sf_dir)
 
 
-def _member_edges(edges, nodes, node_col: str):
-    """Drop edges touching ids absent from ``nodes`` (e.g. pairs computed
-    before a document filter). Shared by both pagerank faces: a foreign
-    endpoint would leak rank mass from the power iteration (the sender
-    divides by a degree counting the foreign edge) and corrupt the
-    closed form's dangling count (linked.count() > n => negative n_d)."""
-    member = nodes.select(F.col(node_col).alias("src"))
-    return (edges.join(member, "src", "left_semi")
-            .join(member.withColumnRenamed("src", "dst"), "dst",
-                  "left_semi"))
+def _rank_graph(nodes: DataFrame,
+                pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The PageRank input graph of an undirected pair list: (src, dst)
+    with one row per undirected edge (a (b,a) duplicate of an (a,b) pair
+    would double the degree and the matrix entries), and the linked-node
+    relation (node_id) of every edge endpoint.
 
-
-def pagerank(nodes: DataFrame, pairs: DataFrame, damping: float = 0.85,
-             iters: int = 40, tol: float | None = 1e-10) -> DataFrame:
-    """Distributed PageRank by power iteration over an undirected pair
-    graph -- the iterative-NUMERIC companion to the components operators
-    (which iterate to a combinatorial fixed point): per round, every node
-    scatters rank/degree along its edges (one node-keyed join), gathers
-    with a sum (one groupBy), and mixes in the teleport + dangling mass.
-
-    Convergence-bounded (VERDICT r5 item 4): `iters` is now a CEILING;
-    the loop exits as soon as max|rank - prev_rank| < `tol` (pass
-    tol=None for the legacy exact-`iters` behavior). The near-dup corpus
-    graph is cliques + isolated nodes -- within a clique every node has
-    equal degree, so the uniform start IS (nearly) the fixed point and
-    the loop exits in a handful of rounds instead of burning a fixed 10.
-
-    Per-round job economy (the r5 audit counted 215 eager build jobs at
-    sf0.01): edges/deg/base are localCheckpointed ONCE before the loop so
-    no round re-executes the upstream pair-generation lineage, and the
-    per-round dangling-mass scalar is FUSED into the same single-action
-    aggregate as the convergence delta (the dangling mass each round
-    needs is over the ranks the round STARTS from -- i.e. the previous
-    round's output, which that round's stats pass already scanned).
-    Net: exactly 2 jobs per round (checkpoint + fused stats) after 4
-    setup jobs. All shuffles are on the node id; never a data collect.
-
-    Returns (node_id, rank) with sum(rank) ~= 1."""
+    Edges touching ids absent from ``nodes`` (e.g. pairs computed before
+    a document filter) are dropped: a foreign endpoint would corrupt the
+    closed form's dangling count (linked.count() > n => negative n_d).
+    `pagerank_components` and `x1_graph_pagerank_rank_equiv` (which
+    shares one components pass between two solver branches) both build
+    their graph here."""
     node_col, (pa, pb) = nodes.columns[0], pairs.columns[:2]
-    edges = _member_edges(
-        pairs.select(F.col(pa).alias("src"), F.col(pb).alias("dst"))
-        .filter(F.col("src") != F.col("dst")), nodes, node_col)
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")
-                                   ).localCheckpoint()
-    n = nodes.count()
-    if n == 0:
-        return (nodes.select(F.col(node_col).alias("node_id"))
-                .withColumn("rank", F.lit(0.0)))
-    # loop-invariant node relation with the dangling (edge-less) flag
-    # baked in, so per-round mass accounting is a column, not a join
-    base = (nodes.select(F.col(node_col).alias("node_id"))
-            .join(deg.select(F.col("src").alias("node_id"),
-                             F.lit(False).alias("dangling")),
-                  "node_id", "left")
-            .withColumn("dangling", F.coalesce("dangling", F.lit(True)))
-            .localCheckpoint())
-    dangling = (base.filter("dangling").count()) / n  # uniform start mass
-    ranks = base.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iters):
-        contribs = (edges.join(ranks, edges.src == ranks.node_id)
-                    .join(deg, "src")
-                    .select(F.col("dst").alias("node_id"),
-                            (F.col("rank") / F.col("deg")).alias("c")))
-        gathered = contribs.groupBy("node_id").agg(F.sum("c").alias("in_rank"))
-        new_ranks = (base.join(gathered, "node_id", "left")
-                     .select("node_id", "dangling",
-                             (F.lit((1.0 - damping) / n)
-                              + F.lit(damping)
-                              * (F.coalesce("in_rank", F.lit(0.0))
-                                 + F.lit(dangling / n))).alias("rank"))
-                     .localCheckpoint())
-        # one action: next round's dangling mass + this round's max delta
-        stats = (new_ranks.join(ranks.select("node_id",
-                                             F.col("rank").alias("prev")),
-                                "node_id")
-                 .agg(F.sum(F.when(F.col("dangling"), F.col("rank"))
-                            .otherwise(F.lit(0.0))).alias("dmass"),
-                      F.max(F.abs(F.col("rank") - F.col("prev")))
-                      .alias("delta")).first())
-        dangling = stats["dmass"] or 0.0
-        ranks = new_ranks
-        if tol is not None and (stats["delta"] or 0.0) < tol:
-            break
-    return ranks.select("node_id", "rank")
+    member = nodes.select(F.col(node_col).alias("src"))
+    edges = (pairs.select(F.least(pa, pb).alias("src"),
+                          F.greatest(pa, pb).alias("dst"))
+             .filter(F.col("src") != F.col("dst"))
+             .dropDuplicates(["src", "dst"])
+             .join(member, "src", "left_semi")
+             .join(member.withColumnRenamed("src", "dst"), "dst",
+                   "left_semi"))
+    linked = (edges.select(F.col("src").alias("node_id"))
+              .unionByName(edges.select(F.col("dst").alias("node_id")))
+              .distinct())
+    return edges, linked
 
 
 def pagerank_components(nodes: DataFrame, pairs: DataFrame,
@@ -1139,11 +1042,11 @@ def pagerank_components(nodes: DataFrame, pairs: DataFrame,
                         local_tol: float = 1e-15,
                         comp: DataFrame | None = None) -> DataFrame:
     """CONVERGED PageRank over an undirected pair graph, exact to machine
-    precision, in O(1) distributed passes after a components pass -- the
-    scale path the iterative `pagerank` above cannot be (VERDICT r5
-    item 4: power iteration's convergence rate IS the damping factor, so
-    delta < 1e-10 costs ~48 full-graph shuffle rounds at any scale; no
-    epsilon exit fixes that).
+    precision, in O(1) distributed passes after a components pass. A
+    distributed power iteration cannot be the scale path (VERDICT r5
+    item 4): its convergence rate IS the damping factor, so delta <
+    1e-10 costs ~48 full-graph shuffle rounds at any scale, and no
+    epsilon exit fixes that.
 
     Two structural facts let the whole fixed point be computed without
     global iteration:
@@ -1163,30 +1066,20 @@ def pagerank_components(nodes: DataFrame, pairs: DataFrame,
        above it.
 
     Distributed cost: the components kernel + ONE groupBy-apply shuffle
-    on component_id -- versus 48 rounds x 3 shuffles for the iterative
-    twin. A pathological giant component is bounded by `dense_limit`
-    into the iterative-local branch and, like any groupBy-apply, by
-    task memory; for dedup graphs (bounded cluster sizes) that is the
-    right trade. Result: (node_id, rank), sum(rank) ~= 1; agreement
-    with a run-to-convergence dense numpy reference is pinned in
-    tests/test_differential.py."""
+    on component_id -- versus 48 rounds x 3 shuffles for a distributed
+    power iteration. A pathological giant component is bounded by
+    `dense_limit` into the iterative-local branch and, like any
+    groupBy-apply, by task memory; for dedup graphs (bounded cluster
+    sizes) that is the right trade. Result: (node_id, rank), sum(rank)
+    ~= 1; agreement with a run-to-convergence dense numpy reference is
+    pinned in tests/test_differential.py."""
     import pandas as pd
 
-    node_col, (pa, pb) = nodes.columns[0], pairs.columns[:2]
-    # canonicalize to one row per undirected edge (a (b,a) duplicate of
-    # an (a,b) pair would double the degree and the matrix entries)
-    edges = (pairs.select(F.least(pa, pb).alias("src"),
-                          F.greatest(pa, pb).alias("dst"))
-             .filter(F.col("src") != F.col("dst"))
-             .dropDuplicates(["src", "dst"]))
-    edges = _member_edges(edges, nodes, node_col)
+    edges, linked = _rank_graph(nodes, pairs)
     n = nodes.count()
-    base = nodes.select(F.col(node_col).alias("node_id"))
+    base = nodes.select(F.col(nodes.columns[0]).alias("node_id"))
     if n == 0:
         return base.withColumn("rank", F.lit(0.0))
-    linked = (edges.select(F.col("src").alias("node_id"))
-              .unionByName(edges.select(F.col("dst").alias("node_id")))
-              .distinct())
     n_d = n - linked.count()
     r_d = (1.0 - damping) / (n - damping * n_d)
     c = (1.0 - damping) / n + damping * (n_d * r_d) / n
@@ -1329,87 +1222,6 @@ def x1_graph_pagerank_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (pr.select(F.col("node_id").alias("doc_id"),
                       F.round("rank", 9).alias("rank"))
             .orderBy("doc_id"))
-
-
-def minhash_mllib_rep_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MLlib-native near-dup path (SURVEY §2.11 X1): CountVectorizer →
-    MinHashLSH.approxSimilarityJoin on token sets, Jaccard distance <= 0.2.
-    Complements the hand-rolled signatures above with the built-in
-    estimator/transformer pipeline (seeded => deterministic within Spark).
-
-    NOT REGISTERED (VERDICT r3 item 4): even after representative
-    collapse this ran 166 s at sf0.1 -- ~50x the custom banded LSH on
-    the same corpus -- because approxSimilarityJoin offers no bucket-size
-    cap on a dense corpus. It stays as the API-parity demo, exercised in
-    pytest at small SF; `x1_dedup_minhash_lsh` is the registered (and
-    scale-path) MinHash+LSH operator.
-
-    Contract (the name says it -- ADVICE r3): output pairs are between
-    token-set REPRESENTATIVES, not documents. Identical token SETS
-    collapse to their min-doc_id representative before the similarity
-    join (VERDICT r2 item 9): MinHash signatures are a pure function of
-    the token set, so Jaccard-1 cliques previously amplified every hit
-    into |clique_a| x |clique_b| output rows (~3M pairs / 485 s at sf0.1
-    on this dense corpus; post-collapse 699k pairs / 166 s). Within-
-    clique (distance-0) pairs are NOT emitted here --
-    `expand_minhash_rep_pairs` reconstructs the full document-level pair
-    set, pinned equal to clique-expansion semantics in pytest."""
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(
-            F.filter(F.split("text", " "), lambda w: w != "")))
-         .alias("tokens"))
-    reps = (toks.groupBy("tokens")
-            .agg(F.min("doc_id").alias("doc_id"),
-                 F.count(F.lit(1)).alias("n_members")))
-    cv = CountVectorizer(inputCol="tokens", outputCol="features",
-                         binary=True).fit(reps)
-    feat = cv.transform(reps)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes",
-                     numHashTables=8, seed=42).fit(feat)
-    pairs = lsh.approxSimilarityJoin(feat, feat, 0.2, distCol="jaccard_dist")
-    return (pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-            .select(F.col("datasetA.doc_id").alias("doc_a"),
-                    F.col("datasetB.doc_id").alias("doc_b"),
-                    "jaccard_dist",
-                    F.col("datasetA.n_members").alias("n_members_a"),
-                    F.col("datasetB.n_members").alias("n_members_b")))
-
-
-def expand_minhash_rep_pairs(spark: SparkSession, sf_dir: str,
-                             rep_pairs: DataFrame) -> DataFrame:
-    """Reconstruct the full DOCUMENT-level near-dup pair set from
-    `minhash_mllib_rep_pairs` output (ADVICE r3): each rep-rep hit fans
-    out to its cliques' member cross product (identical token sets share
-    the representative's Jaccard distance -- MinHash/Jaccard are pure
-    functions of the set), and within-clique pairs re-enter with
-    distance 0. Membership comes from the same deterministic token-set
-    grouping the demo uses, so no state needs to ride the rep output."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(
-            F.filter(F.split("text", " "), lambda w: w != "")))
-         .alias("tokens"))
-    from pyspark.sql import Window
-
-    mem = (toks.withColumn("rep", F.min("doc_id").over(
-               Window.partitionBy("tokens")))
-           .select("doc_id", "rep"))
-    ma = mem.select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("a"))
-    mb = mem.select(F.col("rep").alias("doc_b"), F.col("doc_id").alias("b"))
-    cross = (rep_pairs.join(ma, "doc_a").join(mb, "doc_b")
-             .select(F.least("a", "b").alias("doc_a"),
-                     F.greatest("a", "b").alias("doc_b"), "jaccard_dist"))
-    within = (mem.alias("x").join(mem.alias("y"), "rep")
-              .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-              .select(F.col("x.doc_id").alias("doc_a"),
-                      F.col("y.doc_id").alias("doc_b"),
-                      F.lit(0.0).alias("jaccard_dist")))
-    return cross.unionAll(within).dropDuplicates(["doc_a", "doc_b"])
 
 
 _BATCH_SOURCE = "src0"  # the "incoming batch"; every other source = corpus
@@ -1663,8 +1475,9 @@ def x1_dedup_apply_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization step a curation pipeline actually ships, closing the
     loop from pairwise similarity to a filtered corpus.
 
-    Plan shape: reuses the pair graph and min-label components (all
-    shuffles on doc_id), then ONE broadcast-joined rollup against the
+    Plan shape: reuses the pair graph and the block-local
+    `blocked_components` pass (one shuffle on the block key), then ONE
+    broadcast-joined rollup against the
     doc-attribute dim; a keeper is exactly a doc whose component id is
     its own id, so no extra distinct or anti-join pass is needed. The
     keep-list itself (doc_id, component_id, is_keeper) is the obvious
@@ -1782,16 +1595,13 @@ def x1_graph_pagerank_rank_equiv(spark: SparkSession,
     (error <= delta * d/(1-d) ~= 5.7e-15); the dense solve is exact to
     ~1e-15 -- the 1e-9 bar carries ~5 orders of margin, and agreement
     within 1e-9 implies the two solvers' rank ORDERINGS agree for every
-    pair separated by more than 2e-9. HONEST CORRECTION of the first cut
-    (caught by the r10 fresh-seed corpus drill, NOT by the seed-42 gate
-    corpora): comparing against the DISTRIBUTED `pagerank` kernel at its
-    40-round ceiling left ~9e-7 truncation residue on a fresh-seed
-    corpus whose near-dup components are 24-node chains rather than
-    cliques -- power iteration reduces error only by d^k = 0.85^40 ~=
-    1.5e-3, so that bound can never meet a fixed tolerance on general
-    graphs; the distributed kernel keeps its convergence pytest
-    (tests/test_differential.py) while this face pins the solver pair
-    that genuinely converges.
+    pair separated by more than 2e-9. The first cut compared against a
+    distributed power iteration at a 40-round ceiling, which left ~9e-7
+    truncation residue on an r10 fresh-seed corpus whose near-dup
+    components are 24-node chains rather than cliques: power iteration
+    reduces error only by d^k = 0.85^40 ~= 1.5e-3, so that bound can
+    never meet a fixed tolerance on general graphs. This face pins the
+    solver pair that genuinely converges.
 
     Vacuity canaries (ADVICE r10): (a) an empty linked-node relation on a
     non-empty corpus makes the diff trivially empty, so it emits a marker
@@ -1811,16 +1621,9 @@ def x1_graph_pagerank_rank_equiv(spark: SparkSession,
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # ONE components pass feeds both solver branches (the contraction is
     # the dominant cost; its internal localCheckpoints mean the shared
-    # relation's tail re-executes cheaply in each branch). The edge
-    # canonicalization mirrors pagerank_components' own exactly.
-    edges = (pairs.select(F.least("doc_a", "doc_b").alias("src"),
-                          F.greatest("doc_a", "doc_b").alias("dst"))
-             .filter(F.col("src") != F.col("dst"))
-             .dropDuplicates(["src", "dst"]))
-    edges = _member_edges(edges, docs, "doc_id")
-    linked = (edges.select(F.col("src").alias("node_id"))
-              .unionByName(edges.select(F.col("dst").alias("node_id")))
-              .distinct())
+    # relation's tail re-executes cheaply in each branch), over the same
+    # graph build pagerank_components uses.
+    edges, linked = _rank_graph(docs, pairs)
     comp = star_contraction_components(linked, edges)
     dense = pagerank_components(docs, pairs, comp=comp).select(
         F.col("node_id").alias("doc_id"),

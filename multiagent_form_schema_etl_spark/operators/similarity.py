@@ -1392,15 +1392,16 @@ def x1_dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC dedup clustering: connected components over the embedding-
     cosine near-dup graph (>= 0.45 after exact 9-dp rounding), giving each
     semantic duplicate group one canonical id -- the embedding-space twin of
-    the token-space x1_dedup_components, sharing the same min-label
-    propagation kernel. At 100 TB the pair stage swaps for the LSH/IVF
-    candidate paths exactly as in the near-dup query; the component kernel
-    is unchanged."""
-    from .dedup import min_label_components
+    the token-space x1_dedup_components, sharing the same
+    `star_contraction_components` kernel (cosine pairs cross the Jaccard
+    (lang, length) blocks, so `blocked_components` does not apply). At
+    100 TB the pair stage swaps for the LSH/IVF candidate paths exactly
+    as in the near-dup query; the component kernel is unchanged."""
+    from .dedup import star_contraction_components
 
     pairs = x1_dedup_embedding_cosine(spark, sf_dir).select("vec_a", "vec_b")
     vecs = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    comp = min_label_components(vecs, pairs)
+    comp = star_contraction_components(vecs, pairs)
     return (comp.groupBy("component_id")
             .agg(F.count(F.lit(1)).alias("n_vecs")))
 

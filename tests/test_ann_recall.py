@@ -163,45 +163,6 @@ def test_embedding_ivf_dedup_recall_sf01(spark):
     assert len(ivf) / len(exact) >= 0.9
 
 
-def test_minhash_mllib_demo_sound_and_expansion(spark, true_jaccard_pairs):
-    """The de-registered MLlib MinHash demo (VERDICT r3 item 4): runs at
-    SF_SMOKE only, where its approxSimilarityJoin cost is bounded. Pins
-    (a) soundness of the representative pairs (every expanded pair is a
-    true >= 0.8-similarity pair with the exact Jaccard distance), and
-    (b) the ADVICE r3 contract: expand_minhash_rep_pairs reconstructs
-    the FULL document-level pair set -- rep cross products plus the
-    within-clique distance-0 pairs the collapse dropped."""
-    from multiagent_form_schema_etl_spark.operators.dedup import (
-        expand_minhash_rep_pairs, minhash_mllib_rep_pairs)
-
-    reps = minhash_mllib_rep_pairs(spark, SF_SMOKE)
-    full = {(r.doc_a, r.doc_b): r.jaccard_dist
-            for r in expand_minhash_rep_pairs(spark, SF_SMOKE, reps).collect()}
-    assert full, "demo returned no pairs"
-    # soundness: sim = 1 - dist must match the exact fixture value; the
-    # fixture only lists >= 0.8-sim pairs and the join threshold is 0.2
-    for pair, dist in full.items():
-        assert pair in true_jaccard_pairs, f"unsound pair {pair}"
-        assert abs((1.0 - dist) - true_jaccard_pairs[pair]) < 1e-9
-    # expansion completeness: every within-clique (identical token set)
-    # pair must be present with distance 0
-    import pandas as pd
-
-    docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
-    by_set = {}
-    for r in docs.itertuples():
-        by_set.setdefault(frozenset(t for t in r.text.split(" ") if t),
-                          []).append(r.doc_id)
-    clique_pairs = {(a, b)
-                    for mem in by_set.values() if len(mem) > 1
-                    for i, a in enumerate(sorted(mem))
-                    for b in sorted(mem)[i + 1:]}
-    missing = clique_pairs - set(full)
-    assert not missing, f"expansion dropped clique pairs: {sorted(missing)[:5]}"
-    for p in clique_pairs:
-        assert full[p] == 0.0
-
-
 def _corpus_matrix():
     import numpy as np
 

@@ -82,18 +82,13 @@ def test_corpus_filter_funnel_is_monotone(spark):
 
 
 def test_star_contraction_equals_label_propagation(spark):
-    """Both connected-components strategies must produce identical
-    clusterings -- on the real Jaccard pair graph AND on a 60-node chain,
-    the adversarial case for label propagation (diameter = rounds) where
-    star contraction converges in O(log n) rounds."""
+    """Star contraction must reach the label-propagation fixed point
+    (every node labelled with its component's minimum id) on a 60-node
+    chain, the adversarial case for label propagation (diameter = rounds)
+    where star contraction converges in O(log n) rounds. The real Jaccard
+    pair graph is compared against `blocked_components` in
+    test_blocked_components_match_star_contraction_and_fallback."""
     from multiagent_form_schema_etl_spark.operators import dedup as D
-
-    qs = _queries()
-    lp = {(r.component_id, r.n_docs)
-          for r in qs["x1_dedup_components"](spark, SF_SMOKE).collect()}
-    star = {(r.component_id, r.n_docs)
-            for r in qs["x1_dedup_components_star"](spark, SF_SMOKE).collect()}
-    assert lp == star and len(lp) > 0
 
     # chain 0-1-2-...-59 plus isolated nodes 100..104
     nodes = spark.range(0, 60).withColumnRenamed("id", "node").unionByName(
@@ -240,11 +235,13 @@ def test_bpe_oracle_survives_pair_exhaustion(spark, tmp_path):
     assert {(r[0], r[1], r[2]) for r in oracle} == got
 
 
-def test_blocked_components_match_min_label_and_fallback(spark, monkeypatch):
+def test_blocked_components_match_star_contraction_and_fallback(
+        spark, monkeypatch):
     """The block-local union-find kernel (r10: valid behind the pair
     generator's (lang, length-bucket) blocking invariant) must equal the
-    distributed min-label kernel node-for-node, and must fall back to it
-    when a block exceeds the per-task pair bound."""
+    general star-contraction kernel node-for-node, and must fall back to
+    it when a block exceeds the per-task pair bound, when an edge crosses
+    blocks, and on a path deeper than any fixed propagation round cap."""
     from multiagent_form_schema_etl_spark.catalog import load_table
     from multiagent_form_schema_etl_spark.operators import dedup as D
 
@@ -252,7 +249,7 @@ def test_blocked_components_match_min_label_and_fallback(spark, monkeypatch):
     pairs = D.x1_dedup_jaccard_ngram(spark, sf).select("doc_a", "doc_b")
     docs = load_table(spark, sf, "documents").select("doc_id")
     want = {(r["node_id"], r["component_id"])
-            for r in D.min_label_components(docs, pairs).collect()}
+            for r in D.star_contraction_components(docs, pairs).collect()}
     got = {(r["node_id"], r["component_id"])
            for r in D.blocked_components(spark, sf, pairs).collect()}
     assert got == want and len(got) > 0
@@ -279,13 +276,28 @@ def test_blocked_components_match_min_label_and_fallback(spark, monkeypatch):
     cross = pairs.unionByName(spark.createDataFrame(
         [(a["doc_id"], b["doc_id"])], "doc_a long, doc_b long"))
     want_x = {(r["node_id"], r["component_id"])
-              for r in D.min_label_components(docs, cross).collect()}
+              for r in D.star_contraction_components(docs, cross).collect()}
     got_x = {(r["node_id"], r["component_id"])
              for r in D.blocked_components(spark, sf, cross).collect()}
     assert got_x == want_x
     # and the cross-block doc pair really is in one component now
     comp = dict(got_x)
     assert comp[a["doc_id"]] == comp[b["doc_id"]]
+
+    # a 24-node path over the lowest doc_ids, minimum at one end: its
+    # edges cross blocks, so this is the fallback, and the far end is 23
+    # hops from the label it must carry
+    path = [r["doc_id"] for r in rows[:24]]
+    assert any((x["lang"], x["bucket"]) != (y["lang"], y["bucket"])
+               for x, y in zip(rows[:23], rows[1:24]))
+    chain = spark.createDataFrame(list(zip(path, path[1:])),
+                                  "doc_a long, doc_b long")
+    comp = {r["node_id"]: r["component_id"]
+            for r in D.blocked_components(spark, sf, chain).collect()}
+    assert len(comp) == len(rows)
+    assert {n: comp[n] for n in path} == {n: path[0] for n in path}
+    on_path = set(path)
+    assert all(c == n for n, c in comp.items() if n not in on_path)
 
 
 def test_bm25_matches_python_reference(spark):

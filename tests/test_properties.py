@@ -7,6 +7,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd  # module-level: pandas_udf resolves stringified hints here
+import pytest
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -212,10 +213,36 @@ def test_star_contraction_matches_union_find_on_random_graphs(spark):
         want = {(i, find(i)) for i in range(n)}
 
         nodes = spark.range(0, n).withColumnRenamed("id", "node")
-        pairs = spark.createDataFrame(edges or [(0, 0)], "a long, b long")
+        pairs = spark.createDataFrame(edges, "a long, b long")
         got = {(r.node_id, r.component_id)
                for r in star_contraction_components(nodes, pairs).collect()}
         assert got == want, f"seed {seed}"
+
+
+@pytest.mark.parametrize("kernel, n_nodes, edges, want", [
+    ("star", 5, [], {(i, i) for i in range(5)}),
+    ("star", 0, [(1, 2)], set()),
+    ("star", 5, [(1, None), (None, 2), (3, 4)],
+     {(0, 0), (1, 1), (2, 2), (3, 3), (4, 3)}),
+    # sf0.001 documents: doc_id 0..499
+    ("blocked", None, [], {(i, i) for i in range(500)}),
+], ids=["no_pairs", "no_nodes", "null_endpoint", "blocked_no_pairs"])
+def test_components_kernels_on_empty_and_null_inputs(spark, kernel, n_nodes,
+                                                     edges, want):
+    """Edge inputs of the connected-components kernels: no pairs leaves
+    every node its own component, no nodes gives no rows, a pair with a
+    NULL endpoint is dropped (not joined to anything), and the block-local
+    kernel over an empty pair relation labels every document itself."""
+    from multiagent_form_schema_etl_spark.operators.dedup import (
+        blocked_components, star_contraction_components)
+    from tests.conftest import SF_SMOKE
+
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    if kernel == "blocked":
+        comp = blocked_components(spark, SF_SMOKE, pairs)
+    else:
+        comp = star_contraction_components(spark.range(0, n_nodes), pairs)
+    assert {(r.node_id, r.component_id) for r in comp.collect()} == want
 
 
 def test_sweep_line_concurrency_matches_brute_force(spark, tmp_path):
