@@ -141,7 +141,7 @@ def time_face(spark, name: str, build) -> dict:
 
 def run_pass() -> dict:
     import __spark_entry__ as e
-    from multiagent_form_schema_etl_spark.session import get_spark
+    from multiagent_form_schema_etl_spark.session import get_spark, jvm_start
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -210,6 +210,9 @@ def run_pass() -> dict:
         # "overhead-dominated"; master + defaultParallelism settle it.
         "master": spark.sparkContext.master,
         "parallelism": spark.sparkContext.defaultParallelism,
+        # how the pass's JVM started: a pass without the class-data
+        # archive pays ~3 s more set-up and shows it here
+        "jvm_start": jvm_start(),
     }
 
 
@@ -312,6 +315,7 @@ def build_records(runs: list[dict]) -> tuple[dict, str]:
                   "loadavg_after": r.get("loadavg_after", []),
                   "steal_pct": r.get("steal_pct"),
                   "codegen": r.get("codegen"),
+                  "jvm_start": r.get("jvm_start"),
                   "layers": r.get("layers")}
                  for r in runs],
         "sf": runs[0]["sf"],

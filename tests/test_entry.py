@@ -162,18 +162,24 @@ def test_invalidating_one_session_keeps_another_sessions_cache(spark,
     # persists its candidate pool (cands) and the pool's vectors (cv)
     name = "x2_topk_mmr"
     qs = __import__("__spark_entry__").queries()
-    sc = spark.sparkContext._jsc.sc()
+    jsc = spark.sparkContext._jsc
     first, second = spark.newSession(), spark.newSession()
     try:
-        base = sc.getPersistentRDDs().size()
+        # compared as RDD id sets: Spark's ContextCleaner may unpersist
+        # earlier tests' unreachable RDDs at any GC, so a bare count can
+        # shrink while this test runs
+        def ids():
+            return set(jsc.getPersistentRDDs().keySet())
+
+        base = ids()
         df1 = qs[name](first, str(sf))
         df1.collect()
-        during = sc.getPersistentRDDs().size()
+        own = ids() - base
         qs[name](second, str(sf)).collect()
         registry.invalidate(second)
-        after = sc.getPersistentRDDs().size()
-        assert during > base, (base, during, after)
-        assert after == during, (base, during, after)
+        after = ids()
+        assert own, (len(base), sorted(own))
+        assert after - base == own, (sorted(own), sorted(after - base))
         # a fresh QueryExecution re-runs the cache lookup
         plan = df1.select("*")._jdf.queryExecution().executedPlan()
         assert "InMemoryTableScan" in plan.toString()

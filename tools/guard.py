@@ -64,8 +64,10 @@ BAD_STRING_RE = re.compile(
     re.IGNORECASE)
 # RFC-2606-style fixture domains are fine wherever they appear
 EXAMPLE_RE = re.compile(r"example[-.]|[-.]example", re.IGNORECASE)
-# Env reads are fine only for the documented knobs.
-ALLOWED_ENV = re.compile(r"^(SPARK_|JAVA_|PYSPARK_|PYTHON|PATH$|HOME$|TMP)")
+# Env reads are fine only for the documented knobs and the standard
+# per-user cache location (XDG Base Directory spec).
+ALLOWED_ENV = re.compile(
+    r"^(SPARK_|JAVA_|PYSPARK_|PYTHON|PATH$|HOME$|TMP|XDG_CACHE_HOME$)")
 
 
 # The guard itself and its pytest carry the blocklist / synthetic

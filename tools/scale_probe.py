@@ -248,7 +248,7 @@ def main() -> None:
     mode = "density" if args.density else "linear"
 
     import __spark_entry__ as e
-    from multiagent_form_schema_etl_spark.session import get_spark
+    from multiagent_form_schema_etl_spark.session import get_spark, jvm_start
 
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -260,6 +260,7 @@ def main() -> None:
                  else build_ann_dir(spark, mult, args.density))
             print(f"ann probe {mode} x{mult} -> {d}", file=sys.stderr)
             print(json.dumps({"mode": f"ann_{mode}", "mult": mult,
+                              "jvm_start": jvm_start(),
                               **run_ann_probe(spark, qs, d)}))
             continue
         d = build_dir(spark, mult, args.density)
@@ -270,7 +271,8 @@ def main() -> None:
             faces["doc_pipeline_scoped_100k" if mult >= 10 else
                   "doc_pipeline_scoped"] = scoped_pipeline_copies(
                 spark, 2500 * min(mult, 10))
-        print(json.dumps({"mode": mode, "mult": mult, "queries": faces,
+        print(json.dumps({"mode": mode, "mult": mult,
+                          "jvm_start": jvm_start(), "queries": faces,
                           "total": round(sum(r["s"] for r in faces.values()),
                                          2)}))
 

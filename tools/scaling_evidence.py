@@ -37,7 +37,7 @@ import json, sys
 sys.path.insert(0, {root!r})
 import __spark_entry__ as e
 from bench import time_face
-from multiagent_form_schema_etl_spark.session import get_spark
+from multiagent_form_schema_etl_spark.session import get_spark, jvm_start
 from multiagent_form_schema_etl_spark.operators.dedup import (
     _jaccard_ngram_from, _tok_d_df)
 spark = get_spark("scaling_evidence")
@@ -48,7 +48,8 @@ qs = dict(qs, x1_dedup_jaccard_ngram=lambda s, d: _jaccard_ngram_from(
 d = {sf_dir!r}
 from multiagent_form_schema_etl_spark.catalog import load_table
 load_table(spark, d, "documents").limit(1).collect()
-out = {{"cpus": spark.sparkContext.defaultParallelism}}
+out = {{"cpus": spark.sparkContext.defaultParallelism,
+       "jvm_start": jvm_start()}}
 for name in {faces!r}:
     # first execution pays Catalyst planning + codegen (a per-query
     # constant that hides the data-parallel part); the recorded WARM pass
