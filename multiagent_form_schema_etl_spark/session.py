@@ -21,24 +21,36 @@ Design notes for 100 TB posture:
 - Driver JVM started from a class-data-sharing archive: about 6.5 s of a
   cold session start is spent loading Spark's ~18k classes from jars. A
   JDK dynamic AppCDS archive maps those classes pre-parsed from one file
-  instead, so a session comes up ~3 s sooner. The lifecycle:
+  instead, so a session comes up ~2 s sooner. The lifecycle:
 
   * Archives live in ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/cds/``,
     outside the checkout, named by a key hashed from the ``java`` binary
     that spark-class runs and the ``$SPARK_HOME/jars`` listing (name,
     size, mtime). A new JDK or Spark gives a new key.
-  * A run that finds no archive for its key records one: the JVM gets
-    ``-XX:ArchiveClassesAtExit=<key>.<pid>.tmp``, and at interpreter exit
-    ``get_spark`` stops the session and waits for the JVM to write the
-    dump (~14 s, 180-250 MB). The temp file is renamed to ``<key>.jsa`` only
-    if the JVM exited 0 and the file starts with the dynamic-archive
-    magic. HotSpot writes that header last, after every region, so a
-    dump killed mid-write has a zero header and is never offered: a JVM
-    that maps a truncated archive dies with SIGBUS.
+  * A run that finds no archive for its key records one: the JVM starts
+    with ``-XX:+RecordDynamicDumpInfo``, and when the session stops
+    (``spark.stop()``, or interpreter exit if nothing stops it)
+    ``jcmd <jvm pid> VM.cds dynamic_dump`` has the still-running JVM
+    write the classes it loaded to ``<key>.<jvm pid>.tmp`` (~9 s,
+    100-250 MB). The temp file is renamed to ``<key>.jsa`` only if jcmd
+    exited 0 and the file starts with the dynamic-archive magic: a JVM
+    that maps a truncated archive dies with SIGBUS. HotSpot writes the
+    header after every region, and on a failed write it deletes the file
+    and exits the JVM -- one more reason to dump only when the session is
+    done. The dump is asked for, not done at JVM exit: a Python process
+    killed before its exit handlers run (a SIGTERM, ``os._exit``) leaves
+    a JVM that exits at once on EOF of its stdin and writes nothing, as
+    it would without archives. A JDK without ``jcmd`` never records.
+  * Recording is not free: the recording JVM sets up ~2 s slower, its
+    first batch runs ~2 s slower, and the dump adds ~9 s. A later run
+    that finds the archive saves ~4 s, so about three of them repay one
+    recording: the archive pays only on a host whose cache dir outlives a
+    few runs of one JDK and Spark install. A host that starts every run
+    with an empty cache pays the recording each time.
   * A run that finds the archive starts with ``-XX:SharedArchiveFile``.
-  * A recording run first cleans the cache dir: a temp whose writer is
-    dead is published if it holds a finished dump of this key and
-    deleted otherwise, and archives of other keys are deleted.
+  * A recording run first cleans the cache dir: a temp whose JVM is dead
+    is published if it holds a finished dump of this key and deleted
+    otherwise, and archives of other keys are deleted.
   * CDS refuses to dump with a non-empty directory on the classpath, and
     Spark puts its conf dir first on it. So ``SPARK_CONF_DIR`` is pointed
     at an empty directory under the cache dir for the JVM launch -- only
@@ -53,7 +65,7 @@ Design notes for 100 TB posture:
   Like the codegen cache, this is static JVM start-up state. A session
   that is handed in (``tune_for_session``, ``__spark_entry__.entry``) or
   a JVM that is already running keeps its settings: its classes are
-  loaded, and a dump at its exit would stall a process that is not ours.
+  loaded, and a dump would stall a process that is not ours.
   ``jvm_start()`` reports how this process's JVM started, so every run
   record shows whether it had the archive.
 """
@@ -82,12 +94,13 @@ CODEGEN_CACHE_ENTRIES = 2000
 # First bytes of a finished HotSpot dynamic archive (0xf00baba8, LE).
 CDS_MAGIC = bytes.fromhex("a8ab0bf0")
 CDS_QUIET = ("-Xlog:cds=off", "-Xlog:cds+dynamic=off")
+# Keeps what a dynamic dump needs; the dump itself is asked for by jcmd.
+CDS_RECORD = "-XX:+RecordDynamicDumpInfo"
 # Variables the launcher appends to the JVM classpath: each may name a
 # non-empty directory, which CDS refuses to dump.
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                   "SPARK_PREPEND_CLASSES")
-# Upper bound on the wait for a recording JVM's dump at exit (~14 s on 4
-# vCPUs); a JVM still running then is killed and its temp file deleted.
+# Upper bound on the wait for jcmd's dump (~9 s on 4 vCPUs).
 DUMP_WAIT_S = 300
 
 # How this process's driver JVM started; PySpark runs one JVM per process.
@@ -98,8 +111,15 @@ class JvmStart(NamedTuple):
     """How the next driver JVM launch starts."""
     java_options: tuple[str, ...]  # appended to spark.driver.extraJavaOptions
     env: dict[str, str]            # set for the launch only
-    state: str                     # "archive <path>", "recording", "off: ..."
-    record: tuple[str, str] | None  # (temp dump, archive) when recording
+    archive: str | None = None     # the archive the JVM maps or records
+    record: str | None = None      # jcmd that dumps ``archive`` at stop
+    off: str | None = None         # why the JVM starts without archives
+
+    @property
+    def state(self) -> str:
+        if self.off is not None:
+            return f"off: {self.off}"
+        return "recording" if self.record else f"archive {self.archive}"
 
 
 def jvm_start() -> str:
@@ -113,7 +133,7 @@ def driver_java_options(extra=()) -> str:
 
 
 def _off(reason: str) -> JvmStart:
-    return JvmStart((), {}, f"off: {reason}", None)
+    return JvmStart((), {}, off=reason)
 
 
 def cds_cache_dir() -> str:
@@ -175,8 +195,8 @@ def _alive(pid: int) -> bool:
 
 
 def _sweep(cache: str, key: str) -> None:
-    """Publish a dead writer's finished dump of ``key``; delete every other
-    temp whose writer is dead, and the archives of other keys."""
+    """Publish a dead JVM's finished dump of ``key``; delete every other
+    temp whose JVM is dead, and the archives of other keys."""
     for name in os.listdir(cache):
         path = os.path.join(cache, name)
         stem, _, ext = name.rpartition(".")
@@ -191,7 +211,7 @@ def _sweep(cache: str, key: str) -> None:
                     os.remove(path)
 
 
-def plan_jvm_start(pid: int | None = None) -> JvmStart:
+def plan_jvm_start() -> JvmStart:
     """Decide how a driver JVM about to launch starts: from the archive of
     its key, recording that archive, or exactly as without archives."""
     if "SPARK_CONF_DIR" in os.environ:
@@ -229,15 +249,16 @@ def plan_jvm_start(pid: int | None = None) -> JvmStart:
     env = {"SPARK_CONF_DIR": empty_conf}
     if has_cds_magic(archive):
         return JvmStart((f"-XX:SharedArchiveFile={archive}", *CDS_QUIET),
-                        env, f"archive {archive}", None)
-    tmp = os.path.join(cache, f"{key}.{pid or os.getpid()}.tmp")
-    return JvmStart((f"-XX:ArchiveClassesAtExit={tmp}", *CDS_QUIET),
-                    env, "recording", (tmp, archive))
+                        env, archive)
+    jcmd = os.path.join(os.path.dirname(os.path.realpath(java)), "jcmd")
+    if not os.access(jcmd, os.X_OK):
+        return _off(f"no archive and no {jcmd} to record one")
+    return JvmStart((CDS_RECORD, *CDS_QUIET), env, archive, jcmd)
 
 
 def publish(tmp: str, archive: str, returncode: int | None) -> bool:
-    """Rename a recording JVM's dump to its archive name if the JVM exited
-    0 and the dump is complete; delete it otherwise."""
+    """Rename a dump to its archive name if the dumping command exited 0
+    and the dump is complete; delete it otherwise."""
     if returncode == 0 and has_cds_magic(tmp):
         os.replace(tmp, archive)
         return True
@@ -246,27 +267,50 @@ def publish(tmp: str, archive: str, returncode: int | None) -> bool:
     return False
 
 
-def _finish_recording(tmp: str, archive: str) -> None:
-    """At interpreter exit: stop the session, wait for the JVM to write its
-    dump and exit, then publish the dump."""
-    gateway = SparkContext._gateway
-    proc = getattr(gateway, "proc", None)
-    if proc is None:
-        publish(tmp, archive, None)
-        return
-    with contextlib.suppress(Exception):
-        if SparkContext._active_spark_context is not None:
-            SparkContext._active_spark_context.stop()
-    with contextlib.suppress(Exception):
-        gateway.shutdown()
-    with contextlib.suppress(Exception):
-        proc.stdin.close()  # the gateway JVM exits on EOF of its stdin
+def record_archive(jcmd: str, pid: int, archive: str) -> bool:
+    """Have JVM ``pid`` dump the classes it loaded to a temp named after
+    it, and publish the dump as ``archive``."""
+    key = os.path.basename(archive)[:-len(".jsa")]
+    tmp = os.path.join(os.path.dirname(archive), f"{key}.{pid}.tmp")
     try:
-        rc = proc.wait(timeout=DUMP_WAIT_S)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        rc = proc.wait()
-    publish(tmp, archive, rc)
+        rc = subprocess.run(
+            [jcmd, str(pid), "VM.cds", "dynamic_dump", tmp],
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, timeout=DUMP_WAIT_S).returncode
+    except (OSError, subprocess.TimeoutExpired):
+        rc = None
+    return publish(tmp, archive, rc)
+
+
+def _record_before_stop(sc: SparkContext, jcmd: str, archive: str) -> None:
+    """Record ``archive`` once, while the JVM still runs: when ``sc``
+    stops (a caller that stops the session and then ends the JVM), or at
+    interpreter exit if it never does."""
+    stop = sc.stop
+    done = []
+
+    def record() -> None:
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if done or proc is None or proc.poll() is not None:
+            return
+        done.append(True)
+        # the JVM reports the dump on System.out, which is the CLI's stdout
+        system = SparkContext._jvm.java.lang.System
+        out = system.out
+        system.setOut(system.err)
+        try:
+            record_archive(jcmd, proc.pid, archive)
+        finally:
+            system.setOut(out)
+
+    def record_then_stop() -> None:
+        try:
+            record()
+        finally:
+            stop()
+
+    sc.stop = record_then_stop
+    atexit.register(record)
 
 
 def _maps_file(pid: int, path: str) -> bool | None:
@@ -347,11 +391,10 @@ def get_spark(app_name: str = "multiagent-form-schema-etl-spark",
     if launch:
         _jvm_start = plan.state
         if plan.record:
-            atexit.register(_finish_recording, *plan.record)
-        elif plan.state.startswith("archive "):
-            path = plan.state[len("archive "):]
-            if _maps_file(SparkContext._gateway.proc.pid, path) is False:
-                _jvm_start = f"off: archive {path} not mapped by the JVM"
+            _record_before_stop(spark.sparkContext, plan.record, plan.archive)
+        elif (plan.archive and _maps_file(SparkContext._gateway.proc.pid,
+                                          plan.archive) is False):
+            _jvm_start = f"off: archive {plan.archive} not mapped by the JVM"
     return spark
 
 

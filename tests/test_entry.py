@@ -4,8 +4,31 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 import __spark_entry__ as e
 from tests.conftest import SF_SMOKE
+
+
+def _persisted_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture
+def kept_rdds(spark):
+    """RDD ids of a DataFrame persisted and referenced for the whole test.
+    Persisted RDDs are compared as id sets, not counts: Spark's
+    ContextCleaner may unpersist earlier tests' unreachable RDDs at any
+    GC, so a count can shrink while a test runs. These ids cannot go that
+    way, so a release that drops them is a release of another owner's
+    cache."""
+    before = _persisted_ids(spark)
+    df = spark.range(7919).selectExpr("id * 3 AS kept_rdd_probe").persist()
+    df.count()
+    ids = _persisted_ids(spark) - before
+    assert ids
+    yield ids
+    df.unpersist()
 
 
 def test_entry_returns_rows(spark):
@@ -107,7 +130,8 @@ def test_registry_memo_invalidates_on_data_change(spark, tmp_path):
     assert n1 >= 0
 
 
-def test_registry_eviction_releases_tracked_subrelation_caches(spark, tmp_path):
+def test_registry_eviction_releases_tracked_subrelation_caches(spark, tmp_path,
+                                                              kept_rdds):
     """Builders that persist a shared sub-relation route it through
     track_persist, so snapshot eviction / invalidate() must release the
     sub-relation cache too -- not just the top-level DataFrame (ADVICE
@@ -123,27 +147,29 @@ def test_registry_eviction_releases_tracked_subrelation_caches(spark, tmp_path):
         if f.endswith(".parquet"):
             shutil.copy(os.path.join(SF_SMOKE, f), sf / f)
 
-    # a fresh session isolates the persistent-RDD count from other tests
     s2 = spark.newSession()
     # track_persists its pair relation over the copied corpus, so the
     # cache entry is this test's own: a fixture-only face can match a
     # relation an earlier test left cached and then persist nothing new
     name = "x1_dedup_jaccard_ngram"
     qs = __import__("__spark_entry__").queries()
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    base = _persisted_ids(spark)
     df = qs[name](s2, str(sf))
     df.count()
-    during = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    own = _persisted_ids(spark) - base
     registry.invalidate(s2)
-    after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    after = _persisted_ids(spark)
     # the build must have persisted something, or the release check below
-    # holds vacuously; invalidate must release every cache it registered
-    assert during > base, (base, during, after)
-    assert after <= base, (base, during, after)
+    # holds vacuously; invalidate must release every cache it registered,
+    # and only those
+    assert own, sorted(base)
+    assert not own & after, (sorted(own), sorted(after))
+    assert kept_rdds <= after, (sorted(kept_rdds), sorted(after))
 
 
 def test_invalidating_one_session_keeps_another_sessions_cache(spark,
-                                                              tmp_path):
+                                                              tmp_path,
+                                                              kept_rdds):
     """Spark's CacheManager is shared across sessions and matches equal
     plans. When a second session builds a face whose sub-relations the
     first session already cached, invalidating the second session must
@@ -162,24 +188,18 @@ def test_invalidating_one_session_keeps_another_sessions_cache(spark,
     # persists its candidate pool (cands) and the pool's vectors (cv)
     name = "x2_topk_mmr"
     qs = __import__("__spark_entry__").queries()
-    jsc = spark.sparkContext._jsc
     first, second = spark.newSession(), spark.newSession()
     try:
-        # compared as RDD id sets: Spark's ContextCleaner may unpersist
-        # earlier tests' unreachable RDDs at any GC, so a bare count can
-        # shrink while this test runs
-        def ids():
-            return set(jsc.getPersistentRDDs().keySet())
-
-        base = ids()
+        base = _persisted_ids(spark)
         df1 = qs[name](first, str(sf))
         df1.collect()
-        own = ids() - base
+        own = _persisted_ids(spark) - base
         qs[name](second, str(sf)).collect()
         registry.invalidate(second)
-        after = ids()
-        assert own, (len(base), sorted(own))
+        after = _persisted_ids(spark)
+        assert own, sorted(base)
         assert after - base == own, (sorted(own), sorted(after - base))
+        assert kept_rdds <= after, (sorted(kept_rdds), sorted(after))
         # a fresh QueryExecution re-runs the cache lookup
         plan = df1.select("*")._jdf.queryExecution().executedPlan()
         assert "InMemoryTableScan" in plan.toString()
